@@ -156,6 +156,12 @@ def row_gates(df, cfg: DataJobConfig):
     return out
 
 
+def _hadoop_path(spark, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the session's Hadoop FS."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
 def run(
     spark: SparkSession,
     input_path: str,
@@ -197,6 +203,16 @@ def run(
             spark.read.parquet(gates_path).schema
         except Exception:
             gate_entry = None
+            # the crashed migration's copies are stale once the gates are
+            # recomputed; nothing else ever deletes them (best-effort)
+            from py4j.protocol import Py4JJavaError
+
+            for leftover in ("keep_ids_old", "keep_ids_migrated"):
+                fs, path = _hadoop_path(spark, f"{output}/_gates/{leftover}")
+                try:
+                    fs.delete(path, True)
+                except Py4JJavaError:
+                    pass
     if gate_entry is None:
         keep = compute_gate_ids(docs, eval_df, cfg)
         # partition the checkpointed keep ids BY DOC BUCKET (VERDICT r4
@@ -226,12 +242,9 @@ def run(
         # swap directories via the Hadoop FS (cannot overwrite a path
         # while a plan is reading it; a rename is also cheaper than a
         # second rewrite)
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        src = jvm.org.apache.hadoop.fs.Path(migrated)
-        dst = jvm.org.apache.hadoop.fs.Path(gates_path)
-        aside = jvm.org.apache.hadoop.fs.Path(f"{output}/_gates/keep_ids_old")
-        fs = dst.getFileSystem(hconf)
+        fs, dst = _hadoop_path(spark, gates_path)
+        _, src = _hadoop_path(spark, migrated)
+        _, aside = _hadoop_path(spark, f"{output}/_gates/keep_ids_old")
         # crash-safe swap (ADVICE r5): rename the old dir aside, rename the
         # migrated dir into place (both return-checked), then delete the old
         # dir.  A crash between the renames leaves gates_path missing, which

@@ -1,11 +1,18 @@
 """Vectorized per-line multi-pattern classification (SURVEY.md O5).
 
 The reference tries each regex of the current FSM state per line
-(exception_detector.rb:236-245).  Here classification is *context-free*: for
-an Arrow batch of lines we evaluate the ≤40 distinct compiled patterns with
-pandas ``Series.str.contains`` (unanchored search ≡ Ruby ``=~``), pack the
-results into per-line match bitmasks, and intern the distinct masks.  Each
-distinct mask then yields one column of the dense transition tables
+(exception_detector.rb:236-245).  Here classification is *context-free* and
+runs once per DISTINCT line: callers hand over the Arrow dictionary of a
+dictionary-encoded text column, and each pattern of the rule set (53 under
+``languages=all``; at most 64) is one Arrow C++ RE2
+``match_substring_regex`` pass over that dictionary (unanchored search ≡
+Ruby ``=~``).  ``rules.to_re2`` makes RE2 agree with Python ``re`` on ASCII
+lines; the few non-ASCII dictionary entries, where the engines' Unicode
+classes differ, are matched with the compiled ``re`` patterns instead.
+
+Each line's matches pack into one ``uint64`` bitmask (bit ``j`` = pattern
+``j``), and the distinct masks are interned with an integer ``np.unique``.
+Each distinct mask then yields one row of the dense transition tables
 
 * ``G[k, s]`` — state after a line of mask-class ``k`` arrives in state ``s``
   (including the reset-and-retry fallback of exception_detector.rb:206-212);
@@ -14,81 +21,82 @@ distinct mask then yields one column of the dense transition tables
   the FSM to start_state and empties the buffer *regardless of any prior
   history* (used as a synchronization point for salted chunk scans).
 
-Tables are cached per (rules, mask) at executor scope — real log data has few
-distinct masks, so per-batch table construction is amortized away.
+The tables for all distinct masks are built together, one numpy pass per
+rule, so no per-mask cache is needed.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from ..rules import N_STATES, START, CompiledRules
+from ..rules import N_STATES, START, CompiledRules, to_re2
 
 NIL_CLS = -1  # mask class of null/absent messages
 
-_TABLE_CACHE: dict = {}
+
+def encode(arr: pa.Array) -> tuple[np.ndarray, pa.Array]:
+    """Dictionary-encode a string array: ``(codes, dictionary)`` with int64
+    codes, -1 for nulls."""
+    enc = pc.dictionary_encode(arr)
+    return enc.indices.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64), enc.dictionary
 
 
-def match_matrix(texts: pd.Series, rules: CompiledRules) -> np.ndarray:
-    """(n, n_patterns) bool match matrix; null texts match nothing."""
-    n = len(texts)
-    m = np.zeros((n, rules.n_patterns), dtype=bool)
-    valid = texts.notna()
-    if valid.any():
-        sub = texts[valid.to_numpy()]
-        for j, pat in enumerate(rules.patterns):
-            m[valid.to_numpy(), j] = sub.str.contains(pat, regex=True).to_numpy(dtype=bool)
-    return m
+def match_bits(lines: pa.Array, rules: CompiledRules) -> np.ndarray:
+    """Per-line match bitmask: bit ``j`` of entry ``i`` is set iff
+    ``rules.patterns[j]`` matches ``lines[i]`` (unanchored search, Python
+    ``re`` semantics).  Nulls match nothing."""
+    bits = np.zeros(len(lines), dtype=np.uint64)
+    for j, pat in enumerate(rules.patterns):
+        hit = pc.match_substring_regex(lines, to_re2(pat)).fill_null(False)
+        bits |= hit.to_numpy(zero_copy_only=False).astype(np.uint64) << np.uint64(j)
+    ascii_ = pc.string_is_ascii(lines).fill_null(True).to_numpy(zero_copy_only=False)
+    non_ascii = np.flatnonzero(~ascii_)
+    for i, line in zip(non_ascii, lines.take(pa.array(non_ascii)).to_pylist()):
+        bits[i] = sum(1 << j for j, rx in enumerate(rules.compiled) if rx.search(line))
+    return bits
 
 
-def _tables_for_mask(mask_key: bytes, mask: np.ndarray, rules: CompiledRules):
-    cache_key = (id(rules), mask_key)
-    hit = _TABLE_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
-    g = np.zeros(N_STATES, dtype=np.int8)
-    b = np.zeros(N_STATES, dtype=bool)
+def _tables(masks: np.ndarray, rules: CompiledRules):
+    """``(G, B)`` rows for each packed mask in ``masks``."""
+    k = len(masks)
+    hit = ((masks[:, None] >> np.arange(rules.n_patterns, dtype=np.uint64)) & np.uint64(1)).astype(bool)
+
+    def first_match(s):
+        # per-state rule order is priority order: assign in reverse so the
+        # first matching rule of state s wins
+        to = np.full(k, -1, dtype=np.int8)
+        for pid, to_state in reversed(rules.by_state[s]):
+            to[hit[:, pid]] = to_state
+        return to
+
     # first matching rule of start_state (for the retry path)
-    retry_to = START
-    for pid, to_state in rules.by_state[START]:
-        if mask[pid]:
-            retry_to = to_state
-            break
+    retry_to = first_match(START)
+    retry_to[retry_to < 0] = START
+    g_tab = np.empty((k, N_STATES), dtype=np.int8)
+    b_tab = np.empty((k, N_STATES), dtype=bool)
     for s in range(N_STATES):
-        to1 = -1
-        for pid, to_state in rules.by_state[s]:
-            if mask[pid]:
-                to1 = to_state
-                break
-        if to1 >= 0:
-            g[s], b[s] = to1, True
-        else:
-            g[s], b[s] = retry_to, False
-    out = (g, b)
-    _TABLE_CACHE[cache_key] = out
-    return out
+        to1 = first_match(s)
+        b_tab[:, s] = to1 >= 0
+        g_tab[:, s] = np.where(to1 >= 0, to1, retry_to)
+    return g_tab, b_tab
 
 
-def classify_encoded(codes: np.ndarray, uniques: pd.Series, rules: CompiledRules):
+def classify_encoded(codes: np.ndarray, uniques: pa.Array, rules: CompiledRules):
     """Classify pre-interned lines: ``codes`` maps each row to its distinct
-    line in ``uniques`` (-1 = null).  The regex bank runs once per distinct
-    line only — callers that already hold a dictionary encoding (the Arrow
-    scan stage) never materialize the non-distinct bulk as Python strings."""
-    m = match_matrix(uniques, rules)
-    if len(m) == 0:
+    line in the Arrow string array ``uniques`` (-1 = null).  The patterns run
+    once per distinct line, inside Arrow, so callers that already hold a
+    dictionary encoding (the Arrow scan stage, the pre-pass) never
+    materialize lines as Python strings."""
+    bits = match_bits(uniques, rules)
+    if len(bits) == 0:
         # all-null batch: keep one no-match class so downstream clip-indexing
         # of the tables stays valid (every row is NIL_CLS anyway)
-        m = np.zeros((1, rules.n_patterns), dtype=bool)
-        codes = np.full(len(codes), -1, dtype=np.int64)
-    uniq, inverse = np.unique(m, axis=0, return_inverse=True)
-    k = len(uniq)
-    g_tab = np.zeros((k, N_STATES), dtype=np.int8)
-    b_tab = np.zeros((k, N_STATES), dtype=bool)
-    for ki in range(k):
-        g, b = _tables_for_mask(uniq[ki].tobytes(), uniq[ki], rules)
-        g_tab[ki] = g
-        b_tab[ki] = b
+        bits = np.zeros(1, dtype=np.uint64)
+    masks, inverse = np.unique(bits, return_inverse=True)
+    g_tab, b_tab = _tables(masks, rules)
     per_unique = inverse.astype(np.int32)
     cls = np.where(codes >= 0, per_unique[np.clip(codes, 0, None)], NIL_CLS).astype(np.int32)
     return cls, g_tab, b_tab, (g_tab == START).all(axis=1)
@@ -99,11 +107,9 @@ def classify(texts: pd.Series, rules: CompiledRules):
 
     Returns ``(cls, G, B, absorbing)`` where ``cls`` is the per-line mask
     class (``NIL_CLS`` for nulls) and ``G``/``B``/``absorbing`` are indexed by
-    class id.
-
-    Lines are interned first (``pd.factorize``): log streams repeat lines
-    heavily (identical stack frames, blank lines), so the ≤40-pattern regex
-    bank runs once per *distinct* line, not once per row.
+    class id.  A thin wrapper over ``classify_encoded``: log streams repeat
+    lines heavily (identical stack frames, blank lines), so the lines are
+    dictionary-encoded in Arrow first.
     """
-    codes, uniques = pd.factorize(texts, use_na_sentinel=True)
-    return classify_encoded(codes, pd.Series(uniques, dtype=object), rules)
+    codes, uniques = encode(pa.array(texts, type=pa.string(), from_pandas=True))
+    return classify_encoded(codes, uniques, rules)

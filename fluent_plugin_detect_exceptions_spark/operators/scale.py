@@ -23,7 +23,15 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` up to the session's default
     parallelism when its current plan yields fewer partitions; identity
     otherwise.  Call on a SLIM projection (the exchange moves every column
-    of ``df``)."""
+    of ``df``).
+
+    Contract: ``df`` must be a scan plus narrow operators (projections,
+    filters).  The callers (``dedup`` signatures, ``pack``) apply it to a
+    ``select`` of their operator's input, so that input must be scan-shaped
+    too.  The ``df.rdd.getNumPartitions()`` probe plans ``df`` eagerly;
+    with a shuffle or join upstream it would plan those stages a second
+    time, and under AQE the probed count can differ from what the DataFrame
+    actually executes."""
     if df.isStreaming:
         # a streaming plan has no static partition count (df.rdd is
         # illegal); micro-batch parallelism is the source's business

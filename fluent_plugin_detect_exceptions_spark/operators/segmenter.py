@@ -44,7 +44,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import PipelineConfig
-from ..functions.classify import classify, classify_encoded
+from ..functions.classify import classify, classify_encoded, encode
 from ..rules import FAMILIES, STATE_FAMILY, STATES, CompiledRules, compile_rules
 from . import fsm
 
@@ -352,6 +352,15 @@ def _empty_partials_arrow(tbl, cfg: PipelineConfig, msg_field: str | None,
     return pa.table(cols, names=names)
 
 
+def _int64_col(tbl, name: str) -> np.ndarray:
+    """A non-null integer column as int64.  A null would cast to an
+    undefined int64 and silently corrupt the group sort, so refuse it."""
+    col = tbl.column(name)
+    if col.null_count > 0:
+        raise ValueError(f"column {name!r} has {col.null_count} null value(s); it must be non-null")
+    return col.combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+
+
 def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
                                 msg_field: str | None, emit_text: bool = True):
     """Arrow-native fused scan+coalesce: the hot stage of the pipeline.
@@ -359,8 +368,8 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
     The pandas form pays three Python-object taxes the profile showed
     dominate at scale (arrow→pandas conversion of every string column,
     whole-DataFrame reordering, and per-row string access): here the strings
-    stay dictionary-encoded in C++ — only the DISTINCT lines become Python
-    objects (for the regex bank and the final concat), row ordering is pure
+    stay dictionary-encoded in C++ and are classified and concatenated there
+    (only non-ASCII distinct lines reach Python ``re``), row ordering is pure
     numpy index arithmetic, and ride-along columns are gathered with
     ``pyarrow.compute.take`` at segment-first positions only."""
     import pyarrow as pa
@@ -371,12 +380,11 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
         return _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
 
     def codes_of(col_name):
-        enc = pc.dictionary_encode(tbl.column(col_name).combine_chunks())
-        return enc.indices.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
+        return encode(tbl.column(col_name).combine_chunks())[0]
 
     conv_c = codes_of(cfg.conv_col)
-    turn = tbl.column(cfg.order_col).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-    chunk = tbl.column("chunk_id").combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+    turn = _int64_col(tbl, cfg.order_col)
+    chunk = _int64_col(tbl, "chunk_id")
     warm = (
         tbl.column("__warmup").combine_chunks().to_numpy(zero_copy_only=False).astype(bool)
         if "__warmup" in tbl.schema.names
@@ -387,19 +395,15 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
     # text: dictionary-encode once; classify / length / newline checks run
     # per DISTINCT line only
     if msg_field is not None:
-        t_enc = pc.dictionary_encode(tbl.column(msg_field).combine_chunks())
-        tcodes = t_enc.indices.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
-        uniq_arr = t_enc.dictionary
-        uniqs = pd.Series(uniq_arr.to_pylist(), dtype=object)
+        tcodes, uniq_arr = encode(tbl.column(msg_field).combine_chunks())
         ulen = pc.utf8_length(uniq_arr).fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
         unl = pc.match_substring(uniq_arr, "\n").fill_null(False).to_numpy(zero_copy_only=False).astype(bool)
     else:
         tcodes = np.full(n, -1, dtype=np.int64)
         uniq_arr = pa.array([], pa.string())  # all codes are -1 (null)
-        uniqs = pd.Series([], dtype=object)
         ulen = np.zeros(1, dtype=np.int64)
         unl = np.zeros(1, dtype=bool)
-    cls_row, g_tab, b_tab, _ = classify_encoded(tcodes, uniqs, rules)
+    cls_row, g_tab, b_tab, _ = classify_encoded(tcodes, uniq_arr, rules)
     safe = np.clip(tcodes, 0, None)
     rawlen_row = np.where(tcodes >= 0, ulen[safe] if len(ulen) else 0, 0).astype(np.int64)
     hasnl_row = np.where(tcodes >= 0, unl[safe] if len(unl) else False, False).astype(bool)
@@ -619,7 +623,7 @@ def find_fallback_convs(
         # r6: the former one-group-per-call applyInPandas paid per-group
         # conversion machinery (~0.9 s of a 1.0 s pre-pass at sf1.0); this
         # mirrors the main stage — one Arrow table per task, text
-        # dictionary-encoded so the regex bank runs per DISTINCT line, all
+        # dictionary-encoded so classify runs per DISTINCT line in Arrow, all
         # groups scanned off one lexsort.  Emits one row per UNSYNCED
         # (conv[, stream], zchunk) group.
         import pyarrow as pa
@@ -634,16 +638,13 @@ def find_fallback_convs(
             return
 
         def codes_of(name):
-            enc = pc.dictionary_encode(tbl.column(name).combine_chunks())
-            return enc.indices.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
+            return encode(tbl.column(name).combine_chunks())[0]
 
         conv_c = codes_of("conv")
-        zchunk = tbl.column("zchunk").combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-        turn = tbl.column("turn").combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+        zchunk = _int64_col(tbl, "zchunk")
+        turn = _int64_col(tbl, "turn")
         strm_c = codes_of("strm") if cfg.stream is not None else None
-        t_enc = pc.dictionary_encode(tbl.column("msg").combine_chunks())
-        tcodes = t_enc.indices.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
-        uniqs = pd.Series(t_enc.dictionary.to_pylist(), dtype=object)
+        tcodes, uniqs = encode(tbl.column("msg").combine_chunks())
         cls, g_tab, _, _ = classify_encoded(tcodes, uniqs, rules)
 
         keys = [turn, zchunk]

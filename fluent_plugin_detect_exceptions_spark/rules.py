@@ -288,6 +288,8 @@ def compile_rules(languages=("all",)) -> CompiledRules:
                 per_state[fid].append(key)
 
     patterns = tuple(pattern_ids)
+    # the classifier packs one line's pattern matches into a uint64
+    assert len(patterns) <= 64, f"{len(patterns)} patterns exceed the 64-bit match mask"
     return CompiledRules(
         languages=langs,
         patterns=patterns,
@@ -301,17 +303,48 @@ def compile_rules(languages=("all",)) -> CompiledRules:
 # ---------------------------------------------------------------------------
 
 
-def to_re2(pattern: str) -> str:
-    """Translate a rule pattern to RE2 with identical semantics on lines that
-    retain their trailing newline.
+#: Python's ``\s`` members among ASCII characters, spelled out for RE2,
+#: whose ``\s`` lacks ``\v`` and the ``\x1c``-``\x1f`` separators.
+_RE2_SPACE = r"\t\n\x0b\x0c\r \x1c-\x1f"
 
-    Python ``re`` (no MULTILINE) lets ``$`` match *before a trailing
-    newline*; RE2 without the ``m`` flag only matches at end of text.  Every
-    ``$`` in the rule catalog occurs as a pattern-final anchor, so appending
-    an optional newline (``\\n?$``) reproduces the Python semantics exactly.
-    ``^`` (start-of-text only) and all other constructs used by the catalog
-    behave identically in both engines.
+
+def to_re2(pattern: str) -> str:
+    """Translate a rule pattern to RE2 with the same match result as Python
+    ``re`` on every ASCII line (lines retain their trailing newline).
+
+    Two constructs need rewriting:
+
+    * ``$`` — Python ``re`` (no MULTILINE) also matches *before a trailing
+      newline*; RE2 without the ``m`` flag only matches at end of text, so
+      an anchor outside a character class becomes ``\\n?$``.
+    * ``\\s`` — RE2's class lacks ``\\v`` and ``\\x1c``-``\\x1f``, which
+      Python's includes; it is spelled out as a class (or as bare members
+      inside a class such as ``[^\\s.:]``).
+
+    On ASCII input ``^``, ``.``, ``\\d`` and ``\\b`` already agree.  On
+    non-ASCII input they do not, and no translation closes the gap: RE2's
+    Unicode tables differ from Python's ``unicodedata`` (``\\p{Nd}`` on 20
+    code points, ``[\\p{L}\\p{N}_]`` on thousands).  Callers that need the
+    exact result therefore match non-ASCII lines with ``re`` itself
+    (``CompiledRules.compiled``); see ``functions.classify.match_bits``.
     """
-    if pattern.endswith("$") and not pattern.endswith(r"\$"):
-        return pattern[:-1] + r"\n?$"
-    return pattern
+    out = []
+    in_class = False
+    i = 0
+    while i < len(pattern):
+        ch = pattern[i]
+        if ch == "\\":
+            esc = pattern[i : i + 2]
+            if esc == r"\s":
+                out.append(_RE2_SPACE if in_class else f"[{_RE2_SPACE}]")
+            else:
+                out.append(esc)
+            i += 2
+            continue
+        if ch in "[]":
+            in_class = ch == "["
+        elif ch == "$" and not in_class:
+            ch = r"\n?$"
+        out.append(ch)
+        i += 1
+    return "".join(out)

@@ -101,3 +101,21 @@ def test_arrow_stage_equals_pandas_stage_randomized(
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)
     arrow_out = _scan_partition_fused_arrow(tbl, cfg, RULES, "text").to_pandas()
     assert normalize(pandas_out) == normalize(arrow_out)
+
+
+def test_arrow_stage_rejects_null_order_column():
+    """A null turn_idx would cast to an undefined int64 and silently corrupt
+    the group sort; the Arrow stage refuses it instead."""
+    import pytest
+
+    cfg = PipelineConfig(chunk_size=8, warmup=2)
+    pdf = build_partition([0, 1, 2, 3], n_convs=1, chunk=8, warmup=2, with_stream=False)
+    pdf["ts"] = pd.to_datetime(pdf["ts"], unit="s")
+    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    turns = tbl.column("turn_idx").to_pylist()
+    turns[1] = None
+    tbl = tbl.set_column(
+        tbl.schema.get_field_index("turn_idx"), "turn_idx", pa.array(turns, pa.int64())
+    )
+    with pytest.raises(ValueError, match="turn_idx"):
+        _scan_partition_fused_arrow(tbl, cfg, RULES, "text")

@@ -350,3 +350,36 @@ def test_data_job_migrates_unpartitioned_gates_checkpoint(spark, tmp_path):
     assert "doc_bucket" in spark.read.parquet(gates_path).columns
     after = {r["doc_id"] for r in spark.read.parquet(f"{out}/bucket=*").collect()}
     assert after == before
+
+
+def test_data_job_recovery_drops_stale_migration_copies(spark, tmp_path):
+    """A migration that crashed between its renames leaves gates_path
+    missing next to keep_ids_old / keep_ids_migrated.  The resume recomputes
+    the gate phase and deletes both stale copies."""
+    import os
+    import shutil
+
+    import fluent_plugin_detect_exceptions_spark.data_job as dj
+    from tests.test_entry_queries import SF_DIR
+
+    out = str(tmp_path / "prep")
+    src = os.path.join(os.path.dirname(SF_DIR), "sf0.001", "documents.parquet")
+    dj.run(spark, src, out, buckets=4)
+    gates_path = f"{out}/_gates/keep_ids"
+    before = {r["doc_id"] for r in spark.read.parquet(f"{out}/bucket=*").collect()}
+    for leftover in ("keep_ids_old", "keep_ids_migrated"):
+        shutil.copytree(gates_path, f"{out}/_gates/{leftover}")
+    shutil.rmtree(gates_path)
+
+    gate_calls = []
+    orig = dj.compute_gate_ids
+    dj.compute_gate_ids = lambda *a, **k: (gate_calls.append(1), orig(*a, **k))[1]
+    try:
+        dj.run(spark, src, out, buckets=4)
+    finally:
+        dj.compute_gate_ids = orig
+    assert gate_calls == [1]
+    assert sorted(os.listdir(f"{out}/_gates")) == ["keep_ids"]
+    assert "doc_bucket" in spark.read.parquet(gates_path).columns
+    after = {r["doc_id"] for r in spark.read.parquet(f"{out}/bucket=*").collect()}
+    assert after == before
