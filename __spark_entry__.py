@@ -208,7 +208,7 @@ def _q_events_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_pipeline_max_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O11 max_lines post-check (oracle: recursive CTE carrying line counts)
     df = synth_transcripts(spark, 20, 1)
-    cfg = PipelineConfig(max_lines=3, fuse_coalesce=True)
+    cfg = PipelineConfig(max_lines=3)
     routed = detect_exceptions(df, cfg)
     return routed.select(
         "conv_id", "first_turn_idx", "text", "n_lines", "lang", "sink"

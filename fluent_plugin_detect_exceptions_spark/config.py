@@ -76,16 +76,6 @@ class PipelineConfig:
     #: run's manifest over the same immutable input): skips the sync pre-pass
     #: entirely.  None = discover with the pre-pass; () = "none exist".
     known_fallback_convs: tuple | None = None
-    #: coalesce segments inside the scan stage (emit per-segment partials;
-    #: the downstream groupBy only stitches chunk-spanning segments).  Cuts
-    #: the second shuffle from per-row to per-segment volume.  The per-row
-    #: path (False) is kept for window-based segment-id derivations/tests.
-    fuse_coalesce: bool = True
-    #: run the fused scan stage on Arrow record batches (mapInArrow): strings
-    #: stay dictionary-encoded in C++ and only DISTINCT lines become Python
-    #: objects.  The pandas fused stage (False) pays object-materialization
-    #: and whole-DataFrame reorder taxes; kept for differential testing.
-    arrow_stage: bool = True
     #: drop ride-along columns (role/tool/...) before the scan stage and
     #: re-join first-row fields onto the coalesced records by
     #: (conv[, stream], first_turn_idx).  A Python map stage is opaque to
@@ -95,14 +85,14 @@ class PipelineConfig:
     #: full pipeline runs 0.76× the ride-through wall time — the extra
     #: narrow join costs less than moving the columns through the stage
     #: (scripts/ride_along_experiment.py, BASELINE.md).  None = auto: on for
-    #: the shuffled fused path with a message field; off when
-    #: input_clustered (shuffle #1 is already elided there) and on the
-    #: per-row path.  True/False force.  PRECONDITION: (conv[, stream],
-    #: turn) is unique in the input (the input_hint contract).  A replayed
-    #: duplicate row fans out the first-row rejoin and duplicates that
-    #: segment's record, where the ride-through min_by picked one
-    #: arbitrarily — ingest paths that can replay rows should dedupe
-    #: upstream (exact_dedup on the key) or set slim_stage=False.
+    #: the shuffled path with a message field; off when input_clustered
+    #: (shuffle #1 is already elided there).  True/False force.
+    #: PRECONDITION: (conv[, stream], turn) is unique in the input (the
+    #: input_hint contract).  A replayed duplicate row fans out the
+    #: first-row rejoin and duplicates that segment's record, where the
+    #: ride-through min_by picked one arbitrarily — ingest paths that can
+    #: replay rows should dedupe upstream (exact_dedup on the key) or set
+    #: slim_stage=False.
     slim_stage: bool | None = None
     #: debug guard for the slim_stage uniqueness precondition (ADVICE r3):
     #: when True, detect_exceptions runs ONE extra exact check job over the

@@ -36,7 +36,7 @@ from .checkpoint import (
 )
 from .config import PipelineConfig
 from .metrics import input_lineage, write_run_metadata
-from .operators.coalesce import coalesce_partials, coalesce_segments
+from .operators.coalesce import coalesce_partials
 from .operators.route import with_out_tag, with_sink
 from .operators.segmenter import segment
 from .plans.pipeline import rejoin_ride, slim_split
@@ -119,23 +119,14 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
     stage_df, ride = slim_split(df, cfg, msg_field)
     seg = segment(stage_df, cfg, rules)
     seg_obs = Observation(f"seg_metrics_{bucket}")
-    if "n_part" in seg.columns:  # fused partials
-        seg = seg.observe(
-            seg_obs,
-            F.coalesce(F.sum("n_part"), F.lit(0)).alias("rows_emitted"),
-            F.count(F.lit(1)).alias("segments_started"),
-            F.coalesce(F.sum((~F.col("sync_ok")).cast("long")), F.lit(0)).alias("parts_unsynced"),
-        )
-    else:
-        seg = seg.observe(
-            seg_obs,
-            F.coalesce(F.sum(F.col("emit").cast("long")), F.lit(0)).alias("rows_emitted"),
-            F.coalesce(F.sum(F.col("seg_flag").cast("long")), F.lit(0)).alias("segments_started"),
-            F.coalesce(F.sum((~F.col("sync_ok")).cast("long")), F.lit(0)).alias("parts_unsynced"),
-        )
-    coalesce = coalesce_partials if cfg.fuse_coalesce else coalesce_segments
+    seg = seg.observe(
+        seg_obs,
+        F.coalesce(F.sum("n_part"), F.lit(0)).alias("rows_emitted"),
+        F.count(F.lit(1)).alias("segments_started"),
+        F.coalesce(F.sum((~F.col("sync_ok")).cast("long")), F.lit(0)).alias("parts_unsynced"),
+    )
     routed = with_sink(
-        with_out_tag(rejoin_ride(coalesce(seg, cfg, msg_field), ride, cfg), cfg)
+        with_out_tag(rejoin_ride(coalesce_partials(seg, cfg, msg_field), ride, cfg), cfg)
     )
     sink_obs = Observation(f"sink_counts_{bucket}")
     routed = routed.observe(

@@ -10,8 +10,7 @@ Two small tables per run, written next to the job output:
   *observed metrics* riding the routed write (``DataFrame.observe`` /
   CollectMetricsExec: computed in-plan, exactly-once under task retries, one
   row per resumable bucket), so the classify+FSM stage runs exactly once per
-  bucket.  ``partition_metrics`` below is the standalone per-shuffle-partition
-  variant for analyses that want finer granularity (it re-runs the stage).
+  bucket.
 
 Both are derived from columns the pipeline already carries — no side
 channels, no accumulators, so they are exactly consistent with the data
@@ -35,36 +34,6 @@ def input_lineage(df: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.min("turn_idx").alias("min_turn"),
             F.max("turn_idx").alias("max_turn"),
-            F.approx_count_distinct("conv_id").alias("approx_convs"),
-        )
-    )
-
-
-def partition_metrics(segmented: DataFrame) -> DataFrame:
-    """Per shuffle-partition stats of the segmentation stage output.
-
-    Handles both output modes: per-row (seg_flag/emit columns) and fused
-    partials (n_part per segment partial)."""
-    if "n_part" in segmented.columns:
-        return (
-            segmented.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.sum("n_part").alias("rows_in"),
-                F.count(F.lit(1)).alias("segments_started"),
-                F.sum("n_part").alias("rows_emitted"),
-                F.lit(0).cast("long").alias("rows_dropped"),
-                F.sum((~F.col("sync_ok")).cast("long")).alias("rows_unsynced"),
-                F.approx_count_distinct("conv_id").alias("approx_convs"),
-            )
-        )
-    return (
-        segmented.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(F.col("seg_flag").cast("long")).alias("segments_started"),
-            F.sum(F.col("emit").cast("long")).alias("rows_emitted"),
-            F.sum((~F.col("emit")).cast("long")).alias("rows_dropped"),
-            F.sum((~F.col("sync_ok")).cast("long")).alias("rows_unsynced"),
             F.approx_count_distinct("conv_id").alias("approx_convs"),
         )
     )

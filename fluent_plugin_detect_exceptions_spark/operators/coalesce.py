@@ -1,47 +1,33 @@
 """Trace coalescing: ordered separator-less concat per segment (SURVEY O9/O12).
 
-Entirely JVM-side built-ins — no Python in this stage:
+The scan stage (``segmenter.segment``) already concatenates each segment's
+rows within one chunk into a *partial*; this stage stitches the partials of
+chunk-spanning segments.  Entirely JVM-side built-ins — no Python here:
 
 * segment identity is ``(conv_id[, stream], seg_start_turn)``; the groupBy
   shuffles on those keys, so even a skewed conversation's segments hash-spread
   across reducers (a segment itself is bounded by max_lines/max_bytes);
 * ordered concat = ``array_join(transform(array_sort(collect_list(struct(
-  turn_idx, text))), x -> x.text), '')`` — deterministic order without a
-  window sort;
+  part_min_turn, text_part))), x -> x.text_part), '')`` — deterministic order
+  without a window sort;
 * single-row segments emit the **original record unchanged**
-  (exception_detector.rb:298-299): all first-row fields ride along via
-  ``min_by(struct(*cols), turn_idx)`` and the 1-row case takes the original
-  text;
-* force_line_breaks (exception_detector.rb:366-371): prepend ``\\n`` to
-  non-first member lines that contain none.
+  (exception_detector.rb:298-299): first-partial fields ride along via
+  ``min_by(struct(*cols), part_min_turn)`` and the 1-row case takes the
+  original text;
+* force_line_breaks (exception_detector.rb:366-371) is applied by the scan
+  stage, which prepends ``\\n`` to non-first member lines that contain none.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..rules import FAMILIES
 
-META_COLS = ("seg_start_turn", "seg_flag", "emit", "lang_id", "sync_ok", "chunk_id")
-
-
-def segment_ids_window(seg: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Running-sum segment ids over the start-of-block flag — the window
-    formulation: ``sum(seg_flag) OVER (PARTITION BY conv ORDER BY turn)``.
-
-    ``seg_start_turn`` (used by the pipeline) is the same assignment in a
-    chunk-stitchable form: two rows share a window-sum segment id iff they
-    share (conv, seg_start_turn) — asserted by test_window_segment_ids.
-    This helper exists for consumers who want dense per-conversation segment
-    numbers; note the window re-sorts each conversation in one task, so
-    prefer seg_start_turn keys at skew scale."""
-    w = Window.partitionBy(*cfg.group_keys()).orderBy(cfg.order_col)
-    return seg.withColumn("segment_id", F.sum(F.col("seg_flag").cast("long")).over(w))
-
 
 def coalesce_partials(partials: DataFrame, cfg: PipelineConfig, msg_field: str | None = "text") -> DataFrame:
-    """Stitch fused-mode segment partials (one row per segment per chunk)
+    """Stitch segment partials (one row per segment per chunk)
     into final records.  Almost every segment has exactly one partial; only
     chunk-spanning segments aggregate >1, so this groupBy moves per-segment
     volume, not per-turn volume."""
@@ -83,64 +69,6 @@ def coalesce_partials(partials: DataFrame, cfg: PipelineConfig, msg_field: str |
             .otherwise(F.col("__combined"))
             .alias(msg_field)
         )
-    sel.append(F.col("n_lines"))
-    sel.append(lang.alias("lang"))
-    sel.append(F.col("sync_ok"))
-    return agg.select(*sel)
-
-
-def coalesce_segments(seg: DataFrame, cfg: PipelineConfig, msg_field: str | None = "text") -> DataFrame:
-    """seg: output of ``segmenter.segment``.  Returns one row per emitted
-    record with first-row fields, combined text, n_lines and lang."""
-    keys = cfg.group_keys() + ["seg_start_turn"]
-    orig_cols = [c for c in seg.columns if c not in META_COLS]
-
-    text = F.col(msg_field) if msg_field is not None else F.lit(None).cast("string")
-    if cfg.force_line_breaks:
-        member = F.when(
-            (F.col(cfg.order_col) != F.col("seg_start_turn"))
-            & ~text.contains("\n")
-            & text.isNotNull(),
-            F.concat(F.lit("\n"), text),
-        ).otherwise(text)
-    else:
-        member = text
-
-    rows = seg.filter(F.col("emit")).withColumn("__member", member)
-
-    agg = rows.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.min_by(F.struct(*orig_cols, "lang_id"), F.col(cfg.order_col)).alias("__first"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(cfg.order_col, "__member"))),
-                lambda x: x["__member"],
-            ),
-            "",
-        ).alias("__combined"),
-        F.min("sync_ok").alias("sync_ok"),
-    )
-
-    first = F.col("__first")
-    out_text = (
-        F.when(F.col("n_lines") == 1, first[msg_field]).otherwise(F.col("__combined"))
-        if msg_field is not None
-        else None  # no message field: every record passes through unchanged
-    )
-    lang = F.when(
-        first["lang_id"] >= 0,
-        F.element_at(F.array(*[F.lit(x) for x in FAMILIES]), (first["lang_id"] + 1).cast("int")),
-    )
-
-    sel = [F.col(k) for k in cfg.group_keys()]
-    sel.append(F.col("seg_start_turn").alias("first_turn_idx"))
-    for c in orig_cols:
-        if c in (*cfg.group_keys(), cfg.order_col):
-            continue
-        if c == msg_field and out_text is not None:
-            sel.append(out_text.alias(msg_field))
-        else:
-            sel.append(first[c].alias(c))
     sel.append(F.col("n_lines"))
     sel.append(lang.alias("lang"))
     sel.append(F.col("sync_ok"))

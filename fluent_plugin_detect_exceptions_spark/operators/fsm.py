@@ -4,9 +4,10 @@ Reimplements, fully vectorized, the observable semantics of the reference's
 per-stream loop (``TraceAccumulator#push`` — exception_detector.rb:278-292):
 
 * per-line transition functions ``g_i : S → S`` (from the classify tables)
-  composed with a Hillis–Steele doubling scan — function composition over the
-  27-state domain is associative, so states for a whole window come out of
-  ``O(|S|·log W)`` vectorized gathers with **no per-row Python** (SURVEY §7.3);
+  composed per block by tree reduction — function composition over the
+  27-state domain is associative — then walked in lockstep from the known
+  entry state (``_trajectory``), so states for a whole window come out of
+  vectorized gathers with **no per-row Python** (SURVEY §7.3);
 * the four detection statuses from ``(matched_before, state_after != start)``
   (exception_detector.rb:206-225);
 * buffer semantics → start-of-block flags: a segment starts at a row iff its
@@ -24,7 +25,7 @@ per-stream loop (``TraceAccumulator#push`` — exception_detector.rb:278-292):
   is dropped otherwise (exception_detector.rb:279-283, :349-351).
 
 The scan is windowed (``WINDOW`` rows) with carried entry state and carried
-open-buffer counters, so cost is ``O(n·|S|·log W)`` regardless of how many
+open-buffer counters, so cost is ``O(n·|S|)`` regardless of how many
 limit violations occur.
 """
 
@@ -65,20 +66,6 @@ class ScanResult:
     carry: ScanCarry | None = None  # state after the last row
 
 
-def _compose_scan(gw: np.ndarray) -> np.ndarray:
-    """Inclusive prefix composition: out[i, s] = state after rows 0..i given
-    entry state s.  Hillis–Steele doubling, O(|S|·log n) vectorized steps.
-    Kept as the differential-test reference for ``_trajectory`` (r6), which
-    replaced it in the hot scan."""
-    p = gw.copy()
-    step = 1
-    n = len(p)
-    while step < n:
-        p[step:] = np.take_along_axis(p[step:], p[:-step].astype(np.intp), axis=1)
-        step *= 2
-    return p
-
-
 _TRAJ_BLOCK = 128  # power of two; python steps/window = block + n/block
 
 
@@ -94,8 +81,9 @@ def _trajectory(gw: np.ndarray, entry: int) -> np.ndarray:
     O(|S|·n) gathers; (2) a ~n/B-step Python walk composes block entries;
     (3) all blocks' single-state trajectories advance in LOCKSTEP — B
     vectorized steps of one 1-byte gather per block.  Bit-identical to
-    ``_compose_scan(gw)[:, entry]`` (differential-tested); measured ~7×
-    less time than the prefix form on the bench partitions."""
+    column ``entry`` of the prefix composition (differential-tested against
+    the Hillis–Steele reference in tests/test_fsm.py); measured ~7× less
+    time than the prefix form on the bench partitions."""
     w, n_states = gw.shape
     if w == 0:
         return np.empty(0, dtype=np.int8)

@@ -81,7 +81,7 @@ def fused_sink_counts(partials: DataFrame) -> DataFrame:
 
 def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Counts-only entry point: transcripts → per-sink record counts via the
-    fused partials fast path (requires ``cfg.fuse_coalesce``).
+    segment-partials fast path.
 
     Projects the input to exactly the columns the scan needs before the
     stage: a Python map stage is OPAQUE to Catalyst, so column pruning does
@@ -89,8 +89,6 @@ def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     the counts never use would ride shuffle #1 and both Arrow transfers."""
     from .segmenter import segment
 
-    if not cfg.fuse_coalesce:
-        raise ValueError("detect_sink_counts requires cfg.fuse_coalesce=True")
     # emit_text=False: counts never read the combined text, and the Python
     # stage is opaque to Catalyst's column pruning — not PRODUCING the text
     # is the only way to keep it off the Arrow boundary (r6, guide §4.1),

@@ -1,6 +1,6 @@
 """Distributed segmentation operator (SURVEY.md O3/O6/O8/O10/O11/O13/O18).
 
-Turns the transcripts DataFrame into per-row segmentation metadata with a
+Turns the transcripts DataFrame into per-segment *partials* with a
 bounded-shuffle, skew-proof plan:
 
 1. **Salted chunking** (north rule): ``chunk_id = turn_idx div C`` spreads a
@@ -15,24 +15,25 @@ bounded-shuffle, skew-proof plan:
    (``fsm.subset_sync``).  A cheap pre-pass over only the boundary zones
    finds conversations with an unsynchronizable warm-up (wall-to-wall stack
    traces); those are processed whole (chunk 0).
-3. **Partition-level scan**: ``repartition(conv, chunk)`` +
-   ``sortWithinPartitions(conv, chunk, turn)`` + ``mapInPandas``.  Each
-   partition is classified ONCE (pattern bank over pandas-interned distinct
-   lines — log data repeats lines heavily) and scanned ONCE: group runs are
-   gathered into a single contiguous array with forced resets at group
-   starts, so there is no per-group Python overhead and no per-row Python
-   anywhere (north rule).
+3. **Partition-level scan**: ``repartition(conv, chunk)`` + ``mapInArrow``.
+   Each partition arrives as one Arrow table; its text is dictionary-encoded
+   once and classified per DISTINCT line in Arrow C++ (log data repeats
+   lines heavily), the rows are ordered by an integer lexsort, and all
+   groups are scanned ONCE: group runs are gathered into a single
+   contiguous array with forced resets at group starts, so there is no
+   per-group Python overhead and no per-row Python anywhere (north rule).
 
-Per-row outputs: ``seg_start_turn`` (the running-maximum-of-flagged-turns
-form of the running-sum segment id — stitches segments across chunk
-boundaries with no per-conversation window), ``seg_flag``, ``emit``,
-``lang_id``, ``sync_ok``.
+Output: one row per segment partial (a segment's emitted body rows within
+one chunk) — ``seg_start_turn`` (the running-maximum-of-flagged-turns form
+of the running-sum segment id, which stitches segments across chunk
+boundaries with no per-conversation window), ``part_min_turn``,
+``n_part``, ``text_part``, ``lang_id``, ``sync_ok`` and the first row's
+ride-along columns.  ``coalesce.coalesce_partials`` stitches them.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -44,7 +45,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import PipelineConfig
-from ..functions.classify import classify, classify_encoded, encode
+from ..functions.classify import classify_encoded, encode
 from ..rules import FAMILIES, STATE_FAMILY, STATES, CompiledRules, compile_rules
 from . import fsm
 
@@ -53,14 +54,6 @@ FAMILY_ID = {fam: i for i, fam in enumerate(FAMILIES)}
 STATE_FAMILY_ID = np.array(
     [FAMILY_ID.get(STATE_FAMILY.get(s), -1) for s in STATES], dtype=np.int8
 )
-
-META_FIELDS = [
-    StructField("seg_start_turn", LongType(), False),
-    StructField("seg_flag", BooleanType(), False),
-    StructField("emit", BooleanType(), False),
-    StructField("lang_id", ByteType(), False),
-    StructField("sync_ok", BooleanType(), False),
-]
 
 _TURN_OFFSET = np.int64(1) << 40  # group separator for the global cummax
 
@@ -102,231 +95,6 @@ def partial_schema(df_schema: StructType, cfg: PipelineConfig, msg_field: str | 
     return StructType(fields)
 
 
-def _empty_partials(pdf: pd.DataFrame, cfg: PipelineConfig, msg_field: str | None,
-                    emit_text: bool = True) -> pd.DataFrame:
-    cols = {cfg.conv_col: pdf[cfg.conv_col].iloc[:0]}
-    if cfg.stream is not None:
-        cols[cfg.stream] = pdf[cfg.stream].iloc[:0]
-    for name, typ in (("seg_start_turn", "int64"), ("part_min_turn", "int64"),
-                      ("n_part", "int64")):
-        cols[name] = pd.Series([], dtype=typ)
-    if emit_text:
-        cols["text_part"] = pd.Series([], dtype=object)
-    cols["lang_id"] = pd.Series([], dtype="int8")
-    cols["sync_ok"] = pd.Series([], dtype=bool)
-    for c in ride_along_cols(pdf.columns, cfg, msg_field):
-        cols[c] = pdf[c].iloc[:0]
-    return pd.DataFrame(cols)
-
-
-def _scan_core(pdf: pd.DataFrame, cfg: PipelineConfig, rules: CompiledRules,
-               msg_field: str | None):
-    """Classify + scan one sorted partition holding whole (conv[,stream],
-    chunk) groups.  Returns (warm, texts, sync_ok, gathered) where gathered
-    is None for empty scans or a dict of aligned arrays over the scanned
-    row indices."""
-    n = len(pdf)
-    warm = pdf["__warmup"].to_numpy(dtype=bool) if "__warmup" in pdf else np.zeros(n, bool)
-    texts = (
-        pdf[msg_field]
-        if msg_field is not None
-        else pd.Series([None] * n, dtype=object)
-    ).reset_index(drop=True)
-    cls, g_tab, b_tab, _ = classify(texts, rules)
-
-    # group boundaries: change in (conv[, stream], chunk)
-    keys = [pdf[cfg.conv_col].to_numpy()]
-    if cfg.stream is not None and cfg.stream in pdf.columns:
-        keys.append(pdf[cfg.stream].to_numpy())
-    keys.append(pdf["chunk_id"].to_numpy())
-    new_group = np.ones(n, dtype=bool)
-    if n > 1:
-        new_group[1:] = ~np.logical_and.reduce([k[1:] == k[:-1] for k in keys])
-    group_starts = np.flatnonzero(new_group)
-    group_ends = np.append(group_starts[1:], n)
-
-    # per group: find the scan start (after the warm-up sync point)
-    chunk_ids = pdf["chunk_id"].to_numpy() if "chunk_id" in pdf else np.zeros(n, np.int64)
-    scan_ranges = []
-    sync_ok = np.ones(n, dtype=bool)
-    for gs, ge in zip(group_starts, group_ends):
-        nwarm = int(warm[gs:ge].sum())  # warm-up rows sort first (lower turn)
-        if nwarm == 0:
-            # A chunk>0 group with NO warm-up rows means the zone turn range
-            # before its boundary was empty — either the conversation starts
-            # mid-chunk (forced reset is exact) or a turn_idx hole wider than
-            # `warmup` spans the boundary (carried FSM/buffer state would be
-            # silently split).  The two are indistinguishable partition-
-            # locally, so flag conservatively (ADVICE r1): never report an
-            # unverifiable scan as synced.
-            if chunk_ids[gs] > 0:
-                sync_ok[gs:ge] = False
-            scan_ranges.append((gs, ge))
-            continue
-        j = fsm.subset_sync(cls[gs : gs + nwarm], g_tab)
-        if j < 0:
-            # defensive: the pre-pass routes unsynchronizable convs to
-            # chunk 0; if one slips through, flag it (never emit bad data)
-            sync_ok[gs:ge] = False
-            scan_ranges.append((gs + nwarm, ge))
-        else:
-            scan_ranges.append((gs + j + 1, ge))
-
-    # gather scan ranges into one contiguous array; forced reset at each
-    # group's first scanned row makes one scan() call exact for all groups
-    idx = np.concatenate([np.arange(s, e) for s, e in scan_ranges if e > s]) if scan_ranges else np.empty(0, np.intp)
-    m = len(idx)
-    if m == 0:
-        return warm, texts, sync_ok, None
-
-    first_of_group = np.zeros(m, dtype=bool)
-    pos = 0
-    gidx = np.zeros(m, dtype=np.int64)
-    for _gnum, (s, e) in enumerate(sr for sr in scan_ranges if sr[1] > sr[0]):
-        ln = e - s
-        first_of_group[pos] = True
-        gidx[pos : pos + ln] = _gnum
-        pos += ln
-
-    tv = texts.iloc[idx]
-    rawlen = tv.str.len().fillna(0).to_numpy(dtype=np.int64)
-    has_nl = (tv.str.contains("\n", regex=False) == True).to_numpy(dtype=bool)  # noqa: E712 — null-safe without object-downcast fillna (pandas FutureWarning)
-    gap = np.zeros(m, dtype=bool)
-    if cfg.multiline_flush_interval is not None and m > 1:
-        tsg = pdf[cfg.ts_col].iloc[idx].to_numpy(dtype="datetime64[us]").astype(np.int64)
-        gap[1:] = (tsg[1:] - tsg[:-1]) > cfg.multiline_flush_interval * 1_000_000
-        gap[first_of_group] = False
-    gap |= first_of_group  # hard reset + buffer clear at each group start
-
-    res = fsm.scan(
-        cls[idx], g_tab, b_tab, rawlen, has_nl, gap,
-        force_line_breaks=cfg.force_line_breaks,
-        max_lines=cfg.max_lines,
-        max_bytes=cfg.max_bytes,
-    )
-
-    turns = pdf[cfg.order_col].to_numpy(dtype=np.int64)[idx]
-    adj = turns + gidx * _TURN_OFFSET
-    sst = np.maximum.accumulate(np.where(res.seg_start, adj, np.int64(-1)))
-    sst -= gidx * _TURN_OFFSET
-
-    gathered = {
-        "idx": idx,
-        "gidx": gidx,
-        "res": res,
-        "sst": sst,
-        "turns": turns,
-        "has_nl": has_nl,
-        "lang": STATE_FAMILY_ID[res.state_after],
-    }
-    return warm, texts, sync_ok, gathered
-
-
-def _scan_partition(
-    pdf: pd.DataFrame, cfg: PipelineConfig, rules: CompiledRules, msg_field: str | None
-) -> pd.DataFrame:
-    """Per-row output mode: body rows plus metadata columns."""
-    n = len(pdf)
-    if n == 0:
-        out = pdf.copy()
-        for name, typ in (("seg_start_turn", "int64"), ("seg_flag", "bool"),
-                          ("emit", "bool"), ("lang_id", "int8"), ("sync_ok", "bool")):
-            out[name] = pd.Series([], dtype=typ)
-        return out.drop(columns=[c for c in ("__warmup",) if c in out.columns])
-
-    warm, _texts, sync_ok, g = _scan_core(pdf, cfg, rules, msg_field)
-    seg_start_turn = np.zeros(n, dtype=np.int64)
-    seg_flag = np.zeros(n, dtype=bool)
-    emit = np.ones(n, dtype=bool)
-    lang_id = np.full(n, -1, dtype=np.int8)
-    if g is not None:
-        idx = g["idx"]
-        seg_start_turn[idx] = g["sst"]
-        seg_flag[idx] = g["res"].seg_start
-        emit[idx] = g["res"].emit
-        lang_id[idx] = g["lang"]
-
-    out = pdf.copy()
-    out["seg_start_turn"] = seg_start_turn
-    out["seg_flag"] = seg_flag
-    out["emit"] = emit
-    out["lang_id"] = lang_id
-    out["sync_ok"] = sync_ok
-    out = out[~warm]
-    return out.drop(columns=[c for c in ("__warmup",) if c in out.columns])
-
-
-def _scan_partition_fused(
-    pdf: pd.DataFrame, cfg: PipelineConfig, rules: CompiledRules, msg_field: str | None,
-    emit_text: bool = True,
-) -> pd.DataFrame:
-    """Fused scan+coalesce output mode: one row per segment *partial* (the
-    segment's emitted body rows within one chunk).  The downstream groupBy
-    only stitches the rare chunk-spanning segments, so the second shuffle
-    carries per-segment rows instead of per-turn rows."""
-    if len(pdf) == 0:
-        return _empty_partials(pdf, cfg, msg_field, emit_text)
-    warm, texts, sync_ok, g = _scan_core(pdf, cfg, rules, msg_field)
-    if g is None:
-        return _empty_partials(pdf, cfg, msg_field, emit_text)
-
-    idx, gidx, res, sst = g["idx"], g["gidx"], g["res"], g["sst"]
-    keep = res.emit & ~warm[idx]  # emitted body rows only
-    k_idx = idx[keep]
-    if len(k_idx) == 0:
-        return _empty_partials(pdf, cfg, msg_field, emit_text)
-    k_gidx = gidx[keep]
-    k_sst = sst[keep]
-    k_turn = g["turns"][keep]
-    k_lang = g["lang"][keep]
-    k_has_nl = g["has_nl"][keep]
-    k_texts = texts.iloc[k_idx].tolist()
-
-    p = len(k_idx)
-    pb = np.ones(p, dtype=bool)
-    if p > 1:
-        pb[1:] = (k_gidx[1:] != k_gidx[:-1]) | (k_sst[1:] != k_sst[:-1])
-    starts = np.flatnonzero(pb)
-    ends = np.append(starts[1:], p)
-
-    if cfg.force_line_breaks:
-        prepend = (~k_has_nl) & (k_turn != k_sst)
-    else:
-        prepend = np.zeros(p, dtype=bool)
-
-    parts: list[str | None] = []
-    if emit_text:
-        for s, e in zip(starts, ends):
-            if e - s == 1:
-                t = k_texts[s]
-                parts.append(
-                    ("\n" + t) if (prepend[s] and t is not None) else t
-                )
-                continue
-            buf = []
-            for i in range(s, e):
-                t = k_texts[i]
-                if t is None:
-                    continue
-                buf.append("\n" + t if prepend[i] else t)
-            parts.append("".join(buf))
-
-    firsts = k_idx[starts]
-    out = {cfg.conv_col: pdf[cfg.conv_col].to_numpy()[firsts]}
-    if cfg.stream is not None:
-        out[cfg.stream] = pdf[cfg.stream].to_numpy()[firsts]
-    out["seg_start_turn"] = k_sst[starts]
-    out["part_min_turn"] = k_turn[starts]
-    out["n_part"] = (ends - starts).astype(np.int64)
-    if emit_text:
-        out["text_part"] = parts
-    out["lang_id"] = k_lang[starts]
-    out["sync_ok"] = sync_ok[firsts]
-    for c in ride_along_cols(pdf.columns, cfg, msg_field):
-        out[c] = pdf[c].to_numpy()[firsts]
-    return pd.DataFrame(out)
-
-
 def _empty_partials_arrow(tbl, cfg: PipelineConfig, msg_field: str | None,
                           emit_text: bool = True):
     import pyarrow as pa
@@ -361,17 +129,39 @@ def _int64_col(tbl, name: str) -> np.ndarray:
     return col.combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
 
 
+def _sorted_groups(tbl, conv: str, stream: str | None, chunk: np.ndarray,
+                   turn: np.ndarray):
+    """Order one partition by (conv[, stream], chunk, turn) and find its
+    (conv[, stream], chunk) groups.  ``conv``/``stream`` name key columns of
+    any type, compared by their dictionary codes; ``chunk``/``turn`` are the
+    int64 columns from ``_int64_col``.  The sort is integer index arithmetic
+    only: no column is reordered.  Returns ``(order, starts, ends)`` — the
+    sorting permutation and each group's ``[start, end)`` in sorted
+    positions."""
+    n = tbl.num_rows
+    group_keys = [chunk, encode(tbl.column(conv).combine_chunks())[0]]
+    if stream is not None:
+        group_keys.insert(0, encode(tbl.column(stream).combine_chunks())[0])
+    order = np.lexsort((turn, *group_keys))
+    new_group = np.ones(n, dtype=bool)
+    if n > 1:
+        same = np.ones(n - 1, dtype=bool)
+        for k in group_keys:
+            k_s = k[order]
+            same &= k_s[1:] == k_s[:-1]
+        new_group[1:] = ~same
+    starts = np.flatnonzero(new_group)
+    return order, starts, np.append(starts[1:], n)
+
+
 def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
                                 msg_field: str | None, emit_text: bool = True):
     """Arrow-native fused scan+coalesce: the hot stage of the pipeline.
 
-    The pandas form pays three Python-object taxes the profile showed
-    dominate at scale (arrow→pandas conversion of every string column,
-    whole-DataFrame reordering, and per-row string access): here the strings
-    stay dictionary-encoded in C++ and are classified and concatenated there
-    (only non-ASCII distinct lines reach Python ``re``), row ordering is pure
-    numpy index arithmetic, and ride-along columns are gathered with
-    ``pyarrow.compute.take`` at segment-first positions only."""
+    The strings stay dictionary-encoded in C++ and are classified and
+    concatenated there (only non-ASCII distinct lines reach Python ``re``),
+    row ordering is pure numpy index arithmetic, and ride-along columns are
+    gathered with ``pyarrow.compute.take`` at segment-first positions only."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -379,10 +169,6 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
     if n == 0:
         return _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
 
-    def codes_of(col_name):
-        return encode(tbl.column(col_name).combine_chunks())[0]
-
-    conv_c = codes_of(cfg.conv_col)
     turn = _int64_col(tbl, cfg.order_col)
     chunk = _int64_col(tbl, "chunk_id")
     warm = (
@@ -390,7 +176,6 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
         if "__warmup" in tbl.schema.names
         else np.zeros(n, dtype=bool)
     )
-    strm_c = codes_of(cfg.stream) if cfg.stream is not None else None
 
     # text: dictionary-encode once; classify / length / newline checks run
     # per DISTINCT line only
@@ -408,33 +193,18 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
     rawlen_row = np.where(tcodes >= 0, ulen[safe] if len(ulen) else 0, 0).astype(np.int64)
     hasnl_row = np.where(tcodes >= 0, unl[safe] if len(unl) else False, False).astype(bool)
 
-    # sort = integer index arithmetic only; no column is reordered
-    keys = [turn, chunk]
-    if strm_c is not None:
-        keys.insert(1, strm_c)
-    order = np.lexsort(tuple(keys) + (conv_c,))
-    conv_s = conv_c[order]
-    chunk_s = chunk[order]
-    turn_s = turn[order]
+    order, group_starts, group_ends = _sorted_groups(
+        tbl, cfg.conv_col, cfg.stream, chunk, turn
+    )
     warm_s = warm[order]
     cls_s = cls_row[order]
-    strm_s = strm_c[order] if strm_c is not None else None
-
-    new_group = np.ones(n, dtype=bool)
-    if n > 1:
-        same = (conv_s[1:] == conv_s[:-1]) & (chunk_s[1:] == chunk_s[:-1])
-        if strm_s is not None:
-            same &= strm_s[1:] == strm_s[:-1]
-        new_group[1:] = ~same
-    group_starts = np.flatnonzero(new_group)
-    group_ends = np.append(group_starts[1:], n)
 
     scan_ranges = []
     sync_ok = np.ones(n, dtype=bool)  # in SORTED order
     for gs, ge in zip(group_starts, group_ends):
         nwarm = int(warm_s[gs:ge].sum())
         if nwarm == 0:
-            if chunk_s[gs] > 0:
+            if chunk[order[gs]] > 0:
                 sync_ok[gs:ge] = False  # empty warm-up zone: unverifiable
             scan_ranges.append((gs, ge))
             continue
@@ -480,7 +250,7 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
         max_bytes=cfg.max_bytes,
     )
 
-    turns = turn_s[idx]
+    turns = turn[orig]
     adj = turns + gidx * _TURN_OFFSET
     sst = np.maximum.accumulate(np.where(res.seg_start, adj, np.int64(-1)))
     sst -= gidx * _TURN_OFFSET
@@ -633,36 +403,16 @@ def find_fallback_convs(
         if not chunks:
             return
         tbl = pa.Table.from_batches(chunks)
-        n = tbl.num_rows
-        if n == 0:
+        if tbl.num_rows == 0:
             return
 
-        def codes_of(name):
-            return encode(tbl.column(name).combine_chunks())[0]
-
-        conv_c = codes_of("conv")
-        zchunk = _int64_col(tbl, "zchunk")
-        turn = _int64_col(tbl, "turn")
-        strm_c = codes_of("strm") if cfg.stream is not None else None
         tcodes, uniqs = encode(tbl.column("msg").combine_chunks())
         cls, g_tab, _, _ = classify_encoded(tcodes, uniqs, rules)
-
-        keys = [turn, zchunk]
-        if strm_c is not None:
-            keys.insert(1, strm_c)
-        order = np.lexsort(tuple(keys) + (conv_c,))
-        conv_s = conv_c[order]
-        z_s = zchunk[order]
+        order, gs, ge = _sorted_groups(
+            tbl, "conv", "strm" if cfg.stream is not None else None,
+            _int64_col(tbl, "zchunk"), _int64_col(tbl, "turn"),
+        )
         cls_s = cls[order]
-        strm_s = strm_c[order] if strm_c is not None else None
-        new_group = np.ones(n, dtype=bool)
-        if n > 1:
-            same = (conv_s[1:] == conv_s[:-1]) & (z_s[1:] == z_s[:-1])
-            if strm_s is not None:
-                same &= strm_s[1:] == strm_s[:-1]
-            new_group[1:] = ~same
-        gs = np.flatnonzero(new_group)
-        ge = np.append(gs[1:], n)
         bad = [
             int(order[s])
             for s, e in zip(gs, ge)
@@ -721,12 +471,13 @@ def segment(
     df: DataFrame, cfg: PipelineConfig, rules: CompiledRules | None = None,
     emit_text: bool = True,
 ) -> DataFrame:
-    """Full segmentation: returns the input rows (body only) plus metadata
-    columns (seg_start_turn, seg_flag, emit, lang_id, sync_ok).
+    """Full segmentation: returns one row per segment partial (schema
+    ``partial_schema``); ``coalesce.coalesce_partials`` stitches the
+    partials of chunk-spanning segments into final records.
 
-    ``emit_text=False`` (fused modes only) omits the combined-text column
-    from the partials — counts-only consumers then never pay the Arrow
-    transfer or the per-segment concat for text nobody reads (r6)."""
+    ``emit_text=False`` omits the combined-text column from the partials —
+    counts-only consumers then never pay the Arrow transfer or the
+    per-segment concat for text nobody reads (r6)."""
     rules = rules or compile_rules(cfg.languages)
     msg_field = cfg.resolve_message_field(df.columns)
     if cfg.multiline_flush_interval is not None and cfg.ts_col not in df.columns:
@@ -763,53 +514,23 @@ def segment(
     else:
         df = df.withColumn("chunk_id", F.lit(0)).withColumn("__warmup", F.lit(False))
 
-    group_cols = cfg.group_keys() + ["chunk_id"]
-    if cfg.fuse_coalesce:
-        out_schema = partial_schema(df.schema, cfg, msg_field, emit_text)
-        scan_fn = _scan_partition_fused
-    else:
-        out_schema = StructType(
-            [f for f in df.schema.fields if f.name != "__warmup"] + META_FIELDS
-        )
-        scan_fn = _scan_partition
-
-    if cfg.fuse_coalesce and cfg.arrow_stage:
-        def run_arrow(batches):
-            import pyarrow as pa
-
-            chunks = list(batches)
-            if not chunks:
-                return
-            tbl = pa.Table.from_batches(chunks)
-            out = _scan_partition_fused_arrow(tbl, cfg, rules, msg_field, emit_text)
-            yield from out.to_batches()
-
-        if cfg.input_clustered:
-            # caller asserts each input partition holds whole conversations
-            # (bucketed/SPJ layout): no grouping exchange at all
-            return df.mapInArrow(run_arrow, schema=out_schema)
-        return df.repartition(*group_cols).mapInArrow(run_arrow, schema=out_schema)
+    out_schema = partial_schema(df.schema, cfg, msg_field, emit_text)
 
     def run(batches):
+        import pyarrow as pa
+
         # one partition may arrive as several Arrow batches and a group may
-        # span them — concatenate so each (conv, chunk) group scans whole.
+        # span them — concatenate so each (conv, chunk) group scans whole
         chunks = list(batches)
         if not chunks:
             return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        # sort in Python: factorize + integer lexsort beats the JVM's
-        # row-based string-key Sort by ~20% of whole-pipeline time (the JVM
-        # side is the saturated resource; Python has headroom)
-        codes, _ = pd.factorize(pdf[cfg.conv_col])
-        keys = [pdf[cfg.order_col].to_numpy(), pdf["chunk_id"].to_numpy()]
-        if cfg.stream is not None:
-            scodes, _ = pd.factorize(pdf[cfg.stream])
-            keys.insert(1, scodes)
-        order = np.lexsort(tuple(keys) + (codes,))
-        pdf = pdf.take(order).reset_index(drop=True)
-        if scan_fn is _scan_partition_fused:
-            yield scan_fn(pdf, cfg, rules, msg_field, emit_text)
-        else:
-            yield scan_fn(pdf, cfg, rules, msg_field)
+        tbl = pa.Table.from_batches(chunks)
+        out = _scan_partition_fused_arrow(tbl, cfg, rules, msg_field, emit_text)
+        yield from out.to_batches()
 
-    return df.repartition(*group_cols).mapInPandas(run, schema=out_schema)
+    if cfg.input_clustered:
+        # caller asserts each input partition holds whole conversations
+        # (bucketed/SPJ layout): no grouping exchange at all
+        return df.mapInArrow(run, schema=out_schema)
+    group_cols = cfg.group_keys() + ["chunk_id"]
+    return df.repartition(*group_cols).mapInArrow(run, schema=out_schema)

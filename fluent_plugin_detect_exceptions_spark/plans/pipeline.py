@@ -2,7 +2,7 @@
 route → aggregate (SURVEY §3.1 hot path, Spark-first).
 
 Shuffle budget (north rule 'bounded-shuffle'):
-  1. hash exchange on (conv_id[, stream], chunk_id) for the applyInPandas
+  1. hash exchange on (conv_id[, stream], chunk_id) for the mapInArrow
      segmentation — the salted key spreads skewed conversations;
   2. hash exchange on (conv_id[, stream], seg_start_turn) for the coalesce
      groupBy — segment keys are fine-grained, so no residual skew;
@@ -15,9 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
-from ..operators.coalesce import coalesce_partials, coalesce_segments
+from ..operators.coalesce import coalesce_partials
 from ..operators.enrich import enrich_with_lang
-from ..operators.route import sink_counts, with_out_tag, with_sink
+from ..operators.route import detect_sink_counts, with_out_tag, with_sink
 from ..operators.segmenter import segment
 from ..rules import compile_rules
 
@@ -27,11 +27,11 @@ def slim_split(df: DataFrame, cfg: PipelineConfig, msg_field: str | None):
     input into the columns the scan stage actually consumes and a narrow
     ride table of first-row fields keyed by (group keys, first_turn_idx).
     Returns ``(stage_df, ride_df)``; ``ride_df`` is None when the rewrite is
-    inactive (forced off, per-row path, clustered input, no message field,
-    or nothing to drop) and the caller proceeds unchanged."""
+    inactive (forced off, clustered input, no message field, or nothing to
+    drop) and the caller proceeds unchanged."""
     active = cfg.slim_stage
     if active is None:
-        active = cfg.fuse_coalesce and not cfg.input_clustered and msg_field is not None
+        active = not cfg.input_clustered and msg_field is not None
     if not active:
         return df, None
     keep = cfg.scan_columns(df.columns, msg_field)
@@ -97,13 +97,8 @@ def detect_exceptions(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
                 f"({d['__n']}x); dedupe the input on (conv[, stream], turn) "
                 f"or set slim_stage=False"
             )
-    seg = segment(stage_df, cfg, rules)
-    if cfg.fuse_coalesce:
-        grouped = coalesce_partials(seg, cfg, msg_field)
-    else:
-        grouped = coalesce_segments(seg, cfg, msg_field)
-    routed = with_sink(with_out_tag(rejoin_ride(grouped, ride, cfg), cfg))
-    return routed
+    grouped = coalesce_partials(segment(stage_df, cfg, rules), cfg, msg_field)
+    return with_sink(with_out_tag(rejoin_ride(grouped, ride, cfg), cfg))
 
 
 def detect_exceptions_enriched(df: DataFrame, cfg: PipelineConfig, spark: SparkSession) -> DataFrame:
@@ -111,19 +106,14 @@ def detect_exceptions_enriched(df: DataFrame, cfg: PipelineConfig, spark: SparkS
 
 
 def detect_with_counts(df: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
-    """(routed records, per-sink counts).  The counts leg uses the fused
-    2-exchange fast path (``route.detect_sink_counts``) whenever the fused
-    stage is on: counts never read ride-along columns, so they should not
-    pay the coalesce groupBy or the slim-stage rejoin (VERDICT r3 item 6).
+    """(routed records, per-sink counts).  The counts leg uses the
+    2-exchange fast path (``route.detect_sink_counts``): counts never read
+    ride-along columns, so they should not pay the coalesce groupBy or the
+    slim-stage rejoin (VERDICT r3 item 6).
 
     The two legs are INDEPENDENT plans over the same input: a caller that
     collects only counts runs just the cheap path; a caller that collects
     both runs the scan+segment stage twice (Spark has no cross-action CSE) —
     if you materialize ``routed`` anyway, derive counts from it with
     ``sink_counts(routed)`` (or from its written output) instead."""
-    routed = detect_exceptions(df, cfg)
-    if cfg.fuse_coalesce:
-        from ..operators.route import detect_sink_counts
-
-        return routed, detect_sink_counts(df, cfg)
-    return routed, sink_counts(routed)
+    return detect_exceptions(df, cfg), detect_sink_counts(df, cfg)

@@ -209,6 +209,19 @@ def test_carry_chaining_equals_single_scan(idxs, cuts, max_lines, max_bytes):
     assert got_emit.tolist() == full.emit.tolist()
 
 
+def _compose_scan(gw: np.ndarray) -> np.ndarray:
+    """Inclusive prefix composition: out[i, s] = state after rows 0..i given
+    entry state s.  Hillis–Steele doubling, O(|S|·log n) vectorized steps —
+    the reference ``fsm._trajectory`` is checked against."""
+    p = gw.copy()
+    step = 1
+    n = len(p)
+    while step < n:
+        p[step:] = np.take_along_axis(p[step:], p[:-step].astype(np.intp), axis=1)
+        step *= 2
+    return p
+
+
 def test_trajectory_matches_prefix_composition():
     """r6: the scan's hot loop evaluates the single known-entry trajectory
     (block tree reduction + lockstep walk) instead of the full Hillis-Steele
@@ -220,7 +233,7 @@ def test_trajectory_matches_prefix_composition():
             gw = rng.integers(0, n_states, size=(w, n_states)).astype(np.int8)
             for entry in range(min(n_states, 4)):
                 want = (
-                    fsm._compose_scan(gw)[:, entry]
+                    _compose_scan(gw)[:, entry]
                     if w
                     else np.empty(0, np.int8)
                 )

@@ -1,23 +1,27 @@
-"""Hypothesis differential of the two fused scan-stage implementations —
-Arrow (_scan_partition_fused_arrow) vs pandas (_scan_partition_fused) —
-called directly (no Spark session): randomized line mixes incl. nulls,
-chunk/warm-up layouts, limits, FLB and stream demux must agree exactly."""
+"""Hypothesis differential of the Arrow scan stage
+(``_scan_partition_fused_arrow``) against the pure-Python oracle
+(``oracle.Accumulator``), called directly (no Spark session): randomized line
+mixes incl. nulls, limits, FLB, timeout gaps and stream demux, on the
+whole-conversation layout and on the chunked (warm-up) layout."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from hypothesis import given, settings
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from fluent_plugin_detect_exceptions_spark import fixtures as fx
 from fluent_plugin_detect_exceptions_spark.config import PipelineConfig
+from fluent_plugin_detect_exceptions_spark.functions.classify import classify
+from fluent_plugin_detect_exceptions_spark.operators import fsm
 from fluent_plugin_detect_exceptions_spark.operators.segmenter import (
-    _scan_partition_fused,
     _scan_partition_fused_arrow,
 )
-from fluent_plugin_detect_exceptions_spark.rules import compile_rules
+from fluent_plugin_detect_exceptions_spark.oracle import Accumulator
+from fluent_plugin_detect_exceptions_spark.rules import FAMILIES, compile_rules
 
 LINE_POOL = (
     fx.lines(fx.JAVA_EXC)
@@ -28,42 +32,98 @@ LINE_POOL = (
 )
 
 RULES = compile_rules(("all",))
+BASE_TS = 1_700_000_000
 
 
-def build_partition(idxs, n_convs, chunk, warmup, with_stream):
-    """Rows for n_convs conversations playing the idx sequence, with local
-    chunk/warm-up derivation mirroring _with_chunks, in shuffled order."""
-    rows = []
-    for c in range(n_convs):
-        for t, i in enumerate(idxs):
-            text = LINE_POOL[(i + c) % len(LINE_POOL)]
-            base = {
-                "conv_id": f"c{c}",
-                "turn_idx": t,
-                "role": "u" if t % 2 == 0 else "a",
-                "text": text,
-                "tool": f"t{t % 2}" if with_stream else "t0",
-                "ts": 1_700_000_000 + t,
-            }
-            ch = t // chunk
-            rows.append(dict(base, chunk_id=ch, __warmup=False))
-            if t % chunk >= chunk - warmup:
-                rows.append(dict(base, chunk_id=ch + 1, __warmup=True))
-    rng = np.random.RandomState(len(rows))
-    order = rng.permutation(len(rows))
-    pdf = pd.DataFrame([rows[i] for i in order])
-    return pdf
+def conv_rows(texts_by_conv, with_stream):
+    """One row per (conversation, turn).  Every fifth turn comes 3 s after
+    its predecessor instead of 1 s, so a 2 s flush interval fires."""
+    return [
+        {
+            "conv_id": f"c{c}",
+            "turn_idx": t,
+            "role": "u" if t % 2 == 0 else "a",
+            "text": text,
+            "tool": f"t{t % 2}" if with_stream else "t0",
+            "ts": BASE_TS + t + 2 * (t // 5),
+        }
+        for c, texts in enumerate(texts_by_conv)
+        for t, text in enumerate(texts)
+    ]
 
 
-def normalize(df: pd.DataFrame) -> list[tuple]:
-    cols = sorted(df.columns)
+def stage_table(rows, chunk=0, warmup=0):
+    """The scan stage's input partition for ``rows``: whole conversations
+    (``chunk=0``: chunk 0, no warm-up rows — the pre-pass fallback route) or
+    the chunk/warm-up rows ``segmenter._with_chunks`` derives, in shuffled
+    order."""
     out = []
-    for _, r in df.iterrows():
-        out.append(tuple(None if pd.isna(r[c]) else r[c] for c in cols))
-    return sorted(out, key=lambda t: tuple((v is None, str(v)) for v in t))
+    for r in rows:
+        t = r["turn_idx"]
+        ch = t // chunk if chunk else 0
+        out.append(dict(r, chunk_id=ch, __warmup=False))
+        if chunk and t % chunk >= chunk - warmup:
+            out.append(dict(r, chunk_id=ch + 1, __warmup=True))
+    order = np.random.RandomState(len(out)).permutation(len(out))
+    pdf = pd.DataFrame([out[i] for i in order])
+    pdf["ts"] = pd.to_datetime(pdf["ts"], unit="s")
+    return pa.Table.from_pandas(pdf, preserve_index=False)
 
 
-@settings(max_examples=40, deadline=None)
+def oracle_records(rows, cfg):
+    """Accumulator output per logical stream (conv[, stream])."""
+    by_key = {}
+    for r in rows:
+        by_key.setdefault(tuple(r[k] for k in cfg.group_keys()), []).append(r)
+    out = {}
+    for key, rs in by_key.items():
+        acc = Accumulator(
+            "text", cfg.languages,
+            force_line_breaks=cfg.force_line_breaks,
+            max_lines=cfg.max_lines,
+            max_bytes=cfg.max_bytes,
+            flush_interval=cfg.multiline_flush_interval,
+        )
+        for r in sorted(rs, key=lambda x: x["turn_idx"]):
+            acc.push(r["ts"], dict(r))
+        acc.force_flush()
+        out[key] = sorted(
+            (e.record["turn_idx"], e.record["role"], e.record["text"], e.lang, e.n_lines)
+            for e in acc.out
+        )
+    return out
+
+
+def stitched_records(partials: pa.Table, cfg):
+    """``coalesce.coalesce_partials`` in plain Python: stitch the partials
+    per (conv[, stream], seg_start_turn) in ``part_min_turn`` order.
+    Returns (records per logical stream, streams with an unsynced partial)."""
+    segs, unsynced = {}, set()
+    for p in partials.to_pylist():
+        key = tuple(p[k] for k in cfg.group_keys())
+        segs.setdefault((key, p["seg_start_turn"]), []).append(p)
+        if not p["sync_ok"]:
+            unsynced.add(key)
+    out = {}
+    for (key, sst), ps in segs.items():
+        ps.sort(key=lambda p: p["part_min_turn"])
+        first = ps[0]
+        n = sum(p["n_part"] for p in ps)
+        text = (
+            first["text_part"] if n == 1
+            else "".join(p["text_part"] for p in ps if p["text_part"] is not None)
+        )
+        lang = FAMILIES[first["lang_id"]] if first["lang_id"] >= 0 else None
+        out.setdefault(key, []).append((sst, first["role"], text, lang, n))
+    return {k: sorted(v) for k, v in out.items()}, unsynced
+
+
+def run_stage(rows, cfg, chunk=0, warmup=0):
+    tbl = stage_table(rows, chunk, warmup)
+    return stitched_records(_scan_partition_fused_arrow(tbl, cfg, RULES, "text"), cfg)
+
+
+@settings(max_examples=60, deadline=None)
 @given(
     idxs=st.lists(st.integers(0, len(LINE_POOL) - 1), min_size=1, max_size=60),
     chunk=st.sampled_from([8, 16, 64]),
@@ -73,7 +133,11 @@ def normalize(df: pd.DataFrame) -> list[tuple]:
     gap=st.booleans(),
     with_stream=st.booleans(),
 )
-def test_arrow_stage_equals_pandas_stage_randomized(
+# force_line_breaks on a segment-first line without a newline (""): the
+# prepend must apply to non-first members only
+@example(idxs=[65, 69, 0, 1], chunk=64, max_lines=1000, max_bytes=0,
+         flb=True, gap=False, with_stream=False)
+def test_arrow_stage_equals_oracle_randomized(
     idxs, chunk, max_lines, max_bytes, flb, gap, with_stream
 ):
     cfg = PipelineConfig(
@@ -85,33 +149,49 @@ def test_arrow_stage_equals_pandas_stage_randomized(
         multiline_flush_interval=2.0 if gap else None,
         stream="tool" if with_stream else None,
     )
-    pdf = build_partition(idxs, n_convs=2, chunk=chunk, warmup=cfg.warmup,
-                          with_stream=with_stream)
-    pdf["ts"] = pd.to_datetime(pdf["ts"], unit="s")
-    # the pandas stage consumes a pre-sorted partition (segmenter.run sorts);
-    # the arrow stage sorts internally and takes the shuffled table as-is
-    codes, _ = pd.factorize(pdf["conv_id"])
-    keys = [pdf["turn_idx"].to_numpy(), pdf["chunk_id"].to_numpy()]
-    if with_stream:
-        scodes, _ = pd.factorize(pdf["tool"])
-        keys.insert(1, scodes)
-    order = np.lexsort(tuple(keys) + (codes,))
-    sorted_pdf = pdf.take(order).reset_index(drop=True)
-    pandas_out = _scan_partition_fused(sorted_pdf, cfg, RULES, "text")
-    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-    arrow_out = _scan_partition_fused_arrow(tbl, cfg, RULES, "text").to_pandas()
-    assert normalize(pandas_out) == normalize(arrow_out)
+    rows = conv_rows(
+        [[LINE_POOL[(i + c) % len(LINE_POOL)] for i in idxs] for c in range(2)],
+        with_stream,
+    )
+    want = oracle_records(rows, cfg)
+
+    # whole conversations: exact, and every partial synced
+    got, unsynced = run_stage(rows, cfg)
+    assert not unsynced
+    assert got == want
+
+    # chunked: a stream whose warm-ups all synchronized is exact; any other
+    # difference must be flagged sync_ok=False (the pre-pass routes such
+    # conversations whole)
+    got, unsynced = run_stage(rows, cfg, chunk, cfg.warmup)
+    for key, recs in want.items():
+        if got.get(key) != recs:
+            assert key in unsynced, key
+    assert set(got) <= set(want)
+
+
+def test_arrow_stage_sync_point_before_warmup_end():
+    """The warm-up synchronizes at its 2nd of 4 rows; the two warm-up rows
+    after the sync point are scanned (they open a Java trace) but belong to
+    the previous chunk, so they must not be emitted again."""
+    plain = fx.lines(fx.ARBITRARY_TEXT)
+    texts = [plain[i % len(plain)] for i in range(14)] + fx.lines(fx.JAVA_EXC)[:6] + plain
+    cfg = PipelineConfig(chunk_size=16, warmup=4)
+    warmup_lines = texts[12:16]
+    cls, g_tab, _, _ = classify(pd.Series(warmup_lines, dtype=object), RULES)
+    assert fsm.subset_sync(cls, g_tab) == 1
+
+    rows = conv_rows([texts], with_stream=False)
+    got, unsynced = run_stage(rows, cfg, cfg.chunk_size, cfg.warmup)
+    assert not unsynced
+    assert got == oracle_records(rows, cfg)
 
 
 def test_arrow_stage_rejects_null_order_column():
     """A null turn_idx would cast to an undefined int64 and silently corrupt
     the group sort; the Arrow stage refuses it instead."""
-    import pytest
-
     cfg = PipelineConfig(chunk_size=8, warmup=2)
-    pdf = build_partition([0, 1, 2, 3], n_convs=1, chunk=8, warmup=2, with_stream=False)
-    pdf["ts"] = pd.to_datetime(pdf["ts"], unit="s")
-    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    tbl = stage_table(conv_rows([[LINE_POOL[i] for i in range(4)]], False), 8, 2)
     turns = tbl.column("turn_idx").to_pylist()
     turns[1] = None
     tbl = tbl.set_column(

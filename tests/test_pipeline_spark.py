@@ -293,17 +293,6 @@ def test_skew_tail_chunks_without_fallback(spark):
     assert spark_routed(df, cfg) == spark_routed(df, PipelineConfig(chunk_size=0))
 
 
-def test_fused_equals_unfused_coalesce(spark):
-    df = synth_transcripts(spark, 15, repeats=2)
-    fused = spark_routed(df, PipelineConfig(fuse_coalesce=True, chunk_size=64, warmup=32))
-    unfused = spark_routed(df, PipelineConfig(fuse_coalesce=False, chunk_size=64, warmup=32))
-    assert fused == unfused
-    # and with limits + force_line_breaks
-    cfgf = PipelineConfig(fuse_coalesce=True, max_lines=3)
-    cfgu = PipelineConfig(fuse_coalesce=False, max_lines=3)
-    assert spark_routed(df, cfgf) == spark_routed(df, cfgu)
-
-
 def test_input_clustered_bucketed_table_elides_shuffle(spark, tmp_path):
     """input_clustered over a conv_id-bucketed table: shuffle #1 disappears
     (no Exchange below the scan stage) and results are identical — the plain-
@@ -341,10 +330,11 @@ def test_input_clustered_bucketed_table_elides_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bucketed_transcripts")
 
 
-def test_arrow_stage_equals_pandas_stage(spark):
-    """The mapInArrow fused stage (default) must be row-identical to the
-    pandas fused stage across chunking, limits, FLB and gap configs."""
+def test_arrow_stage_equals_oracle(spark):
+    """The mapInArrow stage must be row-identical to the pure-Python oracle
+    across chunking, limits, FLB, gap and stream-demux configs."""
     df = synth_transcripts(spark, 12, repeats=2)
+    rows = local_rows(12, 2)
     for kw in (
         dict(),
         dict(chunk_size=64, warmup=16),
@@ -354,9 +344,8 @@ def test_arrow_stage_equals_pandas_stage(spark):
         dict(multiline_flush_interval=5.0),
         dict(stream="tool", chunk_size=64, warmup=16),
     ):
-        a = spark_routed(df, PipelineConfig(arrow_stage=True, **kw))
-        b = spark_routed(df, PipelineConfig(arrow_stage=False, **kw))
-        assert a == b, kw
+        cfg = PipelineConfig(**kw)
+        assert spark_routed(df, cfg) == oracle_routed(group_rows(rows, cfg), cfg), kw
 
 
 def test_slim_stage_equals_ride_through(spark):
@@ -480,33 +469,6 @@ def test_detect_with_counts_counts_leg_is_fast_path(spark):
     fast = {r["sink"]: r["n"] for r in counts.collect()}
     full = {r["sink"]: r["n"] for r in sink_counts(routed).collect()}
     assert fast == full
-
-
-def test_window_segment_ids_equal_seg_start_turn(spark):
-    # the window running-sum segment id and the (conv, seg_start_turn) key
-    # induce the same partition of rows into segments
-    from fluent_plugin_detect_exceptions_spark.operators.coalesce import (
-        segment_ids_window,
-    )
-    from fluent_plugin_detect_exceptions_spark.operators.segmenter import segment
-    from fluent_plugin_detect_exceptions_spark.rules import compile_rules
-
-    df = synth_transcripts(spark, 10, repeats=2)
-    cfg = PipelineConfig(fuse_coalesce=False, chunk_size=64, warmup=32)
-    seg = segment(df, cfg, compile_rules(cfg.languages))
-    rows = segment_ids_window(seg, cfg).select(
-        "conv_id", "turn_idx", "seg_start_turn", "segment_id"
-    ).collect()
-    by_window = {}
-    by_sst = {}
-    for r in rows:
-        by_window.setdefault((r["conv_id"], r["segment_id"]), set()).add(
-            (r["conv_id"], r["turn_idx"])
-        )
-        by_sst.setdefault((r["conv_id"], r["seg_start_turn"]), set()).add(
-            (r["conv_id"], r["turn_idx"])
-        )
-    assert sorted(by_window.values(), key=sorted) == sorted(by_sst.values(), key=sorted)
 
 
 def _hole_and_cont_rows():
