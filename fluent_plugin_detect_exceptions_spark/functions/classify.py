@@ -32,7 +32,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from ..rules import N_STATES, START, CompiledRules, to_re2
+from ..rules import N_STATES, START, CompiledRules
 
 NIL_CLS = -1  # mask class of null/absent messages
 
@@ -49,8 +49,8 @@ def match_bits(lines: pa.Array, rules: CompiledRules) -> np.ndarray:
     ``rules.patterns[j]`` matches ``lines[i]`` (unanchored search, Python
     ``re`` semantics).  Nulls match nothing."""
     bits = np.zeros(len(lines), dtype=np.uint64)
-    for j, pat in enumerate(rules.patterns):
-        hit = pc.match_substring_regex(lines, to_re2(pat)).fill_null(False)
+    for j, pat in enumerate(rules.re2):
+        hit = pc.match_substring_regex(lines, pat).fill_null(False)
         bits |= hit.to_numpy(zero_copy_only=False).astype(np.uint64) << np.uint64(j)
     ascii_ = pc.string_is_ascii(lines).fill_null(True).to_numpy(zero_copy_only=False)
     non_ascii = np.flatnonzero(~ascii_)

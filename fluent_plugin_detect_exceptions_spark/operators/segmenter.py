@@ -58,6 +58,21 @@ STATE_FAMILY_ID = np.array(
 _TURN_OFFSET = np.int64(1) << 40  # group separator for the global cummax
 
 
+def validate_input(columns, cfg: PipelineConfig) -> None:
+    """Refuse an input schema that lacks a column the scan needs: the
+    conversation and order columns, and the event-time column when the gap
+    flush is on.  Shared by the batch and streaming entry points."""
+    if cfg.multiline_flush_interval is not None and cfg.ts_col not in columns:
+        raise ValueError(
+            f"multiline_flush_interval requires the event-time column "
+            f"{cfg.ts_col!r}, which is missing from the input schema {columns}"
+        )
+    if cfg.order_col not in columns or cfg.conv_col not in columns:
+        raise ValueError(
+            f"input schema {columns} lacks {cfg.conv_col!r}/{cfg.order_col!r}"
+        )
+
+
 def ride_along_cols(df_columns, cfg: PipelineConfig, msg_field: str | None) -> list[str]:
     """Columns that ride along unchanged (first-row semantics at flush)."""
     skip = {cfg.conv_col, cfg.order_col, "chunk_id", "__warmup"}
@@ -155,19 +170,29 @@ def _sorted_groups(tbl, conv: str, stream: str | None, chunk: np.ndarray,
 
 
 def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
-                                msg_field: str | None, emit_text: bool = True):
+                                msg_field: str | None, emit_text: bool = True,
+                                carry: tuple[fsm.ScanCarry, int | None] | None = None):
     """Arrow-native fused scan+coalesce: the hot stage of the pipeline.
 
     The strings stay dictionary-encoded in C++ and are classified and
     concatenated there (only non-ASCII distinct lines reach Python ``re``),
     row ordering is pure numpy index arithmetic, and ride-along columns are
-    gathered with ``pyarrow.compute.take`` at segment-first positions only."""
+    gathered with ``pyarrow.compute.take`` at segment-first positions only.
+
+    ``carry`` continues a scan the previous call left off (the streaming
+    path, one group per table): the FSM/buffer carry and the last event
+    time in microseconds (None without a flush interval).  The first row is
+    then not force-reset, its gap is measured against the carried time,
+    rows before the first segment start form a partial with
+    ``seg_start_turn == -1``, and the return value is ``(partials,
+    out_carry)`` with ``out_carry`` of the same shape."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     n = tbl.num_rows
     if n == 0:
-        return _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
+        out = _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
+        return out if carry is None else (out, carry)
 
     turn = _int64_col(tbl, cfg.order_col)
     chunk = _int64_col(tbl, "chunk_id")
@@ -217,7 +242,8 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
 
     ranges = [(s, e) for s, e in scan_ranges if e > s]
     if not ranges:
-        return _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
+        out = _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
+        return out if carry is None else (out, carry)
     idx = np.concatenate([np.arange(s, e) for s, e in ranges])
     m = len(idx)
     first_of_group = np.zeros(m, dtype=bool)
@@ -233,21 +259,29 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
     rawlen = rawlen_row[orig]
     has_nl = hasnl_row[orig]
     gap = np.zeros(m, dtype=bool)
-    if cfg.multiline_flush_interval is not None and m > 1:
+    last_ts = None
+    if cfg.multiline_flush_interval is not None and (m > 1 or carry is not None):
+        interval_us = cfg.multiline_flush_interval * 1_000_000
         tsv = (
             tbl.column(cfg.ts_col).combine_chunks().cast(pa.timestamp("us"))
             .to_numpy(zero_copy_only=False).astype("datetime64[us]").astype(np.int64)
         )
         tsg = tsv[orig]
-        gap[1:] = (tsg[1:] - tsg[:-1]) > cfg.multiline_flush_interval * 1_000_000
+        gap[1:] = (tsg[1:] - tsg[:-1]) > interval_us
         gap[first_of_group] = False
-    gap |= first_of_group
+        if carry is not None:
+            if carry[1] is not None:
+                gap[0] = tsg[0] - carry[1] > interval_us
+            last_ts = int(tsg[-1])
+    if carry is None:
+        gap |= first_of_group
 
     res = fsm.scan(
         cls_s[idx], g_tab, b_tab, rawlen, has_nl, gap,
         force_line_breaks=cfg.force_line_breaks,
         max_lines=cfg.max_lines,
         max_bytes=cfg.max_bytes,
+        entry_carry=None if carry is None else carry[0],
     )
 
     turns = turn[orig]
@@ -259,7 +293,8 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
     keep = res.emit & ~warm_s[idx]
     k_pos = np.flatnonzero(keep)
     if len(k_pos) == 0:
-        return _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
+        out = _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
+        return out if carry is None else (out, (res.carry, last_ts))
     k_gidx = gidx[k_pos]
     k_sst = sst[k_pos]
     k_turn = turns[k_pos]
@@ -323,7 +358,8 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
     add("sync_ok", pa.array(sync_ok[idx][k_pos][starts], pa.bool_()))
     for c in ride_along_cols(tbl.schema.names, cfg, msg_field):
         add(c, pc.take(tbl.column(c).combine_chunks(), firsts_orig))
-    return pa.table(cols, names=names)
+    out = pa.table(cols, names=names)
+    return out if carry is None else (out, (res.carry, last_ts))
 
 
 def _with_chunks(df: DataFrame, cfg: PipelineConfig, fallback_convs) -> DataFrame:
@@ -480,15 +516,7 @@ def segment(
     per-segment concat for text nobody reads (r6)."""
     rules = rules or compile_rules(cfg.languages)
     msg_field = cfg.resolve_message_field(df.columns)
-    if cfg.multiline_flush_interval is not None and cfg.ts_col not in df.columns:
-        raise ValueError(
-            f"multiline_flush_interval requires the event-time column "
-            f"{cfg.ts_col!r}, which is missing from the input schema {df.columns}"
-        )
-    if cfg.order_col not in df.columns or cfg.conv_col not in df.columns:
-        raise ValueError(
-            f"input schema {df.columns} lacks {cfg.conv_col!r}/{cfg.order_col!r}"
-        )
+    validate_input(df.columns, cfg)
 
     chunking = cfg.chunking_active
     if chunking and not cfg.assume_long_convs:

@@ -246,12 +246,16 @@ class CompiledRules:
     ``patterns`` is the distinct pattern list in first-use order;
     ``by_state[s]`` is the ordered list of ``(pattern_idx, to_state_idx)``
     for state index ``s`` (dedupe semantics of exception_detector.rb:198).
+    ``compiled`` and ``re2`` are each pattern's Python ``re`` and RE2 forms,
+    built once: the streaming path classifies every group of every
+    micro-batch.
     """
 
     languages: tuple[str, ...]
     patterns: tuple[str, ...]
     by_state: tuple[tuple[tuple[int, int], ...], ...]  # indexed by state idx
     compiled: tuple[re.Pattern, ...] = field(repr=False, default=())
+    re2: tuple[str, ...] = field(repr=False, default=())
 
     @property
     def n_patterns(self) -> int:
@@ -295,6 +299,7 @@ def compile_rules(languages=("all",)) -> CompiledRules:
         patterns=patterns,
         by_state=tuple(tuple(rs) for rs in per_state),
         compiled=tuple(re.compile(p) for p in patterns),
+        re2=tuple(to_re2(p) for p in patterns),
     )
 
 

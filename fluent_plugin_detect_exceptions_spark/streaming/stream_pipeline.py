@@ -1,24 +1,38 @@
 """Structured Streaming variant of the exception pipeline.
 
-The batch north rule doesn't need streaming, but the reference is a stream
-plugin, so the capability is provided: ``readStream`` source →
-``applyInPandasWithState`` per conversation → routed micro-batch output.
+``readStream`` source → ``applyInPandasWithState`` per FSM stream group
+(``cfg.group_keys()``: the conversation, and the demux column when
+``cfg.stream`` is set) → the batch pipeline's records, with ``out_tag`` and
+``sink`` added in the JVM by ``route.with_out_tag``/``route.with_sink``.
 
-Per-group state is the FSM/buffer carry (fsm.ScanCarry) plus the open
-segment's first-row fields and accumulated text.  Each micro-batch is
-classified with the same vectorized pattern bank and scanned with
-``fsm.scan(entry_carry=...)`` — the carry-chaining invariant (tested in
-test_fsm.py) guarantees micro-batch boundaries are invisible, i.e. streaming
-output ≡ batch output on the same rows.  The idle-timeout flush
-(out_detect_exceptions.rb:116-132) maps to GroupStateTimeout.ProcessingTimeTimeout
-*plus* the event-time gap predicate within batches.
+Each micro-batch of one group runs through the batch kernel's partials step
+(``segmenter._scan_partition_fused_arrow``) with the previous batch's
+``fsm.ScanCarry`` and last event time, so classify, the FSM scan, the gap
+flush, the limits and the per-segment concat are the batch code.  The state
+function only stitches the partials it returns: rows before the first
+segment start (``seg_start_turn == -1``) continue the open segment carried in
+state; a carried segment with no such continuation closes; the last partial
+stays in state while the out-carry is open; every other partial is a
+finished record.  The carry chains exactly (``fsm.scan``'s ``entry_carry``;
+tests/test_streaming.py drives this function against the oracle at random
+micro-batch cuts), so micro-batch boundaries are invisible: the stream emits
+the batch records, minus each group's segment still open at the end.
+
+The idle-timeout flush (out_detect_exceptions.rb:116-132) maps to
+``GroupStateTimeout.ProcessingTimeTimeout`` (or the event-time watermark)
+on top of the in-batch gap predicate.  Spark follows every batch of a
+processing-time-timeout query with a no-data batch, so such a query never
+terminates under an ``availableNow`` trigger.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
@@ -30,251 +44,154 @@ from pyspark.sql.types import (
 )
 
 from ..config import PipelineConfig
-from ..functions.classify import classify
 from ..operators import fsm
-from ..operators.segmenter import STATE_FAMILY_ID
+from ..operators.route import with_out_tag, with_sink
+from ..operators.segmenter import (
+    _scan_partition_fused_arrow,
+    ride_along_cols,
+    validate_input,
+)
 from ..rules import FAMILIES, CompiledRules, compile_rules
 
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("first_turn_idx", LongType(), False),
-        StructField("role", StringType(), True),
-        StructField("tool", StringType(), True),
-        StructField("ts", LongType(), True),
-        StructField("text", StringType(), True),
+#: State-format version.  v2 switched ``last_ts`` from epoch seconds to
+#: microseconds; v3 keeps the open segment as a record with the input's
+#: ride-along columns.  Either change alters the state schema, so Spark's
+#: checkpoint state-schema check rejects an older checkpoint on resume; the
+#: guard below discards (not misreads) state of a different version that is
+#: schema-compatible.
+STATE_VERSION = 3
+
+#: lang_id → family name; lang_id -1 indexes the trailing None
+_LANGS = np.array([*FAMILIES, None], dtype=object)
+
+
+def record_fields(schema: StructType, cfg: PipelineConfig, msg_field: str | None) -> list:
+    """One record's fields after the group keys, as ``coalesce_partials``
+    gives them to the batch path."""
+    fields = [StructField("first_turn_idx", LongType(), False)]
+    fields += [schema[c] for c in ride_along_cols(schema.names, cfg, msg_field)]
+    if msg_field is not None:
+        fields.append(StructField(msg_field, StringType(), True))
+    return fields + [
         StructField("n_lines", LongType(), False),
         StructField("lang", StringType(), True),
-        StructField("sink", StringType(), False),
     ]
-)
-
-#: State-format version (ADVICE r3): v2 switched ``last_ts`` from epoch
-#: SECONDS to MICROSECONDS.  The explicit ``ver`` field makes checkpoints
-#: written by a different format fail LOUDLY — adding the field changed the
-#: state schema, so Spark's checkpoint state-schema check rejects a pre-v2
-#: resume outright; any future unit/semantics change bumps this constant and
-#: the guard below discards (not misreads) stale state.
-STATE_VERSION = 2
-
-#: state: FSM carry + open-segment accumulator
-STATE_SCHEMA = StructType(
-    [
-        StructField("ver", IntegerType(), False),
-        StructField("fsm_state", IntegerType(), False),
-        StructField("open", BooleanType(), False),
-        StructField("cnt", LongType(), False),
-        StructField("nbytes", LongType(), False),
-        StructField("prev_status", IntegerType(), False),
-        StructField("first_turn", LongType(), True),
-        StructField("first_role", StringType(), True),
-        StructField("first_tool", StringType(), True),
-        StructField("first_ts", LongType(), True),
-        StructField("msgs", StringType(), True),
-        StructField("lang_id", IntegerType(), False),
-        StructField("last_ts", LongType(), True),
-    ]
-)
-
-_EMPTY_STATE = (
-    STATE_VERSION, 0, False, 0, 0, int(fsm.NO_TRACE),
-    None, None, None, None, None, -1, None,
-)
 
 
-def _lang_of(lang_id: int) -> str | None:
-    return FAMILIES[lang_id] if lang_id >= 0 else None
-
-
-def _mk_out(conv, first_turn, role, tool, ts, text, n, lang_id):
-    lang = _lang_of(lang_id)
-    return (
-        conv,
-        int(first_turn),
-        role,
-        tool,
-        None if ts is None else int(ts),
-        text,
-        int(n),
-        lang,
-        f"lang_{lang}" if lang else "passthrough",
+def output_schema(schema: StructType, cfg: PipelineConfig, msg_field: str | None) -> StructType:
+    """The state function's output for input ``schema``: the group keys, the
+    record fields and ``sync_ok`` (always true: a stream never chunks)."""
+    return StructType(
+        [schema[k] for k in cfg.group_keys()]
+        + record_fields(schema, cfg, msg_field)
+        + [StructField("sync_ok", BooleanType(), False)]
     )
 
 
-def make_state_func(cfg: PipelineConfig, rules: CompiledRules | None = None,
-                    event_time: bool = False):
+def state_schema(schema: StructType, cfg: PipelineConfig, msg_field: str | None) -> StructType:
+    """Per-group state: the version, the ``fsm.ScanCarry`` fields in order,
+    the last event time (µs) and the open segment's record (null when the
+    carry is closed)."""
+    seg = StructType(
+        [StructField(f.name, f.dataType, True) for f in record_fields(schema, cfg, msg_field)]
+    )
+    return StructType(
+        [
+            StructField("ver", IntegerType(), False),
+            StructField("fsm_state", IntegerType(), False),
+            StructField("open", BooleanType(), False),
+            StructField("cnt", LongType(), False),
+            StructField("nbytes", LongType(), False),
+            StructField("prev_status", IntegerType(), False),
+            StructField("last_ts", LongType(), True),
+            StructField("seg", seg, True),
+        ]
+    )
+
+
+def make_state_func(cfg: PipelineConfig, schema: StructType,
+                    rules: CompiledRules | None = None, event_time: bool = False):
+    """The ``applyInPandasWithState`` function for input ``schema``."""
     rules = rules or compile_rules(cfg.languages)
+    msg_field = cfg.resolve_message_field(schema.names)
+    keys = cfg.group_keys()
+    seg_names = [f.name for f in record_fields(schema, cfg, msg_field)]
+    # tz-naive timestamps: Spark hands the function session-local naive
+    # values and reads them back the same way
+    in_arrow = to_arrow_schema(schema, timestamp_utc=False)
+    out_arrow = to_arrow_schema(output_schema(schema, cfg, msg_field), timestamp_utc=False)
+    # the partials column each output column comes from
+    src = {"first_turn_idx": "seg_start_turn", msg_field: "text_part", "n_lines": "n_part"}
     timeout_ms = (
         int(cfg.multiline_flush_interval * 1000)
         if cfg.multiline_flush_interval is not None
         else None
     )
 
-    def func(key, pdfs, state: GroupState):
-        conv = key[0]
-        rows = []
+    def records(parts) -> pa.Table:
+        lang = pa.array(_LANGS[parts.column("lang_id").to_numpy()], pa.string())
+        cols = [lang if c == "lang" else parts.column(src.get(c, c)) for c in out_arrow.names]
+        return pa.Table.from_arrays(cols, schema=out_arrow)
 
+    def carried(key, seg) -> dict:
+        return {**dict(zip(keys, key)), **dict(zip(seg_names, seg)), "sync_ok": True}
+
+    def func(key, pdfs, state: GroupState):
+        st = state.get if state.exists else None
+        if st is not None and st[0] != STATE_VERSION:
+            # stale-format state (schema-compatible but semantically
+            # older): discard rather than misread — at most one in-flight
+            # segment is lost instead of a corrupted one emitted
+            st = None
         if state.hasTimedOut:
-            (_ver, fsm_state, opened, cnt, nbytes, prev_status, ft, fr_, fo, fts,
-             msgs, lang_id, _last) = state.get
-            if opened and cnt > 0:
-                rows.append(_mk_out(conv, ft, fr_, fo, fts, msgs, cnt, lang_id))
             state.remove()
-            yield pd.DataFrame(rows, columns=OUTPUT_SCHEMA.names)
+            if st is not None and st[2]:
+                yield pa.Table.from_pylist([carried(key, st[7])], schema=out_arrow).to_pandas()
             return
 
-        st = state.get if state.exists else _EMPTY_STATE
-        if st[0] != STATE_VERSION:
-            # stale-format state (schema-compatible but semantically older):
-            # discard rather than misread — the carried trace re-opens from
-            # scratch, which loses at most one in-flight segment vs silently
-            # emitting a corrupted one
-            st = _EMPTY_STATE
-        (_ver, fsm_state, opened, cnt, nbytes, prev_status, ft, fr_, fo, fts,
-         msgs, lang_id, last_ts) = st
-        carry = fsm.ScanCarry(
-            state=fsm_state, open=bool(opened), count=int(cnt),
-            bytes=int(nbytes), prev_status=int(prev_status),
+        carry = (fsm.ScanCarry(*st[1:6]), st[6]) if st is not None else (fsm.ScanCarry(), None)
+        tbl = pa.Table.from_pandas(
+            pd.concat(list(pdfs), ignore_index=True), schema=in_arrow, preserve_index=False
         )
-
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(cfg.order_col, kind="mergesort").reset_index(drop=True)
-        n = len(pdf)
-        texts = pdf[cfg.message] if cfg.message in pdf.columns else pd.Series([None] * n)
-        cls, g_tab, b_tab, _ = classify(texts, rules)
-        rawlen = texts.str.len().fillna(0).to_numpy(np.int64)
-        has_nl = (texts.str.contains("\n", regex=False) == True).to_numpy(bool)  # noqa: E712 — null-safe without object-downcast fillna (pandas FutureWarning)
-        # MICROSECOND event times (code-review r3): second-truncation made
-        # the gap predicate coarser than the batch path's microsecond compare
-        # (stream/batch divergence on fractional-second gaps) and could set
-        # an event-time timeout below the current watermark for sub-second
-        # intervals.  State carries last_ts in µs; outputs convert to epoch
-        # seconds at emit.
-        tsv = (
-            pdf[cfg.ts_col].to_numpy(dtype="datetime64[us]").astype(np.int64)
-            if cfg.ts_col in pdf.columns
-            else np.zeros(n, dtype=np.int64)
+        tbl = tbl.append_column("chunk_id", pa.array(np.zeros(tbl.num_rows, np.int64)))
+        parts, (out, last_ts) = _scan_partition_fused_arrow(
+            tbl, cfg, rules, msg_field, carry=carry
         )
-        gap = np.zeros(n, dtype=bool)
-        if cfg.multiline_flush_interval is not None:
-            prev_ts = np.empty(n, dtype=np.int64)
-            prev_ts[0] = last_ts if last_ts is not None else tsv[0]
-            prev_ts[1:] = tsv[:-1]
-            gap = (tsv - prev_ts) > cfg.multiline_flush_interval * 1_000_000
-
-        res = fsm.scan(
-            cls, g_tab, b_tab, rawlen, has_nl, gap,
-            force_line_breaks=cfg.force_line_breaks,
-            max_lines=cfg.max_lines,
-            max_bytes=cfg.max_bytes,
-            entry_carry=carry,
+        recs = records(parts)
+        if carry[0].open:
+            rec = carried(key, st[7])
+            if recs.num_rows and recs.column("first_turn_idx")[0].as_py() == -1:
+                # rows before the first segment start continue the carried one
+                cont = recs.slice(0, 1).to_pylist()[0]
+                rec[msg_field] += cont[msg_field]
+                rec["n_lines"] += cont["n_lines"]
+                recs = recs.slice(1)
+            recs = pa.concat_tables([pa.Table.from_pylist([rec], schema=out_arrow), recs])
+        open_seg = None
+        if out.open:
+            last = recs.slice(recs.num_rows - 1).to_pylist()[0]
+            open_seg = tuple(last[c] for c in seg_names)
+            recs = recs.slice(0, recs.num_rows - 1)
+        state.update(
+            (STATE_VERSION, out.state, out.open, out.count, out.bytes,
+             out.prev_status, last_ts, open_seg)
         )
-
-        tarr = texts.to_numpy(dtype=object)
-        turns = pdf[cfg.order_col].to_numpy(np.int64)
-        roles = pdf["role"].tolist() if "role" in pdf.columns else [None] * n
-        tools = pdf["tool"].tolist() if "tool" in pdf.columns else [None] * n
-        seg = np.cumsum(res.seg_start)
-        row_lang = STATE_FAMILY_ID[res.state_after]
-
-        # A carried-open segment whose first continuation row starts a NEW
-        # segment (status no_trace/start_trace, a nil message, or a gap
-        # flush) closes with no rows in this batch: seg==0 is then empty and
-        # the loop below would never visit it.  Emit it here as a closed
-        # record (reference: the pending buffer force-flushes before such a
-        # row — exception_detector.rb:335-356).
-        if opened and cnt > 0 and bool(res.seg_start[0]):
-            rows.append(_mk_out(conv, ft, fr_, fo, fts, msgs, cnt, lang_id))
-
-        # rows with seg==0 continue the carried-open segment from state
-        for sid in range(0, int(seg[-1]) + 1):
-            mask = (seg == sid) & res.emit
-            idxs = np.flatnonzero(mask)
-            if sid == 0:
-                if idxs.size == 0:
-                    continue
-            elif idxs.size == 0:
-                continue
-            if sid == 0 and not opened:
-                continue
-            if sid == 0:
-                seg_first = (ft, fr_, fo, fts)
-                seg_msgs = msgs or ""
-                seg_cnt = int(cnt)
-                seg_lang = int(lang_id)
-            else:
-                f0 = int(idxs[0])
-                seg_first = (int(turns[f0]), roles[f0], tools[f0],
-                             int(tsv[f0]) // 1_000_000)
-                seg_msgs = ""
-                seg_cnt = 0
-                seg_lang = int(row_lang[f0])
-            # one ''.join per segment per batch, not seg_msgs += t per row —
-            # a giant trace in one micro-batch would otherwise go quadratic
-            # in the Python string concat (VERDICT r2)
-            tv = tarr[idxs]
-            vals = tv[pd.notna(tv)].tolist()
-            if cfg.force_line_breaks and vals:
-                vals = [
-                    ("\n" + t) if (seg_cnt + j > 0 and "\n" not in t) else t
-                    for j, t in enumerate(vals)
-                ]
-            if vals:
-                seg_msgs += "".join(vals)
-                seg_cnt += len(vals)
-            closed = sid < seg[-1] or not res.carry.open
-            if closed:
-                if seg_cnt == 0 and idxs.size:
-                    # nil pass-through rows: emit original (null text)
-                    for i in idxs:
-                        rows.append(
-                            _mk_out(conv, int(turns[i]), roles[int(i)], tools[int(i)],
-                                    int(tsv[int(i)]) // 1_000_000, None, 1, -1)
-                        )
-                elif seg_cnt > 0:
-                    rows.append(
-                        _mk_out(conv, seg_first[0], seg_first[1], seg_first[2],
-                                seg_first[3], seg_msgs, seg_cnt, seg_lang)
-                    )
-            else:
-                state.update(
-                    (
-                        STATE_VERSION, int(res.carry.state), True, seg_cnt,
-                        int(res.carry.bytes), int(res.carry.prev_status),
-                        seg_first[0], seg_first[1], seg_first[2], seg_first[3],
-                        seg_msgs, seg_lang, int(tsv[-1]),
-                    )
-                )
-
-        if not res.carry.open:
-            state.update(
-                (
-                    STATE_VERSION, int(res.carry.state), False, 0, 0,
-                    int(res.carry.prev_status),
-                    None, None, None, None, None, -1, int(tsv[-1]),
-                )
-            )
         if timeout_ms is not None:
             if event_time:
-                # flush once the watermark passes the last seen event + the
-                # interval (replay-deterministic, unlike wall clock).  MAX of
-                # the batch's event times, not the last row in turn order:
-                # with non-monotonic event times tsv[-1] could set a timestamp
-                # the watermark has already passed, flushing the pending trace
-                # early (ADVICE r2).  The gap predicate keeps using
-                # turn-order-previous ts (batch semantics).  Clamped above
-                # the current watermark (code-review r3): with a short
-                # interval and another conversation driving the watermark
-                # ahead, the naive timestamp can land at/below it, which
-                # Spark rejects and kills the query — the clamp flushes at
-                # the very next batch instead (the trace is already idle
-                # past the interval, so that IS the correct flush time).
-                cand = int(tsv.max()) // 1000 + timeout_ms
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(max(cand, wm + 1))
+                # flush once the watermark passes the batch's LATEST event
+                # (not the last row in turn order: with non-monotonic event
+                # times that could already be behind the watermark) plus the
+                # interval.  Clamped above the current watermark: with a
+                # short interval and another group driving the watermark
+                # ahead, the naive timestamp can land at or below it, which
+                # Spark rejects; the clamp flushes at the next batch, which
+                # is the correct flush time for a trace already idle that
+                # long.
+                cand = pc.max(tbl.column(cfg.ts_col)).value // 1000 + timeout_ms
+                state.setTimeoutTimestamp(max(cand, state.getCurrentWatermarkMs() + 1))
             else:
                 state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(rows, columns=OUTPUT_SCHEMA.names)
+        yield recs.to_pandas()
 
     return func
 
@@ -354,7 +271,8 @@ def make_state_metrics_listener():
 def detect_exceptions_stream(
     stream_df: DataFrame, cfg: PipelineConfig, event_time: bool = False
 ) -> DataFrame:
-    """streaming transcripts → streaming routed records (append mode).
+    """streaming transcripts → streaming routed records (append mode), with
+    the columns and types of ``plans.pipeline.detect_exceptions``.
 
     ``event_time=True`` switches the idle flush from wall clock to the
     event-time watermark (out_detect_exceptions.rb:116-132 uses wall clock —
@@ -362,7 +280,10 @@ def detect_exceptions_stream(
     pending trace flushes once the watermark passes its last event + the
     flush interval, so reprocessing history produces identical output
     instead of depending on processing speed)."""
-    func = make_state_func(cfg, event_time=event_time)
+    validate_input(stream_df.columns, cfg)
+    schema = stream_df.schema
+    msg_field = cfg.resolve_message_field(schema.names)
+    func = make_state_func(cfg, schema, event_time=event_time)
     if cfg.multiline_flush_interval is None:
         timeout = GroupStateTimeout.NoTimeout
     elif event_time:
@@ -375,6 +296,11 @@ def detect_exceptions_stream(
         )
     else:
         timeout = GroupStateTimeout.ProcessingTimeTimeout
-    return stream_df.groupBy(cfg.conv_col).applyInPandasWithState(
-        func, OUTPUT_SCHEMA, STATE_SCHEMA, "append", timeout
+    out = stream_df.groupBy(*cfg.group_keys()).applyInPandasWithState(
+        func,
+        output_schema(schema, cfg, msg_field),
+        state_schema(schema, cfg, msg_field),
+        "append",
+        timeout,
     )
+    return with_sink(with_out_tag(out, cfg))

@@ -4,15 +4,42 @@ applyInPandasWithState must equal the batch pipeline on the same rows."""
 from __future__ import annotations
 
 import os
+import time
 
+import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from fluent_plugin_detect_exceptions_spark.config import PipelineConfig
 from fluent_plugin_detect_exceptions_spark.plans.pipeline import detect_exceptions
 from fluent_plugin_detect_exceptions_spark.sources.transcripts import synth_transcripts
 from fluent_plugin_detect_exceptions_spark.streaming.stream_pipeline import (
     detect_exceptions_stream,
+    make_state_func,
+)
+
+from .test_fsm import LINE_POOL as FSM_LINES
+from .test_fused_stage_diff import conv_rows, oracle_records
+
+#: the transcripts schema, for driving the state function without Spark
+SCHEMA = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("turn_idx", IntegerType()),
+        StructField("role", StringType()),
+        StructField("text", StringType()),
+        StructField("tool", StringType()),
+        StructField("ts", TimestampType()),
+    ]
 )
 
 
@@ -31,7 +58,18 @@ def run_stream(spark, src_dir, ckpt, cfg, schema):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    # with a processing-time flush interval Spark schedules no-data batches
+    # forever, so the query never terminates: stop it at its first no-data
+    # batch, which availableNow runs only after all the input
+    try:
+        deadline = time.monotonic() + 300
+        while q.isActive and time.monotonic() < deadline:
+            if any(p.numInputRows == 0 for p in q.recentProgress):
+                break
+            time.sleep(0.2)
+    finally:
+        q.stop()
+    assert q.exception() is None, q.exception()
     return spark.sql("select * from routed_stream")
 
 
@@ -81,8 +119,10 @@ def test_streaming_equals_batch(spark, tmp_path):
     # remain in state; everything else must match exactly
     open_tail = [w for w in want if w not in got]
     assert all(g in want for g in got)
-    missing_convs = {w[0] for w in open_tail}
-    assert len(open_tail) <= len(missing_convs) * 1  # at most the final open segment per conv
+    last_turn = {}
+    for w in want:
+        last_turn[w[0]] = max(last_turn.get(w[0], -1), w[1])
+    assert all(w[1] == last_turn[w[0]] for w in open_tail), open_tail
     assert len(got) + len(open_tail) == len(want)
 
 
@@ -303,12 +343,8 @@ def test_streaming_emit_scales_linearly():
 
     import pandas as pd
 
-    from fluent_plugin_detect_exceptions_spark.streaming.stream_pipeline import (
-        make_state_func,
-    )
-
     cfg = PipelineConfig(max_lines=0)
-    func = make_state_func(cfg)
+    func = make_state_func(cfg, SCHEMA)
 
     def run(n):
         rows = (
@@ -336,6 +372,199 @@ def test_streaming_emit_scales_linearly():
     t10 = run(10_000)
     t40 = run(40_000)
     assert t40 < 10 * max(t10, 1e-4), (t10, t40)
+
+
+def _state_func_records(func, key, batches, state) -> list[tuple]:
+    """Drive ``func`` over one group's micro-batches; the emitted records as
+    (first_turn_idx, role, text, lang, n_lines)."""
+    return [
+        (r["first_turn_idx"], r["role"], r["text"], r["lang"], r["n_lines"])
+        for pdf in batches
+        for recs in func(key, [pdf], state)
+        for r in recs.to_dict("records")
+    ]
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    runs=st.lists(
+        st.tuples(st.integers(0, len(FSM_LINES) - 1), st.integers(1, 8)),
+        min_size=1, max_size=12,
+    ),
+    cuts=st.lists(st.integers(1, 95), max_size=5),
+    max_lines=st.sampled_from([0, 3, 1000]),
+    max_bytes=st.sampled_from([0, 200]),
+    flb=st.booleans(),
+    gap=st.booleans(),
+    with_stream=st.booleans(),
+)
+def test_state_func_carry_equals_oracle(runs, cuts, max_lines, max_bytes, flb, gap, with_stream):
+    """The state function, called per group and micro-batch with
+    ``_FakeState``, emits ``oracle.Accumulator``'s records per stream at
+    random cut points: the carry (FSM state, open segment, last event time)
+    makes the cuts invisible.  The lines are runs of consecutive pool lines,
+    so traces span the cuts.  The record still open after the last cut is
+    excluded, and a timeout call then emits exactly that record."""
+    import pandas as pd
+
+    cfg = PipelineConfig(
+        max_lines=max_lines,
+        max_bytes=max_bytes,
+        force_line_breaks=flb,
+        multiline_flush_interval=2.0 if gap else None,
+        stream="tool" if with_stream else None,
+    )
+    func = make_state_func(cfg, SCHEMA)
+    rows = conv_rows([[line for i, n in runs for line in FSM_LINES[i : i + n]]], with_stream)
+    bounds = [0, *sorted({c for c in cuts if c < len(rows)}), len(rows)]
+    if gap:
+        # a 4 s gap before every other cut too: a flush on a batch's first
+        # row is measured against the carried event time
+        for j in bounds[1:-1:2]:
+            for r in rows[j:]:
+                r["ts"] += 3
+    want = oracle_records(rows, cfg)
+    rng = np.random.RandomState(len(rows))
+    for key, recs in want.items():
+        batches = []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            sub = [r for r in rows[lo:hi] if tuple(r[k] for k in cfg.group_keys()) == key]
+            if sub:  # Spark calls the function only for groups with data
+                pdf = pd.DataFrame([sub[i] for i in rng.permutation(len(sub))])
+                pdf["ts"] = pd.to_datetime(pdf["ts"], unit="s")
+                batches.append(pdf)
+        state = _FakeState()
+        got = _state_func_records(func, key, batches, state)
+        still_open = state.get[2]
+        assert sorted(got) == (recs[:-1] if still_open else recs)
+        state.hasTimedOut = True
+        flushed = _state_func_records(func, key, [pd.DataFrame()], state)
+        assert flushed == (recs[-1:] if still_open else [])
+        assert not state.exists
+
+
+def test_state_func_many_segments_scales_linearly():
+    """One group of single-line records, each its own segment: the state
+    function must not loop over segments per row (that cost rows ×
+    segments).  4× the rows must cost < 6× the time.  The lines repeat, as
+    log lines do, so classifying distinct lines does not drown the
+    per-segment cost."""
+    import time
+
+    import pandas as pd
+
+    func = make_state_func(PipelineConfig(), SCHEMA)
+
+    def run(n):
+        pdf = pd.DataFrame(
+            {
+                "conv_id": "c",
+                "turn_idx": np.arange(n),
+                "role": "u",
+                "text": [f"plain line {i % 100}\n" for i in range(n)],
+                "tool": "t",
+                "ts": pd.Timestamp(1_700_000_000, unit="s"),
+            }
+        )
+        best = None
+        for _ in range(3):
+            t0 = time.perf_counter()
+            out = pd.concat(list(func(("c",), [pdf], _FakeState())), ignore_index=True)
+            dt = time.perf_counter() - t0
+            best = dt if best is None else min(best, dt)
+        assert len(out) == n and (out["n_lines"] == 1).all()
+        return best
+
+    t32 = run(32_000)
+    t128 = run(128_000)
+    assert t128 < 6 * t32, (t32, t128)
+
+
+def test_stream_rejects_what_batch_rejects(spark, tmp_path):
+    """The stream validates its input schema with the batch path's check: a
+    flush interval without the event-time column, and a missing order
+    column, raise the same ValueError in both."""
+    from fluent_plugin_detect_exceptions_spark.operators.segmenter import segment
+
+    schema = "conv_id string, turn_idx int, text string"
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path))
+    batch = spark.createDataFrame([], schema)
+    for cfg, match in (
+        (PipelineConfig(multiline_flush_interval=5), "requires the event-time column 'ts'"),
+        (PipelineConfig(order_col="seq"), "lacks 'conv_id'/'seq'"),
+    ):
+        with pytest.raises(ValueError, match=match):
+            detect_exceptions_stream(stream, cfg)
+        with pytest.raises(ValueError, match=match):
+            segment(batch, cfg)
+
+
+def _ride_model(df):
+    return df.withColumn("model", F.concat(F.lit("m"), (F.col("turn_idx") % 5).cast("string")))
+
+
+def _message_column(df):
+    return df.withColumnRenamed("text", "message")
+
+
+def _strip_newlines(df):
+    return df.withColumn("text", F.regexp_replace("text", "\n$", ""))
+
+
+def _gappy_ts(df):
+    # every seventh turn comes 7 s after its predecessor, past a 5 s interval
+    return df.withColumn(
+        "ts", F.timestamp_seconds(F.col("ts").cast("long") + F.expr("6 * (turn_idx div 7)"))
+    )
+
+
+@pytest.mark.parametrize(
+    "cfg, prepare",
+    [
+        pytest.param(PipelineConfig(stream="tool"), None, id="stream_demux"),
+        pytest.param(PipelineConfig(remove_tag_prefix="conv"), None, id="tag_prefix"),
+        pytest.param(PipelineConfig(), _ride_model, id="ride_column"),
+        pytest.param(PipelineConfig(message=""), _message_column, id="field_learning"),
+        pytest.param(PipelineConfig(force_line_breaks=True), _strip_newlines, id="force_line_breaks"),
+        pytest.param(PipelineConfig(max_lines=3), None, id="max_lines"),
+        pytest.param(PipelineConfig(multiline_flush_interval=5), _gappy_ts, id="flush_interval"),
+    ],
+)
+def test_streaming_equals_batch_on_config(spark, tmp_path, cfg, prepare):
+    """On turn-sliced micro-batches, every record the stream emits equals a
+    batch ``detect_exceptions`` record on every column (same names and
+    types), and every batch record the stream did not emit is the last
+    record of its (conv[, stream]): the segment still open in state."""
+    from collections import Counter
+
+    df = synth_transcripts(spark, 8, repeats=2)  # tools rotate within a conversation
+    if prepare is not None:
+        df = prepare(df)
+    src = str(tmp_path / "src")
+    max_turn = df.agg(F.max("turn_idx")).first()[0]
+    _write_turn_sliced(df, src, 4, (int(max_turn) // 4) + 1)
+    full = spark.read.schema(df.schema).parquet(f"{src}/part=*")
+
+    got_df = run_stream(spark, f"{src}/part=*", str(tmp_path / "ckpt"), cfg, df.schema)
+    batch = detect_exceptions(full, cfg)
+    assert {f.name: f.dataType for f in got_df.schema} == {
+        f.name: f.dataType for f in batch.schema
+    }
+
+    def records(frame):
+        return Counter(tuple(sorted(r.asDict().items())) for r in frame.collect())
+
+    got, want = records(got_df), records(batch)
+    assert got and not (got - want), got - want
+    keys = cfg.group_keys()
+    last_turn = {}
+    for rec in want:
+        d = dict(rec)
+        k = tuple(d[x] for x in keys)
+        last_turn[k] = max(last_turn.get(k, -1), d["first_turn_idx"])
+    for rec in (want - got).elements():
+        d = dict(rec)
+        assert d["first_turn_idx"] == last_turn[tuple(d[x] for x in keys)], d
 
 
 def test_event_time_timeout_flush(spark, tmp_path):
