@@ -46,14 +46,14 @@ class PipelineConfig:
     #: salt very long conversations into chunks of this many turns; 0 turns
     #: chunking off.  Active with or without a `stream` column — the chunk
     #: group key is (conv[, stream], chunk), so a skewed stream inside a
-    #: huge conversation still spreads across executors.
+    #: huge conversation still spreads across executors.  Must be >= 0.
+    #: ``segmenter.chunk_plan`` decides per input whether chunking runs; a
+    #: fallback list longer than ``segmenter.MAX_FALLBACK_CONVS`` turns it
+    #: off for the run.
     chunk_size: int = 1 << 17
     #: warm-up overlap rows prepended to each chunk to find a scan
-    #: synchronization point.  Must be < chunk_size.
+    #: synchronization point.  Must be >= 0 and < chunk_size.
     warmup: int = 4096
-    #: cap on the driver-side fallback list of unsynchronizable
-    #: conversations before chunking is disabled for the run.
-    max_fallback_convs: int = 10_000
     #: skip the plan-time max(turn_idx) gate job and chunk unconditionally.
     #: The gate exists to turn chunking off for all-short inputs; an operator
     #: who KNOWS the table holds chunk_size-plus conversations (any
@@ -76,31 +76,18 @@ class PipelineConfig:
     #: run's manifest over the same immutable input): skips the sync pre-pass
     #: entirely.  None = discover with the pre-pass; () = "none exist".
     known_fallback_convs: tuple | None = None
-    #: drop ride-along columns (role/tool/...) before the scan stage and
-    #: re-join first-row fields onto the coalesced records by
-    #: (conv[, stream], first_turn_idx).  A Python map stage is opaque to
-    #: Catalyst, so without this the ride-alongs cross shuffle #1 and BOTH
-    #: Arrow transfers only to be picked by min_by at the end.  Measured at
-    #: 13.7M turns / 32 cores: shuffle #1 shrinks 47% (570→300 MB) and the
-    #: full pipeline runs 0.76× the ride-through wall time — the extra
-    #: narrow join costs less than moving the columns through the stage
-    #: (scripts/ride_along_experiment.py, BASELINE.md).  None = auto: on for
-    #: the shuffled path with a message field; off when input_clustered
-    #: (shuffle #1 is already elided there).  True/False force.
-    #: PRECONDITION: (conv[, stream], turn) is unique in the input (the
-    #: input_hint contract).  A replayed duplicate row fans out the
-    #: first-row rejoin and duplicates that segment's record, where the
-    #: ride-through min_by picked one arbitrarily — ingest paths that can
-    #: replay rows should dedupe upstream (exact_dedup on the key) or set
-    #: slim_stage=False.
-    slim_stage: bool | None = None
-    #: debug guard for the slim_stage uniqueness precondition (ADVICE r3):
-    #: when True, detect_exceptions runs ONE extra exact check job over the
-    #: ride table's join key (conv[, stream], first_turn_idx = turn) and
-    #: raises on any duplicate instead of silently fanning out the rejoin.
-    #: Costs a narrow groupBy job at plan-construction time — turn it on
-    #: when the ingest path can replay rows (at-least-once delivery) or
-    #: while qualifying a new source, off in steady state.
+    #: debug guard for the slim rewrite's uniqueness precondition (ADVICE
+    #: r3).  The shuffled path drops ride-along columns (role/tool/...)
+    #: before the scan stage and re-joins first-row fields onto the
+    #: coalesced records by (conv[, stream], first_turn_idx)
+    #: (``pipeline.slim_split``: shuffle #1 shrank 47% at 13.7M turns, see
+    #: BASELINE.md).  That rejoin is exact only when (conv[, stream], turn)
+    #: is unique in the input; a replayed duplicate row fans it out and
+    #: duplicates that segment's record.  When True, ``slim_split`` — and so
+    #: both ``detect_exceptions`` and the batch job — runs ONE extra exact
+    #: check job over the ride table's join key and raises on any duplicate.
+    #: Turn it on when the ingest path can replay rows (at-least-once
+    #: delivery) or while qualifying a new source, off in steady state.
     slim_check_unique: bool = False
     #: the input's partitions already hold WHOLE conversations (a
     #: conv_id-bucketed table read with bucketed scan forced, or an Iceberg
@@ -108,7 +95,8 @@ class PipelineConfig:
     #: grouping exchange before the scan stage entirely — shuffle #1 of the
     #: pipeline disappears.  The caller asserts the layout; chunk-level skew
     #: spreading across tasks is traded away (chunks of one conversation stay
-    #: in its partition; the FSM still scans them independently).
+    #: in its partition; the FSM still scans them independently).  The slim
+    #: rewrite is off here: there is no shuffle #1 for it to shrink.
     input_clustered: bool = False
 
     def __post_init__(self):
@@ -117,6 +105,8 @@ class PipelineConfig:
         for lang in self.languages:
             if lang not in RULES_BY_LANG:
                 raise ValueError(f"Unknown language: {lang}")
+        if self.chunk_size < 0 or self.warmup < 0:
+            raise ValueError("chunk_size/warmup must be >= 0")
         if self.chunk_size and self.warmup >= self.chunk_size:
             raise ValueError("warmup must be smaller than chunk_size")
         if self.max_lines < 0 or self.max_bytes < 0:
@@ -132,10 +122,6 @@ class PipelineConfig:
                     return f
             return None
         return self.message if self.message in columns else None
-
-    @property
-    def chunking_active(self) -> bool:
-        return bool(self.chunk_size)
 
     def scan_columns(self, columns, msg_field: str | None = None) -> list[str]:
         """The columns the scan stage actually consumes: group keys, order,

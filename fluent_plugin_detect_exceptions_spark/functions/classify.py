@@ -16,10 +16,7 @@ Each distinct mask then yields one row of the dense transition tables
 
 * ``G[k, s]`` — state after a line of mask-class ``k`` arrives in state ``s``
   (including the reset-and-retry fallback of exception_detector.rb:206-212);
-* ``B[k, s]`` — whether the *first* transition matched (``trace_seen_before``);
-* ``absorbing[k]`` — ``G[k, :] == start_state`` everywhere: the line forces
-  the FSM to start_state and empties the buffer *regardless of any prior
-  history* (used as a synchronization point for salted chunk scans).
+* ``B[k, s]`` — whether the *first* transition matched (``trace_seen_before``).
 
 The tables for all distinct masks are built together, one numpy pass per
 rule, so no per-mask cache is needed.
@@ -99,15 +96,14 @@ def classify_encoded(codes: np.ndarray, uniques: pa.Array, rules: CompiledRules)
     g_tab, b_tab = _tables(masks, rules)
     per_unique = inverse.astype(np.int32)
     cls = np.where(codes >= 0, per_unique[np.clip(codes, 0, None)], NIL_CLS).astype(np.int32)
-    return cls, g_tab, b_tab, (g_tab == START).all(axis=1)
+    return cls, g_tab, b_tab
 
 
 def classify(texts: pd.Series, rules: CompiledRules):
     """Classify a batch of lines.
 
-    Returns ``(cls, G, B, absorbing)`` where ``cls`` is the per-line mask
-    class (``NIL_CLS`` for nulls) and ``G``/``B``/``absorbing`` are indexed by
-    class id.  A thin wrapper over ``classify_encoded``: log streams repeat
+    Returns ``(cls, G, B)`` where ``cls`` is the per-line mask class
+    (``NIL_CLS`` for nulls) and ``G``/``B`` are indexed by class id.  A thin wrapper over ``classify_encoded``: log streams repeat
     lines heavily (identical stack frames, blank lines), so the lines are
     dictionary-encoded in Arrow first.
     """

@@ -26,15 +26,17 @@ import time
 from pyspark.sql import DataFrame, functions as F
 
 
-def input_lineage(df: DataFrame) -> DataFrame:
-    """One row per source file: (file, n_rows, min/max turn)."""
+def input_lineage(df: DataFrame, conv_col: str, order_col: str) -> DataFrame:
+    """One row per source file: (file, n_rows, min/max turn, approx_convs),
+    from the conversation column ``conv_col`` and the order column
+    ``order_col``."""
     return (
         df.groupBy(F.input_file_name().alias("file"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.min("turn_idx").alias("min_turn"),
-            F.max("turn_idx").alias("max_turn"),
-            F.approx_count_distinct("conv_id").alias("approx_convs"),
+            F.min(order_col).alias("min_turn"),
+            F.max(order_col).alias("max_turn"),
+            F.approx_count_distinct(conv_col).alias("approx_convs"),
         )
     )
 

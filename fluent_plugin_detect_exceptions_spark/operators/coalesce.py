@@ -20,10 +20,19 @@ chunk-spanning segments.  Entirely JVM-side built-ins — no Python here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..rules import FAMILIES
+
+
+def lang_name(lang_id: Column) -> Column:
+    """Family name of a ``lang_id`` (an index into ``rules.FAMILIES``);
+    null for -1, a record outside any trace."""
+    return F.when(
+        lang_id >= 0,
+        F.element_at(F.array(*[F.lit(x) for x in FAMILIES]), lang_id.cast("int") + 1),
+    )
 
 
 def coalesce_partials(partials: DataFrame, cfg: PipelineConfig, msg_field: str | None = "text") -> DataFrame:
@@ -54,11 +63,6 @@ def coalesce_partials(partials: DataFrame, cfg: PipelineConfig, msg_field: str |
         F.min("sync_ok").alias("sync_ok"),
     )
     first = F.col("__first")
-    first_lang = (F.col("__first_pack") % 256 - 1).cast("int")
-    lang = F.when(
-        first_lang >= 0,
-        F.element_at(F.array(*[F.lit(x) for x in FAMILIES]), first_lang + 1),
-    )
     sel = [F.col(k) for k in cfg.group_keys()]
     sel.append(F.col("seg_start_turn").alias("first_turn_idx"))
     for c in ride:
@@ -70,6 +74,6 @@ def coalesce_partials(partials: DataFrame, cfg: PipelineConfig, msg_field: str |
             .alias(msg_field)
         )
     sel.append(F.col("n_lines"))
-    sel.append(lang.alias("lang"))
+    sel.append(lang_name(F.col("__first_pack") % 256 - 1).alias("lang"))
     sel.append(F.col("sync_ok"))
     return agg.select(*sel)

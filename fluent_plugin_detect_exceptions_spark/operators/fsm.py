@@ -306,15 +306,6 @@ def scan(
     return ScanResult(status, state_after, seg_start, emit, out_carry)
 
 
-def last_absorbing(cls: np.ndarray, absorbing: np.ndarray) -> int:
-    """Index of the last row whose line is universally absorbing (forces
-    start_state + empty buffer regardless of prior history), or -1."""
-    nil = cls < 0
-    ab = np.where(nil, True, absorbing[np.clip(cls, 0, None)])
-    hits = np.flatnonzero(ab)
-    return int(hits[-1]) if hits.size else -1
-
-
 def subset_sync(cls: np.ndarray, g_tab: np.ndarray) -> int:
     """Last warm-up index after which the FSM state is provably start_state
     (and hence the buffer empty) under EVERY possible history, or -1.

@@ -18,6 +18,7 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
+from .coalesce import lang_name
 
 
 def with_out_tag(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -58,25 +59,9 @@ def fused_sink_counts(partials: DataFrame) -> DataFrame:
     Plan: scan-stage exchange → Filter → partial HashAggregate → one tiny
     exchange of ≤(#sinks) rows per partition.  The segment-stitching
     exchange on (conv, seg_start_turn) never happens.  Asserted by
-    test_fused_sink_counts_plan_has_two_exchanges."""
-    from ..rules import FAMILIES
-
-    sink = F.when(
-        F.col("lang_id") >= 0,
-        F.concat(
-            F.lit("lang_"),
-            F.element_at(
-                F.array(*[F.lit(x) for x in FAMILIES]),
-                F.col("lang_id").cast("int") + 1,
-            ),
-        ),
-    ).otherwise(F.lit("passthrough"))
-    return (
-        partials.filter(F.col("part_min_turn") == F.col("seg_start_turn"))
-        .select(sink.alias("sink"))
-        .groupBy("sink")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    test_fused_sink_counts_plan_elides_stitch_exchange."""
+    first_partials = partials.filter(F.col("part_min_turn") == F.col("seg_start_turn"))
+    return sink_counts(with_sink(first_partials.select(lang_name(F.col("lang_id")).alias("lang"))))
 
 
 def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -97,8 +82,3 @@ def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         segment(df.select(*cfg.scan_columns(df.columns)), cfg, emit_text=False)
     )
 
-
-def write_sinks(routed: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Fan-out write: one partition directory per sink (downstream readers
-    consume a single sink via partition pruning)."""
-    routed.write.mode(mode).partitionBy("sink").parquet(path)

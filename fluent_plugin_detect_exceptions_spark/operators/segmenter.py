@@ -15,7 +15,7 @@ bounded-shuffle, skew-proof plan:
    (``fsm.subset_sync``).  A cheap pre-pass over only the boundary zones
    finds conversations with an unsynchronizable warm-up (wall-to-wall stack
    traces); those are processed whole (chunk 0).
-3. **Partition-level scan**: ``repartition(conv, chunk)`` + ``mapInArrow``.
+3. **Partition-level scan**: ``repartition(conv[, chunk])`` + ``mapInArrow``.
    Each partition arrives as one Arrow table; its text is dictionary-encoded
    once and classified per DISTINCT line in Arrow C++ (log data repeats
    lines heavily), the rows are ordered by an integer lexsort, and all
@@ -57,6 +57,10 @@ STATE_FAMILY_ID = np.array(
 
 _TURN_OFFSET = np.int64(1) << 40  # group separator for the global cummax
 
+#: cap on the driver-side fallback list of unsynchronizable conversations;
+#: a longer list turns chunking off for the run
+MAX_FALLBACK_CONVS = 10_000
+
 
 def validate_input(columns, cfg: PipelineConfig) -> None:
     """Refuse an input schema that lacks a column the scan needs: the
@@ -75,11 +79,7 @@ def validate_input(columns, cfg: PipelineConfig) -> None:
 
 def ride_along_cols(df_columns, cfg: PipelineConfig, msg_field: str | None) -> list[str]:
     """Columns that ride along unchanged (first-row semantics at flush)."""
-    skip = {cfg.conv_col, cfg.order_col, "chunk_id", "__warmup"}
-    if cfg.stream is not None:
-        skip.add(cfg.stream)
-    if msg_field is not None:
-        skip.add(msg_field)
+    skip = {*cfg.group_keys(), cfg.order_col, "chunk_id", "__warmup", msg_field}
     return [c for c in df_columns if c not in skip]
 
 
@@ -91,10 +91,7 @@ def partial_schema(df_schema: StructType, cfg: PipelineConfig, msg_field: str | 
     stage is opaque to Catalyst, so column pruning cannot reach inside it
     and the only way to not ship unused text back over the Arrow boundary
     is to not produce it (r6; guide §4.1)."""
-    cols = [f.name for f in df_schema.fields]
-    fields = [df_schema[cfg.conv_col]]
-    if cfg.stream is not None:
-        fields.append(df_schema[cfg.stream])
+    fields = [df_schema[k] for k in cfg.group_keys()]
     fields += [
         StructField("seg_start_turn", LongType(), False),
         StructField("part_min_turn", LongType(), False),
@@ -106,33 +103,23 @@ def partial_schema(df_schema: StructType, cfg: PipelineConfig, msg_field: str | 
         StructField("lang_id", ByteType(), False),
         StructField("sync_ok", BooleanType(), False),
     ]
-    fields += [df_schema[c] for c in ride_along_cols(cols, cfg, msg_field)]
+    fields += [df_schema[c] for c in ride_along_cols(df_schema.names, cfg, msg_field)]
     return StructType(fields)
 
 
-def _empty_partials_arrow(tbl, cfg: PipelineConfig, msg_field: str | None,
+def _arrow_partial_schema(schema, cfg: PipelineConfig, msg_field: str | None,
                           emit_text: bool = True):
+    """``partial_schema`` in Arrow types, derived from the stage's input
+    table ``schema``: key and ride-along columns keep their input types."""
     import pyarrow as pa
 
-    names, cols = [], []
-
-    def add(name, arr):
-        names.append(name)
-        cols.append(arr)
-
-    add(cfg.conv_col, tbl.column(cfg.conv_col).combine_chunks().slice(0, 0))
-    if cfg.stream is not None:
-        add(cfg.stream, tbl.column(cfg.stream).combine_chunks().slice(0, 0))
-    add("seg_start_turn", pa.array([], pa.int64()))
-    add("part_min_turn", pa.array([], pa.int64()))
-    add("n_part", pa.array([], pa.int64()))
+    fields = [schema.field(k) for k in cfg.group_keys()]
+    fields += [pa.field(c, pa.int64()) for c in ("seg_start_turn", "part_min_turn", "n_part")]
     if emit_text:
-        add("text_part", pa.array([], pa.string()))
-    add("lang_id", pa.array([], pa.int8()))
-    add("sync_ok", pa.array([], pa.bool_()))
-    for c in ride_along_cols(tbl.schema.names, cfg, msg_field):
-        add(c, tbl.column(c).combine_chunks().slice(0, 0))
-    return pa.table(cols, names=names)
+        fields.append(pa.field("text_part", pa.string()))
+    fields += [pa.field("lang_id", pa.int8()), pa.field("sync_ok", pa.bool_())]
+    fields += [schema.field(c) for c in ride_along_cols(schema.names, cfg, msg_field)]
+    return pa.schema(fields)
 
 
 def _int64_col(tbl, name: str) -> np.ndarray:
@@ -144,19 +131,15 @@ def _int64_col(tbl, name: str) -> np.ndarray:
     return col.combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
 
 
-def _sorted_groups(tbl, conv: str, stream: str | None, chunk: np.ndarray,
-                   turn: np.ndarray):
-    """Order one partition by (conv[, stream], chunk, turn) and find its
-    (conv[, stream], chunk) groups.  ``conv``/``stream`` name key columns of
-    any type, compared by their dictionary codes; ``chunk``/``turn`` are the
-    int64 columns from ``_int64_col``.  The sort is integer index arithmetic
-    only: no column is reordered.  Returns ``(order, starts, ends)`` — the
-    sorting permutation and each group's ``[start, end)`` in sorted
-    positions."""
+def _sorted_groups(tbl, keys: list[str], chunk: np.ndarray, turn: np.ndarray):
+    """Order one partition by (keys, chunk, turn) and find its (keys, chunk)
+    groups.  ``keys`` name key columns of any type, compared by their
+    dictionary codes; ``chunk``/``turn`` are the int64 columns from
+    ``_int64_col``.  The sort is integer index arithmetic only: no column is
+    reordered.  Returns ``(order, starts, ends)`` — the sorting permutation
+    and each group's ``[start, end)`` in sorted positions."""
     n = tbl.num_rows
-    group_keys = [chunk, encode(tbl.column(conv).combine_chunks())[0]]
-    if stream is not None:
-        group_keys.insert(0, encode(tbl.column(stream).combine_chunks())[0])
+    group_keys = [chunk] + [encode(tbl.column(k).combine_chunks())[0] for k in reversed(keys)]
     order = np.lexsort((turn, *group_keys))
     new_group = np.ones(n, dtype=bool)
     if n > 1:
@@ -179,26 +162,30 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
     row ordering is pure numpy index arithmetic, and ride-along columns are
     gathered with ``pyarrow.compute.take`` at segment-first positions only.
 
+    A table without ``chunk_id``/``__warmup`` columns is unchunked: every
+    row is chunk 0 and none is warm-up.
+
     ``carry`` continues a scan the previous call left off (the streaming
     path, one group per table): the FSM/buffer carry and the last event
     time in microseconds (None without a flush interval).  The first row is
-    then not force-reset, its gap is measured against the carried time,
+    then not force-reset, its gap is measured against the carried time, and
     rows before the first segment start form a partial with
-    ``seg_start_turn == -1``, and the return value is ``(partials,
-    out_carry)`` with ``out_carry`` of the same shape."""
+    ``seg_start_turn == -1``.  Returns ``(partials, out_carry)``; without
+    ``carry`` the batch path ignores ``out_carry``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    schema = _arrow_partial_schema(tbl.schema, cfg, msg_field, emit_text)
     n = tbl.num_rows
     if n == 0:
-        out = _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
-        return out if carry is None else (out, carry)
+        return schema.empty_table(), carry
 
+    names = tbl.schema.names
     turn = _int64_col(tbl, cfg.order_col)
-    chunk = _int64_col(tbl, "chunk_id")
+    chunk = _int64_col(tbl, "chunk_id") if "chunk_id" in names else np.zeros(n, dtype=np.int64)
     warm = (
         tbl.column("__warmup").combine_chunks().to_numpy(zero_copy_only=False).astype(bool)
-        if "__warmup" in tbl.schema.names
+        if "__warmup" in names
         else np.zeros(n, dtype=bool)
     )
 
@@ -213,14 +200,12 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
         uniq_arr = pa.array([], pa.string())  # all codes are -1 (null)
         ulen = np.zeros(1, dtype=np.int64)
         unl = np.zeros(1, dtype=bool)
-    cls_row, g_tab, b_tab, _ = classify_encoded(tcodes, uniq_arr, rules)
+    cls_row, g_tab, b_tab = classify_encoded(tcodes, uniq_arr, rules)
     safe = np.clip(tcodes, 0, None)
     rawlen_row = np.where(tcodes >= 0, ulen[safe] if len(ulen) else 0, 0).astype(np.int64)
     hasnl_row = np.where(tcodes >= 0, unl[safe] if len(unl) else False, False).astype(bool)
 
-    order, group_starts, group_ends = _sorted_groups(
-        tbl, cfg.conv_col, cfg.stream, chunk, turn
-    )
+    order, group_starts, group_ends = _sorted_groups(tbl, cfg.group_keys(), chunk, turn)
     warm_s = warm[order]
     cls_s = cls_row[order]
 
@@ -242,8 +227,7 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
 
     ranges = [(s, e) for s, e in scan_ranges if e > s]
     if not ranges:
-        out = _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
-        return out if carry is None else (out, carry)
+        return schema.empty_table(), carry
     idx = np.concatenate([np.arange(s, e) for s, e in ranges])
     m = len(idx)
     first_of_group = np.zeros(m, dtype=bool)
@@ -293,8 +277,7 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
     keep = res.emit & ~warm_s[idx]
     k_pos = np.flatnonzero(keep)
     if len(k_pos) == 0:
-        out = _empty_partials_arrow(tbl, cfg, msg_field, emit_text)
-        return out if carry is None else (out, (res.carry, last_ts))
+        return schema.empty_table(), (res.carry, last_ts)
     k_gidx = gidx[k_pos]
     k_sst = sst[k_pos]
     k_turn = turns[k_pos]
@@ -340,26 +323,21 @@ def _scan_partition_fused_arrow(tbl, cfg: PipelineConfig, rules: CompiledRules,
             )
 
     firsts_orig = pa.array(k_orig[starts])
-    names, cols = [], []
-
-    def add(name, arr):
-        names.append(name)
-        cols.append(arr)
-
-    add(cfg.conv_col, pc.take(tbl.column(cfg.conv_col).combine_chunks(), firsts_orig))
-    if cfg.stream is not None:
-        add(cfg.stream, pc.take(tbl.column(cfg.stream).combine_chunks(), firsts_orig))
-    add("seg_start_turn", pa.array(k_sst[starts], pa.int64()))
-    add("part_min_turn", pa.array(k_turn[starts], pa.int64()))
-    add("n_part", pa.array((ends - starts).astype(np.int64), pa.int64()))
-    if emit_text:
-        add("text_part", parts)
-    add("lang_id", pa.array(k_lang[starts], pa.int8()))
-    add("sync_ok", pa.array(sync_ok[idx][k_pos][starts], pa.bool_()))
-    for c in ride_along_cols(tbl.schema.names, cfg, msg_field):
-        add(c, pc.take(tbl.column(c).combine_chunks(), firsts_orig))
-    out = pa.table(cols, names=names)
-    return out if carry is None else (out, (res.carry, last_ts))
+    computed = {
+        "seg_start_turn": pa.array(k_sst[starts], pa.int64()),
+        "part_min_turn": pa.array(k_turn[starts], pa.int64()),
+        "n_part": pa.array((ends - starts).astype(np.int64), pa.int64()),
+        "text_part": parts,
+        "lang_id": pa.array(k_lang[starts], pa.int8()),
+        "sync_ok": pa.array(sync_ok[idx][k_pos][starts], pa.bool_()),
+    }
+    # key and ride-along columns: the segment-first row's value
+    cols = [
+        computed[f.name] if f.name in computed
+        else pc.take(tbl.column(f.name).combine_chunks(), firsts_orig)
+        for f in schema
+    ]
+    return pa.Table.from_arrays(cols, schema=schema), (res.carry, last_ts)
 
 
 def _with_chunks(df: DataFrame, cfg: PipelineConfig, fallback_convs) -> DataFrame:
@@ -374,9 +352,7 @@ def _with_chunks(df: DataFrame, cfg: PipelineConfig, fallback_convs) -> DataFram
     df = df.withColumn("__d", F.explode(dup))
     chunk = F.expr(f"{cfg.order_col} div {c}") + F.col("__d")
     if fallback_convs:
-        chunk = F.when(
-            F.col(cfg.conv_col).isin(list(fallback_convs)), F.lit(0)
-        ).otherwise(chunk)
+        chunk = F.when(F.col(cfg.conv_col).isin(list(fallback_convs)), 0).otherwise(chunk)
     return (
         df.withColumn("chunk_id", chunk.cast("long"))
         .withColumn("__warmup", F.col("__d") == 1)
@@ -405,21 +381,15 @@ def find_fallback_convs(
     if msg_field is None:
         return []
     c, o = cfg.chunk_size, cfg.warmup
+    keys = ["conv", "strm"][: len(cfg.group_keys())]
+    key_sel = [F.col(k).alias(a) for k, a in zip(cfg.group_keys(), keys)]
+    chk = F.expr(f"{cfg.order_col} div {c}").cast("long")
     # the explicit range conjunct is parquet-pushable (row-group stats prune
     # whole files of short conversations); the modulo half is evaluated post-scan
-    sel = [
-        F.col(cfg.conv_col).alias("conv"),
-        F.expr(f"{cfg.order_col} div {c}").cast("long").alias("zchunk"),
-        F.col(cfg.order_col).alias("turn"),
-        F.col(msg_field).alias("msg"),
-    ]
-    group = ["conv", "zchunk"]
-    if cfg.stream is not None:
-        sel.insert(1, F.col(cfg.stream).alias("strm"))
-        group = ["conv", "strm", "zchunk"]
     zone = df.filter(
         (F.col(cfg.order_col) >= (c - o)) & ((F.col(cfg.order_col) % c) >= (c - o))
-    ).select(*sel)
+    ).select(*key_sel, chk.alias("zchunk"), F.col(cfg.order_col).alias("turn"),
+             F.col(msg_field).alias("msg"))
 
     out_schema = StructType(
         [StructField("conv", zone.schema["conv"].dataType, False)]
@@ -443,10 +413,9 @@ def find_fallback_convs(
             return
 
         tcodes, uniqs = encode(tbl.column("msg").combine_chunks())
-        cls, g_tab, _, _ = classify_encoded(tcodes, uniqs, rules)
+        cls, g_tab, _ = classify_encoded(tcodes, uniqs, rules)
         order, gs, ge = _sorted_groups(
-            tbl, "conv", "strm" if cfg.stream is not None else None,
-            _int64_col(tbl, "zchunk"), _int64_col(tbl, "turn"),
+            tbl, keys, _int64_col(tbl, "zchunk"), _int64_col(tbl, "turn")
         )
         cls_s = cls[order]
         bad = [
@@ -461,7 +430,7 @@ def find_fallback_convs(
                 names=["conv"],
             )
 
-    bad_sync = zone.repartition(*group).mapInArrow(check_batches, schema=out_schema)
+    bad_sync = zone.repartition(*keys, "zchunk").mapInArrow(check_batches, schema=out_schema)
 
     # check 2: chunk occupancy vs zone presence per (conv[, stream]).  One
     # map-side-combinable groupBy over the narrow key columns (collect_set
@@ -470,19 +439,12 @@ def find_fallback_convs(
     # preceding zone chunk (b-1) has no zone row.  Skipped under the
     # assume_dense_turns contract (empty expected zones impossible).
     if cfg.assume_dense_turns:
-        bad = (
-            bad_sync.distinct().limit(cfg.max_fallback_convs + 1).collect()
-        )
+        bad = bad_sync.distinct().limit(MAX_FALLBACK_CONVS + 1).collect()
         return [r["conv"] for r in bad]
-    chk = F.expr(f"{cfg.order_col} div {c}").cast("long")
     z = (F.col(cfg.order_col) % c) >= (c - o)
-    occ_keys = ["conv"] if cfg.stream is None else ["conv", "strm"]
-    occ_sel = [F.col(cfg.conv_col).alias("conv")]
-    if cfg.stream is not None:
-        occ_sel.append(F.col(cfg.stream).alias("strm"))
     occ = (
-        df.select(*occ_sel, chk.alias("chk"), F.when(z, chk).alias("zchk"))
-        .groupBy(*occ_keys)
+        df.select(*key_sel, chk.alias("chk"), F.when(z, chk).alias("zchk"))
+        .groupBy(*keys)
         .agg(
             F.collect_set("chk").alias("chunks"),
             F.collect_set("zchk").alias("zchunks"),
@@ -497,10 +459,32 @@ def find_fallback_convs(
     bad = (
         bad_sync.unionByName(bad_zone)
         .distinct()
-        .limit(cfg.max_fallback_convs + 1)
+        .limit(MAX_FALLBACK_CONVS + 1)
         .collect()
     )
     return [r["conv"] for r in bad]
+
+
+def chunk_plan(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
+               msg_field: str | None) -> list | None:
+    """Whether and how ``segment()`` chunks ``df``: None means no chunking,
+    otherwise the conversations to process whole (the fallback list).
+
+    Chunking is off when ``chunk_size`` is 0 or, unless
+    ``assume_long_convs``, when no conversation reaches ``chunk_size`` — a
+    near-free gate (one max(); parquet aggregate pushdown reads only footers
+    when enabled) that skips the pre-pass, the warm-up duplication and the
+    salted keys.  The fallback list is ``known_fallback_convs`` when given,
+    else the pre-pass ``find_fallback_convs``."""
+    if cfg.chunk_size == 0:
+        return None
+    if not cfg.assume_long_convs:
+        max_turn = df.agg(F.max(cfg.order_col)).first()[0]
+        if max_turn is None or max_turn < cfg.chunk_size:
+            return None
+    if cfg.known_fallback_convs is not None:
+        return list(cfg.known_fallback_convs)
+    return find_fallback_convs(df, cfg, rules, msg_field)
 
 
 def segment(
@@ -518,29 +502,13 @@ def segment(
     msg_field = cfg.resolve_message_field(df.columns)
     validate_input(df.columns, cfg)
 
-    chunking = cfg.chunking_active
-    if chunking and not cfg.assume_long_convs:
-        # near-free gate (one max() — parquet aggregate pushdown reads only
-        # footers when enabled): if no conversation reaches chunk_size, skip
-        # the pre-pass, warm-up duplication and salted keys entirely
-        max_turn = df.agg(F.max(cfg.order_col)).first()[0]
-        if max_turn is None or max_turn < cfg.chunk_size:
-            chunking = False
-
-    if chunking:
-        fallback = (
-            list(cfg.known_fallback_convs)
-            if cfg.known_fallback_convs is not None
-            else find_fallback_convs(df, cfg, rules, msg_field)
-        )
-        if len(fallback) > cfg.max_fallback_convs:
-            # adversarial input: too many unsynchronizable conversations —
-            # process everything whole rather than blow up the driver list
-            df = df.withColumn("chunk_id", F.lit(0)).withColumn("__warmup", F.lit(False))
-        else:
-            df = _with_chunks(df, cfg, fallback)
-    else:
-        df = df.withColumn("chunk_id", F.lit(0)).withColumn("__warmup", F.lit(False))
+    fallback = chunk_plan(df, cfg, rules, msg_field)
+    # over the cap (adversarial input: too many unsynchronizable
+    # conversations) everything is processed whole rather than blow up the
+    # driver list
+    chunked = fallback is not None and len(fallback) <= MAX_FALLBACK_CONVS
+    if chunked:
+        df = _with_chunks(df, cfg, fallback)
 
     out_schema = partial_schema(df.schema, cfg, msg_field, emit_text)
 
@@ -553,12 +521,12 @@ def segment(
         if not chunks:
             return
         tbl = pa.Table.from_batches(chunks)
-        out = _scan_partition_fused_arrow(tbl, cfg, rules, msg_field, emit_text)
+        out, _ = _scan_partition_fused_arrow(tbl, cfg, rules, msg_field, emit_text)
         yield from out.to_batches()
 
     if cfg.input_clustered:
         # caller asserts each input partition holds whole conversations
         # (bucketed/SPJ layout): no grouping exchange at all
         return df.mapInArrow(run, schema=out_schema)
-    group_cols = cfg.group_keys() + ["chunk_id"]
-    return df.repartition(*group_cols).mapInArrow(run, schema=out_schema)
+    keys = cfg.group_keys() + (["chunk_id"] if chunked else [])
+    return df.repartition(*keys).mapInArrow(run, schema=out_schema)

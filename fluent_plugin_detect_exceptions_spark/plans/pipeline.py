@@ -1,22 +1,22 @@
-"""End-to-end plan assembly: scan → classify+segment → coalesce → enrich →
-route → aggregate (SURVEY §3.1 hot path, Spark-first).
+"""End-to-end plan assembly: scan → classify+segment → coalesce → route →
+aggregate (SURVEY §3.1 hot path, Spark-first).
 
 Shuffle budget (north rule 'bounded-shuffle'):
-  1. hash exchange on (conv_id[, stream], chunk_id) for the mapInArrow
+  1. hash exchange on (conv_id[, stream][, chunk_id]) for the mapInArrow
      segmentation — the salted key spreads skewed conversations;
   2. hash exchange on (conv_id[, stream], seg_start_turn) for the coalesce
      groupBy — segment keys are fine-grained, so no residual skew;
   3. a tiny map-side-combined exchange for per-sink counts.
-The enrich join is broadcast; everything else is narrow.
+The slim rewrite's ride rejoin adds one exchange of the narrow ride table;
+everything else is narrow.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..operators.coalesce import coalesce_partials
-from ..operators.enrich import enrich_with_lang
 from ..operators.route import detect_sink_counts, with_out_tag, with_sink
 from ..operators.segmenter import segment
 from ..rules import compile_rules
@@ -27,12 +27,13 @@ def slim_split(df: DataFrame, cfg: PipelineConfig, msg_field: str | None):
     input into the columns the scan stage actually consumes and a narrow
     ride table of first-row fields keyed by (group keys, first_turn_idx).
     Returns ``(stage_df, ride_df)``; ``ride_df`` is None when the rewrite is
-    inactive (forced off, clustered input, no message field, or nothing to
-    drop) and the caller proceeds unchanged."""
-    active = cfg.slim_stage
-    if active is None:
-        active = not cfg.input_clustered and msg_field is not None
-    if not active:
+    inactive (clustered input, no message field, or nothing to drop) and
+    the caller proceeds unchanged.
+
+    The rejoin is exact only when (conv[, stream], turn) is unique in the
+    input; ``cfg.slim_check_unique`` runs one narrow groupBy job over the
+    ride table's key and raises on a duplicate (ADVICE r3)."""
+    if cfg.input_clustered or msg_field is None:
         return df, None
     keep = cfg.scan_columns(df.columns, msg_field)
     ride_cols = [c for c in df.columns if c not in keep]
@@ -43,6 +44,22 @@ def slim_split(df: DataFrame, cfg: PipelineConfig, msg_field: str | None):
         F.col(cfg.order_col).alias("first_turn_idx"),
         *ride_cols,
     )
+    if cfg.slim_check_unique:
+        key = [*cfg.group_keys(), "first_turn_idx"]
+        dup = (
+            ride.groupBy(*key)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > 1)
+            .limit(1)
+            .collect()
+        )
+        if dup:
+            d = dup[0]
+            raise ValueError(
+                f"slim rewrite uniqueness precondition violated: duplicate "
+                f"input rows for key {tuple(d[k] for k in key)} "
+                f"({d['__n']}x); dedupe the input on (conv[, stream], turn)"
+            )
     return df.select(*[c for c in df.columns if c in keep]), ride
 
 
@@ -76,33 +93,8 @@ def detect_exceptions(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     rules = compile_rules(cfg.languages)
     msg_field = cfg.resolve_message_field(df.columns)
     stage_df, ride = slim_split(df, cfg, msg_field)
-    if ride is not None and cfg.slim_check_unique:
-        # opt-in EXACT duplicate-key guard (ADVICE r3): the rejoin is exact
-        # only under (conv[, stream], turn) uniqueness; a replayed duplicate
-        # would fan the first-row join out.  One narrow groupBy job — the
-        # ride table is already projected to keys + ride columns.
-        key = [*cfg.group_keys(), "first_turn_idx"]
-        dup = (
-            ride.groupBy(*key)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            d = dup[0]
-            raise ValueError(
-                f"slim_stage uniqueness precondition violated: duplicate "
-                f"input rows for key {tuple(d[k] for k in key)} "
-                f"({d['__n']}x); dedupe the input on (conv[, stream], turn) "
-                f"or set slim_stage=False"
-            )
     grouped = coalesce_partials(segment(stage_df, cfg, rules), cfg, msg_field)
     return with_sink(with_out_tag(rejoin_ride(grouped, ride, cfg), cfg))
-
-
-def detect_exceptions_enriched(df: DataFrame, cfg: PipelineConfig, spark: SparkSession) -> DataFrame:
-    return enrich_with_lang(detect_exceptions(df, cfg), spark)
 
 
 def detect_with_counts(df: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:

@@ -153,7 +153,6 @@ def make_state_func(cfg: PipelineConfig, schema: StructType,
         tbl = pa.Table.from_pandas(
             pd.concat(list(pdfs), ignore_index=True), schema=in_arrow, preserve_index=False
         )
-        tbl = tbl.append_column("chunk_id", pa.array(np.zeros(tbl.num_rows, np.int64)))
         parts, (out, last_ts) = _scan_partition_fused_arrow(
             tbl, cfg, rules, msg_field, carry=carry
         )

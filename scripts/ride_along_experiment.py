@@ -124,9 +124,8 @@ def main() -> None:
         )
         return rec.join(ride, ["conv_id", "first_turn_idx"], "left")
 
-    # clustered layout (conv-bucketed table, shuffle #1 elided): does slim
-    # still pay via the Arrow transfers alone, or does the rejoin cost more
-    # than it saves when there is no exchange to shrink?
+    # clustered layout (conv-bucketed table, shuffle #1 elided): the ride
+    # columns travel through the stage; the slim rewrite is off there
     spark.sql("DROP TABLE IF EXISTS ride_bucketed")
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     (
@@ -137,20 +136,9 @@ def main() -> None:
     )
     bucketed = spark.table("ride_bucketed")
     cfg_c = dataclasses.replace(cfg, input_clustered=True)
-    cfg_cs = dataclasses.replace(cfg, input_clustered=True, slim_stage=True)
 
     def variant_c():
         return coalesce_partials(segment(bucketed, cfg_c, rules), cfg_c, "text")
-
-    def variant_d():
-        from fluent_plugin_detect_exceptions_spark.plans.pipeline import (
-            rejoin_ride,
-            slim_split,
-        )
-
-        stage_df, ride = slim_split(bucketed, cfg_cs, "text")
-        rec = coalesce_partials(segment(stage_df, cfg_cs, rules), cfg_cs, "text")
-        return rejoin_ride(rec, ride, cfg_cs)
 
     def checksum(rec):
         return rec.agg(
@@ -161,15 +149,13 @@ def main() -> None:
 
     a_sum, b_sum = checksum(variant_a()), checksum(variant_b())
     assert tuple(a_sum) == tuple(b_sum), (tuple(a_sum), tuple(b_sum))
-    c_sum, d_sum = checksum(variant_c()), checksum(variant_d())
-    assert tuple(a_sum) == tuple(c_sum) == tuple(d_sum)
+    assert tuple(a_sum) == tuple(checksum(variant_c()))
 
     results = {}
     for name, fn in (
         ("A_ride_along", variant_a),
         ("B_slim_rejoin", variant_b),
         ("C_clustered_ride", variant_c),
-        ("D_clustered_slim", variant_d),
     ):
         best, stages = None, None
         for _ in range(reps):

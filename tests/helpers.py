@@ -22,7 +22,7 @@ def scan_lines(
     """lines: list of str|None.  Returns (ScanResult, rules)."""
     rules = compile_rules(languages)
     s = pd.Series(lines, dtype=object)
-    cls, g_tab, b_tab, _ = classify(s, rules)
+    cls, g_tab, b_tab = classify(s, rules)
     rawlen = np.array([len(x) if x is not None else 0 for x in lines], dtype=np.int64)
     has_nl = np.array([("\n" in x) if x is not None else False for x in lines], dtype=bool)
     gap = np.zeros(len(lines), dtype=bool)

@@ -79,7 +79,7 @@ def assert_equivalent(lines):
         assert not bad, f"pattern {pat!r} disagrees with re on {bad[:5]!r}"
 
     codes, uniques = encode(arr)
-    cls, g_tab, b_tab, absorbing = classify_encoded(codes, uniques, RULES)
+    cls, g_tab, b_tab = classify_encoded(codes, uniques, RULES)
     for i, line in enumerate(lines):
         if line is None:
             assert cls[i] == NIL_CLS
@@ -87,7 +87,6 @@ def assert_equivalent(lines):
         g, b = python_tables(want[i])
         assert g_tab[cls[i]].tolist() == g, line
         assert b_tab[cls[i]].tolist() == b, line
-        assert absorbing[cls[i]] == all(s == START for s in g), line
 
 
 def test_fixture_catalogue():
@@ -108,9 +107,9 @@ def test_non_ascii_lines_take_the_re_fallback():
 
 
 def test_classify_wrapper_nulls_and_all_null_batch():
-    cls, g_tab, b_tab, _ = classify(pd.Series(["panic: x\n", None, np.nan, "panic: x\n"], dtype=object), RULES)
+    cls, g_tab, b_tab = classify(pd.Series(["panic: x\n", None, np.nan, "panic: x\n"], dtype=object), RULES)
     assert cls[1] == cls[2] == NIL_CLS and cls[0] == cls[3] >= 0
-    cls, g_tab, b_tab, _ = classify(pd.Series([None, None], dtype=object), RULES)
+    cls, g_tab, b_tab = classify(pd.Series([None, None], dtype=object), RULES)
     assert (cls == NIL_CLS).all() and g_tab.shape == (1, N_STATES)
 
 

