@@ -9,9 +9,10 @@ conversations are hash-disjoint across buckets, and the pipeline is
 conversation-local by construction.
 
 The manifest is a JSONL file (one entry per completed bucket, written after
-the bucket's output is durable).  A crashed bucket leaves a partial
-``bucket=K`` directory that the retry overwrites (dynamic partition
-overwrite semantics).
+the bucket's output is durable) that the driver writes with local file I/O,
+so its directory is a local path or a ``file:`` URI (``local_dir``).  A
+crashed bucket leaves a partial ``bucket=K`` directory that the retry
+overwrites (dynamic partition overwrite semantics).
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import json
 import logging
 import os
 from dataclasses import dataclass
+from urllib.parse import unquote, urlsplit
 
 
 class ManifestMismatch(RuntimeError):
@@ -28,6 +30,22 @@ class ManifestMismatch(RuntimeError):
     the manifest was written under — skipping old bucket ids under a new
     bucket count (or changed semantics) would silently drop or duplicate
     conversations."""
+
+
+def local_dir(path: str) -> str:
+    """``path`` as a local directory: a plain path unchanged, a ``file:``
+    URI as its path.  Any other scheme raises ValueError — ``open`` would
+    otherwise write ``s3://bucket/x`` to the relative local path
+    ``s3:/bucket/x`` and read it back as if it were durable."""
+    parts = urlsplit(path)
+    if not parts.scheme:
+        return path
+    if parts.scheme == "file" and parts.netloc in ("", "localhost"):
+        return unquote(parts.path)
+    raise ValueError(
+        f"--checkpoint-dir {path!r}: the checkpoint manifest and run metadata "
+        f"are written with local file I/O; give a local path or a file: URI"
+    )
 
 
 def config_fingerprint(cfg, n_buckets: int) -> str:
@@ -102,6 +120,9 @@ def prepass_fingerprint(config_fp: str, input_path: str, df) -> str:
 @dataclass
 class BucketManifest:
     path: str
+
+    def __post_init__(self):
+        self.path = local_dir(self.path)
 
     def _file(self) -> str:
         return os.path.join(self.path, "manifest.jsonl")

@@ -47,9 +47,11 @@ class PipelineConfig:
     #: chunking off.  Active with or without a `stream` column — the chunk
     #: group key is (conv[, stream], chunk), so a skewed stream inside a
     #: huge conversation still spreads across executors.  Must be >= 0.
-    #: ``segmenter.chunk_plan`` decides per input whether chunking runs; a
-    #: fallback list longer than ``segmenter.MAX_FALLBACK_CONVS`` turns it
-    #: off for the run.
+    #: ``segmenter.chunk_plan`` decides per input whether chunking runs and
+    #: ``segmenter.resolve_chunk_plan`` settles that into the config (0 when
+    #: it does not, or when the fallback list is longer than
+    #: ``segmenter.MAX_FALLBACK_CONVS``).  At 0 every segment is one
+    #: partial and ``coalesce_partials`` is a projection.
     chunk_size: int = 1 << 17
     #: warm-up overlap rows prepended to each chunk to find a scan
     #: synchronization point.  Must be >= 0 and < chunk_size.

@@ -7,7 +7,7 @@ Usage (cluster):
         --py-files dist/fluent_plugin_detect_exceptions_spark.zip \\
         scripts/run_job.py \\
         --input s3://bucket/transcripts/ --output s3://bucket/routed/ \\
-        --checkpoint-dir s3://bucket/_ckpt --buckets 64 --languages all
+        --checkpoint-dir /mnt/shared/_ckpt --buckets 64 --languages all
 
 or locally:
 
@@ -17,7 +17,10 @@ or locally:
 Processes the conversation key space bucket by bucket (checkpoint.py);
 each bucket writes routed records fanned out by sink, per-sink counts, input
 lineage and per-partition metrics, then appends a manifest entry.  Re-running
-the same command resumes after the last durable bucket.
+the same command resumes after the last durable bucket.  The driver writes
+the manifest with local file I/O, so the checkpoint dir is a local path or a
+``file:`` URI (an object-store ``--output`` needs an explicit
+``--checkpoint-dir``).
 """
 
 from __future__ import annotations
@@ -25,7 +28,9 @@ from __future__ import annotations
 import argparse
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Observation, SparkSession, functions as F
 
 from .checkpoint import (
@@ -38,7 +43,7 @@ from .config import PipelineConfig
 from .metrics import input_lineage, write_run_metadata
 from .operators.coalesce import coalesce_partials
 from .operators.route import with_out_tag, with_sink
-from .operators.segmenter import chunk_plan, segment
+from .operators.segmenter import chunk_plan, resolve_chunk_plan, segment
 from .plans.pipeline import rejoin_ride, slim_split
 from .rules import FAMILIES, compile_rules
 from .sources.transcripts import read_transcripts
@@ -52,7 +57,9 @@ def parse_args(argv=None) -> argparse.Namespace:
     p = argparse.ArgumentParser(description="detect-exceptions batch pipeline")
     p.add_argument("--input", required=True, help="parquet path or Iceberg table")
     p.add_argument("--output", required=True)
-    p.add_argument("--checkpoint-dir", default=None, help="manifest dir (default <output>/_checkpoint)")
+    p.add_argument("--checkpoint-dir", default=None,
+                   help="manifest dir, a local path or file: URI "
+                        "(default <output>/_checkpoint)")
     p.add_argument("--buckets", type=int, default=16)
     p.add_argument("--languages", default="all", help="comma-separated")
     p.add_argument("--message", default="text")
@@ -106,9 +113,12 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
     ride the routed write as observed metrics (CollectMetricsExec — computed
     in-plan, exactly-once even under task retries), instead of re-running the
     classify+FSM stage or re-reading the written parquet.  The only extra
-    pass is input lineage, a 2-column footer-light scan (column pruning)."""
+    pass is input lineage, a 2-column footer-light scan (column pruning)
+    that runs beside the routed write.  An exception from either write
+    propagates."""
     t0 = time.perf_counter()
     msg_field = cfg.resolve_message_field(df.columns)
+    cfg = resolve_chunk_plan(cfg, chunk_plan(df, cfg, rules, msg_field))
     stage_df, ride = slim_split(df, cfg, msg_field)
     seg = segment(stage_df, cfg, rules)
     seg_obs = Observation(f"seg_metrics_{bucket}")
@@ -116,31 +126,39 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
         seg_obs,
         F.coalesce(F.sum("n_part"), F.lit(0)).alias("rows_emitted"),
         F.count(F.lit(1)).alias("segments_started"),
-        F.coalesce(F.sum((~F.col("sync_ok")).cast("long")), F.lit(0)).alias("parts_unsynced"),
+        F.count_if(~F.col("sync_ok")).alias("parts_unsynced"),
     )
     routed = with_sink(
         with_out_tag(rejoin_ride(coalesce_partials(seg, cfg, msg_field), ride, cfg), cfg)
     )
     sink_obs = Observation(f"sink_counts_{bucket}")
     routed = routed.observe(
-        sink_obs,
-        *[
-            F.coalesce(F.sum((F.col("sink") == s).cast("long")), F.lit(0)).alias(s)
-            for s in SINKS
-        ],
+        sink_obs, *[F.count_if(F.col("sink") == s).alias(s) for s in SINKS]
     )
-    out_path = f"{out_dir}/routed/bucket={bucket}"
-    routed.write.mode("overwrite").partitionBy("sink").parquet(out_path)
+    # lineage: separate narrow pass (needs per-input-file grouping, which an
+    # observation cannot express); column-pruned to the conv and order
+    # columns.  It runs on a second driver thread beside the routed write;
+    # the wrapper carries the job group, local properties and tags over.
+    lineage = input_lineage(df, cfg.conv_col, cfg.order_col).write.mode("overwrite")
+    write_lineage = inheritable_thread_target(spark)(
+        lambda: lineage.parquet(f"{out_dir}/lineage/bucket={bucket}")
+    )
+    with ThreadPoolExecutor(1) as pool:
+        lineage_done = pool.submit(write_lineage)
+        try:
+            routed.write.mode("overwrite").partitionBy("sink").parquet(
+                f"{out_dir}/routed/bucket={bucket}"
+            )
+        finally:
+            lineage_done.result()
     counts = {s: int(n) for s, n in sink_obs.get.items() if n}
     metrics = {k: int(v) for k, v in seg_obs.get.items()}
     n_routed = sum(counts.values())
-    # lineage: separate narrow pass (needs per-input-file grouping, which an
-    # observation cannot express); column-pruned to the conv and order columns
-    input_lineage(df, cfg.conv_col, cfg.order_col).write.mode("overwrite").parquet(
-        f"{out_dir}/lineage/bucket={bucket}"
-    )
-    spark.createDataFrame(
-        [dict(metrics, bucket=bucket, rows_out=n_routed)]
+    # one row of literals: a JVM-only plan, where createDataFrame would
+    # round-trip the row through a Python worker
+    row = dict(metrics, bucket=bucket, rows_out=n_routed)
+    spark.range(1, numPartitions=1).select(
+        *[F.lit(row[k]).cast("long").alias(k) for k in sorted(row)]
     ).write.mode("overwrite").parquet(f"{out_dir}/metrics/bucket={bucket}")
     return {
         "rows_out": n_routed,
@@ -152,6 +170,8 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
 
 def main(argv=None) -> None:
     args = parse_args(argv)
+    # refuses a non-local checkpoint dir before any Spark work
+    manifest = BucketManifest(args.checkpoint_dir or f"{args.output}/_checkpoint")
     spark = (
         SparkSession.builder.appName("detect-exceptions")
         .config("spark.sql.adaptive.enabled", "true")
@@ -161,8 +181,6 @@ def main(argv=None) -> None:
     )
     cfg = build_config(args)
     rules = compile_rules(cfg.languages)
-    ckpt_dir = args.checkpoint_dir or f"{args.output}/_checkpoint"
-    manifest = BucketManifest(ckpt_dir)
     # refuse to resume across a --buckets or config change (ADVICE r1):
     # bucket ids are only comparable under the same partitioning + semantics
     fp = config_fingerprint(cfg, args.buckets)
@@ -180,21 +198,14 @@ def main(argv=None) -> None:
     cfg_run = cfg
     n_fallback = 0
     if cfg.chunk_size and cfg.known_fallback_convs is None:
-        import dataclasses
-
         pre_fp = prepass_fingerprint(fp, args.input, src)
         pre = manifest.load_prepass(pre_fp)
         if pre is None:
             pre = run_prepass(src, cfg, rules)
             manifest.save_prepass(pre_fp, pre)
         fb = pre.get("fallback_convs")
-        if fb is not None:
-            n_fallback = len(fb)
-            cfg_run = dataclasses.replace(
-                cfg, known_fallback_convs=tuple(fb), assume_long_convs=True
-            )
-        else:
-            cfg_run = dataclasses.replace(cfg, chunk_size=0)
+        n_fallback = len(fb or ())
+        cfg_run = resolve_chunk_plan(cfg, fb)
 
     src = src.withColumn("__bucket", bucket_of(cfg.conv_col, args.buckets))
 
@@ -211,7 +222,7 @@ def main(argv=None) -> None:
             totals[k] = totals.get(k, 0) + v
 
     write_run_metadata(
-        ckpt_dir, run_id,
+        manifest.path, run_id,
         {"buckets": args.buckets, "resumed_from": len(done), "sink_totals": totals,
          "n_fallback_convs": n_fallback},
     )

@@ -42,9 +42,13 @@ def input_lineage(df: DataFrame, conv_col: str, order_col: str) -> DataFrame:
 
 
 def write_run_metadata(path: str, run_id: str, payload: dict) -> None:
-    """Small JSON sidecar (driver-side) describing a completed run step."""
+    """Small JSON sidecar (driver-side) describing a completed run step;
+    ``path`` is a local directory or ``file:`` URI."""
     import os
 
+    from .checkpoint import local_dir
+
+    path = local_dir(path)
     os.makedirs(path, exist_ok=True)
     payload = dict(payload, run_id=run_id, written_at=time.time())
     with open(f"{path}/{run_id}.json", "w") as f:

@@ -33,6 +33,8 @@ ride-along columns.  ``coalesce.coalesce_partials`` stitches them.
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -475,7 +477,10 @@ def chunk_plan(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
     near-free gate (one max(); parquet aggregate pushdown reads only footers
     when enabled) that skips the pre-pass, the warm-up duplication and the
     salted keys.  The fallback list is ``known_fallback_convs`` when given,
-    else the pre-pass ``find_fallback_convs``."""
+    else the pre-pass ``find_fallback_convs``.  ``resolve_chunk_plan``
+    settles the answer into the config.  Input lacking a column the scan
+    needs is refused first (``validate_input``)."""
+    validate_input(df.columns, cfg)
     if cfg.chunk_size == 0:
         return None
     if not cfg.assume_long_convs:
@@ -485,6 +490,20 @@ def chunk_plan(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
     if cfg.known_fallback_convs is not None:
         return list(cfg.known_fallback_convs)
     return find_fallback_convs(df, cfg, rules, msg_field)
+
+
+def resolve_chunk_plan(cfg: PipelineConfig, fallback: list | None) -> PipelineConfig:
+    """``cfg`` with a ``chunk_plan`` result settled into it, so a later
+    ``chunk_plan`` over the same input starts no job.  No plan (None), or a
+    fallback list over ``MAX_FALLBACK_CONVS`` (adversarial input: too many
+    unsynchronizable conversations, processed whole rather than blow up the
+    driver list), turns chunking off with ``chunk_size=0``; any other list
+    becomes ``known_fallback_convs`` under ``assume_long_convs``."""
+    if fallback is None or len(fallback) > MAX_FALLBACK_CONVS:
+        return dataclasses.replace(cfg, chunk_size=0)
+    return dataclasses.replace(
+        cfg, known_fallback_convs=tuple(fallback), assume_long_convs=True
+    )
 
 
 def segment(
@@ -500,15 +519,10 @@ def segment(
     per-segment concat for text nobody reads (r6)."""
     rules = rules or compile_rules(cfg.languages)
     msg_field = cfg.resolve_message_field(df.columns)
-    validate_input(df.columns, cfg)
-
-    fallback = chunk_plan(df, cfg, rules, msg_field)
-    # over the cap (adversarial input: too many unsynchronizable
-    # conversations) everything is processed whole rather than blow up the
-    # driver list
-    chunked = fallback is not None and len(fallback) <= MAX_FALLBACK_CONVS
+    cfg = resolve_chunk_plan(cfg, chunk_plan(df, cfg, rules, msg_field))
+    chunked = cfg.chunk_size > 0
     if chunked:
-        df = _with_chunks(df, cfg, fallback)
+        df = _with_chunks(df, cfg, cfg.known_fallback_convs)
 
     out_schema = partial_schema(df.schema, cfg, msg_field, emit_text)
 

@@ -1,14 +1,20 @@
 """End-to-end plan assembly: scan → classify+segment → coalesce → route →
 aggregate (SURVEY §3.1 hot path, Spark-first).
 
-Shuffle budget (north rule 'bounded-shuffle'):
+Shuffle budget (north rule 'bounded-shuffle') of the routed plan:
   1. hash exchange on (conv_id[, stream][, chunk_id]) for the mapInArrow
-     segmentation — the salted key spreads skewed conversations;
-  2. hash exchange on (conv_id[, stream], seg_start_turn) for the coalesce
-     groupBy — segment keys are fine-grained, so no residual skew;
-  3. a tiny map-side-combined exchange for per-sink counts.
-The slim rewrite's ride rejoin adds one exchange of the narrow ride table;
-everything else is narrow.
+     segmentation — chunk_id (chunked input only) salts the key so a
+     skewed conversation spreads across tasks;
+  2. chunked input only: hash exchange on (conv_id[, stream],
+     seg_start_turn) for the coalesce stitch groupBy — segment keys are
+     fine-grained, so no residual skew.  Unchunked input (the usual case:
+     no conversation reaches chunk_size) has one partial per segment and
+     coalesces with a projection;
+  3. the slim rewrite's ride rejoin: the narrow ride table is exchanged on
+     (conv_id[, stream], first_turn_idx), and so are the records unless
+     exchange 2 already partitions them on those keys.
+The counts-only plan (``route.detect_sink_counts``) is exchange 1 plus a
+tiny map-side-combined exchange of per-sink counts.
 """
 
 from __future__ import annotations
@@ -18,7 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import PipelineConfig
 from ..operators.coalesce import coalesce_partials
 from ..operators.route import detect_sink_counts, with_out_tag, with_sink
-from ..operators.segmenter import segment
+from ..operators.segmenter import chunk_plan, resolve_chunk_plan, segment
 from ..rules import compile_rules
 
 
@@ -77,8 +83,8 @@ def rejoin_ride(grouped: DataFrame, ride: DataFrame | None, cfg: PipelineConfig)
     3.4 s driver stall at 8.5M rows (event-log evidence in
     OPTIMIZATION_r06.md), and a driver OOM waiting to happen at scale.  A
     per-input-row table is never a sane broadcast, so SMJ is the right plan
-    at every size; the grouped side reuses its aggregation partitioning, so
-    the hint adds no exchange."""
+    at every size.  A stitched (chunked) grouped side reuses its aggregation
+    partitioning; an unchunked one is exchanged on the join keys."""
     if ride is None:
         return grouped
     return grouped.join(ride.hint("merge"), [*cfg.group_keys(), "first_turn_idx"], "left")
@@ -89,9 +95,12 @@ def detect_exceptions(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     Output columns: group keys, first_turn_idx, ride-along first-row fields,
     <message field> (combined text), n_lines, lang, sink, out_tag, sync_ok.
+    The chunk plan (max-turn gate, fallback pre-pass) is resolved here,
+    once, so unchunked input coalesces with a projection.
     """
     rules = compile_rules(cfg.languages)
     msg_field = cfg.resolve_message_field(df.columns)
+    cfg = resolve_chunk_plan(cfg, chunk_plan(df, cfg, rules, msg_field))
     stage_df, ride = slim_split(df, cfg, msg_field)
     grouped = coalesce_partials(segment(stage_df, cfg, rules), cfg, msg_field)
     return with_sink(with_out_tag(rejoin_ride(grouped, ride, cfg), cfg))

@@ -226,6 +226,81 @@ def test_negative_chunk_size_or_warmup_rejected():
         jobmod.build_config(args)
 
 
+def test_checkpoint_dir_must_be_local(tmp_path, monkeypatch):
+    """The manifest and run metadata are written with local file I/O: a
+    plain path and a file: URI work, and any other scheme is refused
+    instead of landing in a relative directory named after the URI."""
+    from fluent_plugin_detect_exceptions_spark.metrics import write_run_metadata
+
+    monkeypatch.chdir(tmp_path)
+    for bad in ("s3://bucket/routed/_checkpoint", "hdfs://nn/ckpt", "file://host/ckpt"):
+        with pytest.raises(ValueError, match="--checkpoint-dir"):
+            BucketManifest(bad)
+        with pytest.raises(ValueError, match="--checkpoint-dir"):
+            write_run_metadata(bad, "run", {})
+    assert os.listdir(tmp_path) == []
+
+    for i, uri in enumerate((f"file://{tmp_path}/ck0", f"file:{tmp_path}/ck1",
+                             f"file://localhost{tmp_path}/ck2")):
+        BucketManifest(uri).mark_done(i, {"rows_out": 1})
+        assert BucketManifest(str(tmp_path / f"ck{i}")).completed().keys() == {i}
+    write_run_metadata(f"file://{tmp_path}/ck0", "run", {})
+    assert (tmp_path / "ck0" / "run.json").exists()
+
+    # job.main refuses the default <output>/_checkpoint of an object-store
+    # output before it starts any Spark work
+    def no_session(self):
+        raise AssertionError("job.main built a session before checking --checkpoint-dir")
+
+    monkeypatch.setattr("pyspark.sql.SparkSession.Builder.getOrCreate", no_session)
+    with pytest.raises(ValueError, match="--checkpoint-dir"):
+        jobmod.main(["--input", "in", "--output", "s3://bucket/routed"])
+    with pytest.raises(ValueError, match="--checkpoint-dir"):
+        jobmod.main(["--input", "in", "--output", str(tmp_path / "o"),
+                     "--checkpoint-dir", "s3://bucket/_ckpt"])
+
+
+def test_lineage_failure_fails_the_bucket(spark, tmp_path, monkeypatch):
+    """The lineage write runs beside the routed write; when it fails,
+    run_bucket raises, and job.main writes no manifest entry for that
+    bucket (the buckets before it stay done)."""
+    src = str(tmp_path / "t.parquet")
+    out = str(tmp_path / "out_fail")
+    synth_transcripts(spark, 8, repeats=1).write.mode("overwrite").parquet(src)
+    real = jobmod.input_lineage
+    calls = []
+
+    @F.udf("long")
+    def boom(n):
+        raise RuntimeError("lineage write failed")
+
+    def failing_lineage(df, conv_col, order_col, fail_on=1):
+        calls.append(1)
+        lineage = real(df, conv_col, order_col)
+        if len(calls) < fail_on:
+            return lineage
+        return lineage.withColumn("n_rows", boom("n_rows"))
+
+    monkeypatch.setattr(jobmod, "input_lineage", failing_lineage)
+    cfg = PipelineConfig()
+    with pytest.raises(Exception, match="lineage write failed"):
+        jobmod.run_bucket(spark, spark.read.parquet(src), cfg,
+                          compile_rules(cfg.languages), out, 0)
+
+    calls.clear()
+    monkeypatch.setattr(
+        jobmod, "input_lineage",
+        lambda df, c, o: failing_lineage(df, c, o, fail_on=2),
+    )
+    monkeypatch.setattr(
+        "pyspark.sql.SparkSession.Builder.getOrCreate", lambda self: spark
+    )
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    with pytest.raises(Exception, match="lineage write failed"):
+        jobmod.main(["--input", src, "--output", out, "--buckets", "2"])
+    assert sorted(BucketManifest(f"{out}/_checkpoint").completed()) == [0]
+
+
 def test_prepass_fingerprint_tracks_content_not_just_names(spark, tmp_path):
     """ADVICE r3: an in-place overwrite that keeps the same file NAMES must
     still invalidate the pre-pass fingerprint (size/mtime are part of the

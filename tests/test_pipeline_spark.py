@@ -646,3 +646,115 @@ def test_counts_fast_path_emits_no_text(spark):
     # and the default keeps it
     full = segment(df.select(*cfg.scan_columns(df.columns)), cfg)
     assert "text_part" in full.columns
+
+
+def _stitch_exchanges(plan: str) -> list[str]:
+    return [
+        ln for ln in plan.splitlines()
+        if "Exchange hashpartitioning" in ln and "seg_start_turn" in ln
+    ]
+
+
+def _edge_rows(spark, df):
+    """``df`` plus a conversation with nil messages and one whose trace is
+    interrupted by event-time gaps of 20 s."""
+    java = fx.lines(fx.JAVA_EXC)
+    texts = [java[0], java[1], None, "plain\n", None]
+    extra = [
+        {"conv_id": "niltest", "turn_idx": i, "role": "u", "tool": "t",
+         "ts": BASE_EPOCH + i, "text": t}
+        for i, t in enumerate(texts)
+    ] + [
+        {"conv_id": "gaps", "turn_idx": i, "role": "u", "tool": "t",
+         "ts": BASE_EPOCH + 20 * (i // 3), "text": t}
+        for i, t in enumerate(java)
+    ]
+    return df.unionByName(
+        spark.createDataFrame(extra).withColumn("ts", F.timestamp_seconds("ts"))
+        .select(*df.columns)
+    )
+
+
+def test_unchunked_coalesce_projection_equals_aggregate(spark):
+    """With chunk_size=0 every segment is one partial and coalesce_partials
+    is a projection.  It must equal the stitch aggregate row for row, with
+    the same column names and types.  The aggregate reference is the
+    unresolved default config on the same short input: the max-turn gate
+    leaves it unchunked, but its chunk_size is still > 0, so it aggregates."""
+    from fluent_plugin_detect_exceptions_spark.operators.coalesce import (
+        coalesce_partials,
+    )
+    from fluent_plugin_detect_exceptions_spark.operators.segmenter import segment
+
+    base = _edge_rows(spark, synth_transcripts(spark, 12, repeats=2))
+    as_message = base.withColumnRenamed("text", "message")
+    for frame, kw in (
+        (base, dict()),
+        (base, dict(stream="tool")),
+        (as_message, dict(message="")),
+        (base, dict(message="absent")),
+        (base, dict(force_line_breaks=True)),
+        (base, dict(max_lines=3)),
+        (base, dict(multiline_flush_interval=5.0)),
+    ):
+        proj_cfg, agg_cfg = PipelineConfig(chunk_size=0, **kw), PipelineConfig(**kw)
+        msg = agg_cfg.resolve_message_field(frame.columns)
+        proj = coalesce_partials(segment(frame, proj_cfg), proj_cfg, msg)
+        agg = coalesce_partials(segment(frame, agg_cfg), agg_cfg, msg)
+        assert "Aggregate" not in _simple_plan(proj), kw
+        assert "Aggregate" in _simple_plan(agg), kw
+        assert [(f.name, f.dataType) for f in proj.schema] == [
+            (f.name, f.dataType) for f in agg.schema
+        ], kw
+        got = sorted((tuple(r) for r in proj.collect()), key=repr)
+        assert got == sorted((tuple(r) for r in agg.collect()), key=repr), kw
+        assert len(got) > 0
+
+
+def test_unchunked_routed_plan_has_no_stitch(spark):
+    """detect_exceptions resolves the chunk plan once: unchunked input
+    (chunk_size=0, or the default config when no conversation reaches
+    chunk_size) has no seg_start_turn exchange and no stitch aggregate,
+    while chunked input keeps both."""
+    df = synth_transcripts(spark, 12, repeats=3)
+    assert df.agg(F.max("turn_idx")).first()[0] >= 64
+    for cfg in (PipelineConfig(chunk_size=0), PipelineConfig()):
+        plan = _simple_plan(detect_exceptions(df, cfg))
+        assert not _stitch_exchanges(plan), plan
+        assert "ObjectHashAggregate" not in plan, plan
+    plan = _simple_plan(detect_exceptions(df, PipelineConfig(chunk_size=64, warmup=16)))
+    assert _stitch_exchanges(plan), plan
+    assert "ObjectHashAggregate" in plan, plan
+
+
+def test_resolve_chunk_plan():
+    """``resolve_chunk_plan`` settles a chunk plan into the config, and
+    ``chunk_plan`` then answers from the config without a Spark job."""
+    import dataclasses
+
+    from fluent_plugin_detect_exceptions_spark.operators.segmenter import (
+        MAX_FALLBACK_CONVS,
+        chunk_plan,
+        resolve_chunk_plan,
+    )
+
+    cfg = PipelineConfig(chunk_size=64, warmup=16)
+    assert resolve_chunk_plan(cfg, None) == dataclasses.replace(cfg, chunk_size=0)
+    for fb in ([], ["c1", "c7"], [f"c{i}" for i in range(MAX_FALLBACK_CONVS)]):
+        got = resolve_chunk_plan(cfg, fb)
+        assert got == dataclasses.replace(
+            cfg, known_fallback_convs=tuple(fb), assume_long_convs=True
+        )
+    over = [f"c{i}" for i in range(MAX_FALLBACK_CONVS + 1)]
+    assert resolve_chunk_plan(cfg, over) == dataclasses.replace(cfg, chunk_size=0)
+
+    class NoJobs:
+        """Stands in for a DataFrame; any Spark work fails the test."""
+        columns = ["conv_id", "turn_idx", "text"]
+
+        def __getattr__(self, name):
+            raise AssertionError(f"chunk_plan started Spark work: {name}")
+
+    rules = None  # never reached: no pre-pass runs on a resolved config
+    assert chunk_plan(NoJobs(), resolve_chunk_plan(cfg, None), rules, "text") is None
+    assert chunk_plan(NoJobs(), resolve_chunk_plan(cfg, ["c1"]), rules, "text") == ["c1"]
