@@ -103,15 +103,6 @@ def gram_hashes_of_base(base: Column, k: int = 7) -> Column:
     ).otherwise(F.array(stable_hash64(base)))
 
 
-def gram_hashes(col: Column, k: int = 7) -> Column:
-    """gram_hashes_of_base over raw text.  Convenience form for one-off
-    expressions: the normalization regex re-evaluates once per gram inside
-    the interpreted lambda (O(len²) per document) — pipelines should
-    materialize ``normalized(col)`` first and call gram_hashes_of_base, as
-    winnow_fingerprints_df does."""
-    return gram_hashes_of_base(normalized(col), k)
-
-
 def window_minima(grams_col: Column, w: int = 5) -> Column:
     """Distinct minima of every ``w``-wide sliding window over a
     MATERIALIZED gram-hash array column.  Must be fed an attribute, not the

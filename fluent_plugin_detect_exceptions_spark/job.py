@@ -41,10 +41,8 @@ from .checkpoint import (
 )
 from .config import PipelineConfig
 from .metrics import input_lineage, write_run_metadata
-from .operators.coalesce import coalesce_partials
-from .operators.route import with_out_tag, with_sink
 from .operators.segmenter import chunk_plan, resolve_chunk_plan, segment
-from .plans.pipeline import rejoin_ride, slim_split
+from .plans.pipeline import routed_records, slim_split
 from .rules import FAMILIES, compile_rules
 from .sources.transcripts import read_transcripts
 
@@ -128,9 +126,7 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
         F.count(F.lit(1)).alias("segments_started"),
         F.count_if(~F.col("sync_ok")).alias("parts_unsynced"),
     )
-    routed = with_sink(
-        with_out_tag(rejoin_ride(coalesce_partials(seg, cfg, msg_field), ride, cfg), cfg)
-    )
+    routed = routed_records(seg, ride, cfg, msg_field)
     sink_obs = Observation(f"sink_counts_{bucket}")
     routed = routed.observe(
         sink_obs, *[F.count_if(F.col("sink") == s).alias(s) for s in SINKS]

@@ -54,24 +54,6 @@ def shingles(text_col: Column, k: int = DEFAULT_SHINGLE_K) -> Column:
     return F.when(n >= k, F.array_distinct(seq)).otherwise(F.array(base))
 
 
-def minhash_signature(
-    text_col: Column,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    k: int = DEFAULT_SHINGLE_K,
-) -> Column:
-    """Array of ``num_hashes`` minhash values (bigint)."""
-    sh = shingles(text_col, k)
-
-    def hasher(j: int):
-        # NB: must be a 1-arg lambda — a `lambda s, j=j` would be treated by
-        # F.transform as its (element, index) binary form.
-        prefix = f"{j}:"
-        return lambda s: stable_hash64(F.concat(F.lit(prefix), s))
-
-    sigs = [F.array_min(F.transform(sh, hasher(j))) for j in range(num_hashes)]
-    return F.array(*sigs)
-
-
 _WS_RE = None
 
 

@@ -71,8 +71,12 @@ def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     Projects the input to exactly the columns the scan needs before the
     stage: a Python map stage is OPAQUE to Catalyst, so column pruning does
     not push through it — without the explicit select, ride-along columns
-    the counts never use would ride shuffle #1 and both Arrow transfers."""
-    from .segmenter import segment
+    the counts never use would ride shuffle #1 and both Arrow transfers.
+    Input lacking a column the scan needs is refused before that projection
+    (``validate_input``), as on every other entry point."""
+    from .segmenter import segment, validate_input
+
+    validate_input(df.columns, cfg)
 
     # emit_text=False: counts never read the combined text, and the Python
     # stage is opaque to Catalyst's column pruning — not PRODUCING the text

@@ -66,17 +66,16 @@ MAX_FALLBACK_CONVS = 10_000
 
 def validate_input(columns, cfg: PipelineConfig) -> None:
     """Refuse an input schema that lacks a column the scan needs: the
-    conversation and order columns, and the event-time column when the gap
-    flush is on.  Shared by the batch and streaming entry points."""
+    conversation, order and stream columns, and the event-time column when
+    the gap flush is on.  Shared by every batch and streaming entry point."""
     if cfg.multiline_flush_interval is not None and cfg.ts_col not in columns:
         raise ValueError(
             f"multiline_flush_interval requires the event-time column "
             f"{cfg.ts_col!r}, which is missing from the input schema {columns}"
         )
-    if cfg.order_col not in columns or cfg.conv_col not in columns:
-        raise ValueError(
-            f"input schema {columns} lacks {cfg.conv_col!r}/{cfg.order_col!r}"
-        )
+    needed = [cfg.conv_col, cfg.order_col] + ([cfg.stream] if cfg.stream is not None else [])
+    if any(c not in columns for c in needed):
+        raise ValueError(f"input schema {columns} lacks {'/'.join(map(repr, needed))}")
 
 
 def ride_along_cols(df_columns, cfg: PipelineConfig, msg_field: str | None) -> list[str]:

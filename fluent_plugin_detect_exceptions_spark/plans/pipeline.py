@@ -1,6 +1,11 @@
 """End-to-end plan assembly: scan → classify+segment → coalesce → route →
 aggregate (SURVEY §3.1 hot path, Spark-first).
 
+``routed_records`` is the one partials → routed records path: coalesce,
+the slim rewrite's ride rejoin, ``out_tag`` and ``sink``.
+``detect_exceptions``, ``job.run_bucket`` and the stream
+(``streaming.stream_pipeline``) all call it on their segment partials.
+
 Shuffle budget (north rule 'bounded-shuffle') of the routed plan:
   1. hash exchange on (conv_id[, stream][, chunk_id]) for the mapInArrow
      segmentation — chunk_id (chunked input only) salts the key so a
@@ -69,11 +74,18 @@ def slim_split(df: DataFrame, cfg: PipelineConfig, msg_field: str | None):
     return df.select(*[c for c in df.columns if c in keep]), ride
 
 
-def rejoin_ride(grouped: DataFrame, ride: DataFrame | None, cfg: PipelineConfig) -> DataFrame:
-    """Attach first-row ride-along fields to coalesced records.  Exact by
-    construction: ``first_turn_idx`` is the segment's first row's turn, and
-    (conv[, stream], turn) is unique in the input, so the left join matches
-    exactly the row ``min_by`` would have picked.
+def routed_records(partials: DataFrame, ride: DataFrame | None, cfg: PipelineConfig,
+                   msg_field: str | None) -> DataFrame:
+    """Segment partials → routed records: ``coalesce_partials``, the ride
+    rejoin, ``out_tag`` and ``sink``.  The one partials-to-records path of
+    ``detect_exceptions``, ``job.run_bucket`` and the stream; ``cfg`` has
+    its chunk plan resolved (``chunk_size == 0``: a projection).
+
+    The rejoin (``ride`` from ``slim_split``; None skips it) attaches
+    first-row ride-along fields.  Exact by construction: ``first_turn_idx``
+    is the segment's first row's turn, and (conv[, stream], turn) is unique
+    in the input, so the left join matches exactly the row ``min_by`` would
+    have picked.
 
     The MERGE hint pins a sort-merge join (r6, guide §3.1): the ride table
     has the same cardinality as the input, but Catalyst's size estimate
@@ -83,11 +95,12 @@ def rejoin_ride(grouped: DataFrame, ride: DataFrame | None, cfg: PipelineConfig)
     3.4 s driver stall at 8.5M rows (event-log evidence in
     OPTIMIZATION_r06.md), and a driver OOM waiting to happen at scale.  A
     per-input-row table is never a sane broadcast, so SMJ is the right plan
-    at every size.  A stitched (chunked) grouped side reuses its aggregation
+    at every size.  A stitched (chunked) record side reuses its aggregation
     partitioning; an unchunked one is exchanged on the join keys."""
-    if ride is None:
-        return grouped
-    return grouped.join(ride.hint("merge"), [*cfg.group_keys(), "first_turn_idx"], "left")
+    recs = coalesce_partials(partials, cfg, msg_field)
+    if ride is not None:
+        recs = recs.join(ride.hint("merge"), [*cfg.group_keys(), "first_turn_idx"], "left")
+    return with_sink(with_out_tag(recs, cfg))
 
 
 def detect_exceptions(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -102,8 +115,7 @@ def detect_exceptions(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     msg_field = cfg.resolve_message_field(df.columns)
     cfg = resolve_chunk_plan(cfg, chunk_plan(df, cfg, rules, msg_field))
     stage_df, ride = slim_split(df, cfg, msg_field)
-    grouped = coalesce_partials(segment(stage_df, cfg, rules), cfg, msg_field)
-    return with_sink(with_out_tag(rejoin_ride(grouped, ride, cfg), cfg))
+    return routed_records(segment(stage_df, cfg, rules), ride, cfg, msg_field)
 
 
 def detect_with_counts(df: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:

@@ -2,21 +2,25 @@
 
 ``readStream`` source → ``applyInPandasWithState`` per FSM stream group
 (``cfg.group_keys()``: the conversation, and the demux column when
-``cfg.stream`` is set) → the batch pipeline's records, with ``out_tag`` and
-``sink`` added in the JVM by ``route.with_out_tag``/``route.with_sink``.
+``cfg.stream`` is set) emitting the batch kernel's segment partials →
+``plans.pipeline.routed_records``, the batch job's partials-to-records path.
+A stream never chunks, so every partial it emits is a whole record and the
+coalesce is a projection: the records (lang named by ``coalesce.lang_name``,
+``out_tag``, ``sink``) are built in the JVM exactly as in the batch job.
 
 Each micro-batch of one group runs through the batch kernel's partials step
 (``segmenter._scan_partition_fused_arrow``) with the previous batch's
 ``fsm.ScanCarry`` and last event time, so classify, the FSM scan, the gap
 flush, the limits and the per-segment concat are the batch code.  The state
-function only stitches the partials it returns: rows before the first
-segment start (``seg_start_turn == -1``) continue the open segment carried in
-state; a carried segment with no such continuation closes; the last partial
-stays in state while the out-carry is open; every other partial is a
-finished record.  The carry chains exactly (``fsm.scan``'s ``entry_carry``;
-tests/test_streaming.py drives this function against the oracle at random
-micro-batch cuts), so micro-batch boundaries are invisible: the stream emits
-the batch records, minus each group's segment still open at the end.
+function only stitches the partial carried in state: rows before the first
+segment start (``seg_start_turn == -1``) extend its ``text_part`` and
+``n_part``; a carried partial with no such continuation closes; the last
+partial stays in state while the out-carry is open; every other partial is
+emitted as the kernel returned it.  The carry chains exactly
+(``fsm.scan``'s ``entry_carry``; tests/test_streaming.py drives this
+function against the oracle at random micro-batch cuts), so micro-batch
+boundaries are invisible: the stream emits the batch records, minus each
+group's segment still open at the end.
 
 The idle-timeout flush (out_detect_exceptions.rb:116-132) maps to
 ``GroupStateTimeout.ProcessingTimeTimeout`` (or the event-time watermark)
@@ -27,7 +31,6 @@ terminates under an ``availableNow`` trigger.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -38,62 +41,39 @@ from pyspark.sql.types import (
     BooleanType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
 from ..config import PipelineConfig
 from ..operators import fsm
-from ..operators.route import with_out_tag, with_sink
 from ..operators.segmenter import (
+    _arrow_partial_schema,
     _scan_partition_fused_arrow,
-    ride_along_cols,
+    partial_schema,
+    resolve_chunk_plan,
     validate_input,
 )
-from ..rules import FAMILIES, CompiledRules, compile_rules
+from ..plans.pipeline import routed_records
+from ..rules import CompiledRules, compile_rules
 
 #: State-format version.  v2 switched ``last_ts`` from epoch seconds to
-#: microseconds; v3 keeps the open segment as a record with the input's
-#: ride-along columns.  Either change alters the state schema, so Spark's
-#: checkpoint state-schema check rejects an older checkpoint on resume; the
-#: guard below discards (not misreads) state of a different version that is
-#: schema-compatible.
-STATE_VERSION = 3
-
-#: lang_id → family name; lang_id -1 indexes the trailing None
-_LANGS = np.array([*FAMILIES, None], dtype=object)
-
-
-def record_fields(schema: StructType, cfg: PipelineConfig, msg_field: str | None) -> list:
-    """One record's fields after the group keys, as ``coalesce_partials``
-    gives them to the batch path."""
-    fields = [StructField("first_turn_idx", LongType(), False)]
-    fields += [schema[c] for c in ride_along_cols(schema.names, cfg, msg_field)]
-    if msg_field is not None:
-        fields.append(StructField(msg_field, StringType(), True))
-    return fields + [
-        StructField("n_lines", LongType(), False),
-        StructField("lang", StringType(), True),
-    ]
-
-
-def output_schema(schema: StructType, cfg: PipelineConfig, msg_field: str | None) -> StructType:
-    """The state function's output for input ``schema``: the group keys, the
-    record fields and ``sync_ok`` (always true: a stream never chunks)."""
-    return StructType(
-        [schema[k] for k in cfg.group_keys()]
-        + record_fields(schema, cfg, msg_field)
-        + [StructField("sync_ok", BooleanType(), False)]
-    )
+#: microseconds; v3 kept the open segment as a record with the input's
+#: ride-along columns; v4 keeps it as the kernel's partial.  Each change
+#: alters the state schema, so Spark's checkpoint state-schema check rejects
+#: an older checkpoint on resume; the guard below discards (not misreads)
+#: state of a different version that is schema-compatible.
+STATE_VERSION = 4
 
 
 def state_schema(schema: StructType, cfg: PipelineConfig, msg_field: str | None) -> StructType:
     """Per-group state: the version, the ``fsm.ScanCarry`` fields in order,
-    the last event time (µs) and the open segment's record (null when the
-    carry is closed)."""
+    the last event time (µs) and the open segment's partial without the
+    group keys (null when the carry is closed)."""
+    keys = cfg.group_keys()
     seg = StructType(
-        [StructField(f.name, f.dataType, True) for f in record_fields(schema, cfg, msg_field)]
+        [StructField(f.name, f.dataType, True)
+         for f in partial_schema(schema, cfg, msg_field) if f.name not in keys]
     )
     return StructType(
         [
@@ -111,30 +91,25 @@ def state_schema(schema: StructType, cfg: PipelineConfig, msg_field: str | None)
 
 def make_state_func(cfg: PipelineConfig, schema: StructType,
                     rules: CompiledRules | None = None, event_time: bool = False):
-    """The ``applyInPandasWithState`` function for input ``schema``."""
+    """The ``applyInPandasWithState`` function for input ``schema``: it
+    emits segment partials (``segmenter.partial_schema``), each one a whole
+    record."""
     rules = rules or compile_rules(cfg.languages)
     msg_field = cfg.resolve_message_field(schema.names)
     keys = cfg.group_keys()
-    seg_names = [f.name for f in record_fields(schema, cfg, msg_field)]
     # tz-naive timestamps: Spark hands the function session-local naive
     # values and reads them back the same way
     in_arrow = to_arrow_schema(schema, timestamp_utc=False)
-    out_arrow = to_arrow_schema(output_schema(schema, cfg, msg_field), timestamp_utc=False)
-    # the partials column each output column comes from
-    src = {"first_turn_idx": "seg_start_turn", msg_field: "text_part", "n_lines": "n_part"}
+    out_arrow = _arrow_partial_schema(in_arrow, cfg, msg_field)
+    seg_names = [n for n in out_arrow.names if n not in keys]
     timeout_ms = (
         int(cfg.multiline_flush_interval * 1000)
         if cfg.multiline_flush_interval is not None
         else None
     )
 
-    def records(parts) -> pa.Table:
-        lang = pa.array(_LANGS[parts.column("lang_id").to_numpy()], pa.string())
-        cols = [lang if c == "lang" else parts.column(src.get(c, c)) for c in out_arrow.names]
-        return pa.Table.from_arrays(cols, schema=out_arrow)
-
     def carried(key, seg) -> dict:
-        return {**dict(zip(keys, key)), **dict(zip(seg_names, seg)), "sync_ok": True}
+        return {**dict(zip(keys, key)), **dict(zip(seg_names, seg))}
 
     def func(key, pdfs, state: GroupState):
         st = state.get if state.exists else None
@@ -156,21 +131,21 @@ def make_state_func(cfg: PipelineConfig, schema: StructType,
         parts, (out, last_ts) = _scan_partition_fused_arrow(
             tbl, cfg, rules, msg_field, carry=carry
         )
-        recs = records(parts)
         if carry[0].open:
-            rec = carried(key, st[7])
-            if recs.num_rows and recs.column("first_turn_idx")[0].as_py() == -1:
+            seg = carried(key, st[7])
+            if parts.num_rows and parts.column("seg_start_turn")[0].as_py() == -1:
                 # rows before the first segment start continue the carried one
-                cont = recs.slice(0, 1).to_pylist()[0]
-                rec[msg_field] += cont[msg_field]
-                rec["n_lines"] += cont["n_lines"]
-                recs = recs.slice(1)
-            recs = pa.concat_tables([pa.Table.from_pylist([rec], schema=out_arrow), recs])
+                cont = parts.slice(0, 1).to_pylist()[0]
+                # null parts join as "", as coalesce's array_join skips them
+                seg["text_part"] = (seg["text_part"] or "") + (cont["text_part"] or "")
+                seg["n_part"] += cont["n_part"]
+                parts = parts.slice(1)
+            parts = pa.concat_tables([pa.Table.from_pylist([seg], schema=out_arrow), parts])
         open_seg = None
         if out.open:
-            last = recs.slice(recs.num_rows - 1).to_pylist()[0]
+            last = parts.slice(parts.num_rows - 1).to_pylist()[0]
             open_seg = tuple(last[c] for c in seg_names)
-            recs = recs.slice(0, recs.num_rows - 1)
+            parts = parts.slice(0, parts.num_rows - 1)
         state.update(
             (STATE_VERSION, out.state, out.open, out.count, out.bytes,
              out.prev_status, last_ts, open_seg)
@@ -190,7 +165,7 @@ def make_state_func(cfg: PipelineConfig, schema: StructType,
                 state.setTimeoutTimestamp(max(cand, state.getCurrentWatermarkMs() + 1))
             else:
                 state.setTimeoutDuration(timeout_ms)
-        yield recs.to_pandas()
+        yield parts.to_pandas()
 
     return func
 
@@ -295,11 +270,12 @@ def detect_exceptions_stream(
         )
     else:
         timeout = GroupStateTimeout.ProcessingTimeTimeout
-    out = stream_df.groupBy(*cfg.group_keys()).applyInPandasWithState(
+    parts = stream_df.groupBy(*cfg.group_keys()).applyInPandasWithState(
         func,
-        output_schema(schema, cfg, msg_field),
+        partial_schema(schema, cfg, msg_field),
         state_schema(schema, cfg, msg_field),
         "append",
         timeout,
     )
-    return with_sink(with_out_tag(out, cfg))
+    # a stream never chunks: every emitted partial is a whole record
+    return routed_records(parts, None, resolve_chunk_plan(cfg, None), msg_field)

@@ -20,7 +20,9 @@ from pyspark.sql.types import (
 )
 
 from fluent_plugin_detect_exceptions_spark.config import PipelineConfig
+from fluent_plugin_detect_exceptions_spark.operators.route import detect_sink_counts
 from fluent_plugin_detect_exceptions_spark.plans.pipeline import detect_exceptions
+from fluent_plugin_detect_exceptions_spark.rules import FAMILIES
 from fluent_plugin_detect_exceptions_spark.sources.transcripts import synth_transcripts
 from fluent_plugin_detect_exceptions_spark.streaming.stream_pipeline import (
     detect_exceptions_stream,
@@ -366,7 +368,7 @@ def test_streaming_emit_scales_linearly():
             out = pd.concat(list(func(("c",), [pdf], state)), ignore_index=True)
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-        assert out["n_lines"].max() == n + 1  # the whole trace, one record
+        assert out["n_part"].max() == n + 1  # the whole trace, one record
         return best
 
     t10 = run(10_000)
@@ -375,10 +377,11 @@ def test_streaming_emit_scales_linearly():
 
 
 def _state_func_records(func, key, batches, state) -> list[tuple]:
-    """Drive ``func`` over one group's micro-batches; the emitted records as
-    (first_turn_idx, role, text, lang, n_lines)."""
+    """Drive ``func`` over one group's micro-batches; the emitted partials,
+    each a whole record, as (first_turn_idx, role, text, lang, n_lines)."""
     return [
-        (r["first_turn_idx"], r["role"], r["text"], r["lang"], r["n_lines"])
+        (r["seg_start_turn"], r["role"], r["text_part"],
+         FAMILIES[r["lang_id"]] if r["lang_id"] >= 0 else None, r["n_part"])
         for pdf in batches
         for recs in func(key, [pdf], state)
         for r in recs.to_dict("records")
@@ -472,7 +475,7 @@ def test_state_func_many_segments_scales_linearly():
             out = pd.concat(list(func(("c",), [pdf], _FakeState())), ignore_index=True)
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
-        assert len(out) == n and (out["n_lines"] == 1).all()
+        assert len(out) == n and (out["n_part"] == 1).all()
         return best
 
     t32 = run(32_000)
@@ -481,9 +484,10 @@ def test_state_func_many_segments_scales_linearly():
 
 
 def test_stream_rejects_what_batch_rejects(spark, tmp_path):
-    """The stream validates its input schema with the batch path's check: a
-    flush interval without the event-time column, and a missing order
-    column, raise the same ValueError in both."""
+    """The stream and the counts path validate their input schema with the
+    batch path's check: a flush interval without the event-time column, a
+    missing order column and a missing stream column raise the same
+    ValueError on every entry point."""
     from fluent_plugin_detect_exceptions_spark.operators.segmenter import segment
 
     schema = "conv_id string, turn_idx int, text string"
@@ -492,11 +496,14 @@ def test_stream_rejects_what_batch_rejects(spark, tmp_path):
     for cfg, match in (
         (PipelineConfig(multiline_flush_interval=5), "requires the event-time column 'ts'"),
         (PipelineConfig(order_col="seq"), "lacks 'conv_id'/'seq'"),
+        (PipelineConfig(stream="tool"), "lacks 'conv_id'/'turn_idx'/'tool'"),
     ):
         with pytest.raises(ValueError, match=match):
             detect_exceptions_stream(stream, cfg)
         with pytest.raises(ValueError, match=match):
             segment(batch, cfg)
+        with pytest.raises(ValueError, match=match):
+            detect_sink_counts(batch, cfg)
 
 
 def _ride_model(df):
@@ -528,6 +535,7 @@ def _gappy_ts(df):
         pytest.param(PipelineConfig(force_line_breaks=True), _strip_newlines, id="force_line_breaks"),
         pytest.param(PipelineConfig(max_lines=3), None, id="max_lines"),
         pytest.param(PipelineConfig(multiline_flush_interval=5), _gappy_ts, id="flush_interval"),
+        pytest.param(PipelineConfig(message="absent"), None, id="no_message_field"),
     ],
 )
 def test_streaming_equals_batch_on_config(spark, tmp_path, cfg, prepare):
