@@ -39,7 +39,9 @@ class PipelineConfig:
     # --- scale knobs (north rule: explicit partitioning / skew handling) ---
     #: conversation key column.
     conv_col: str = "conv_id"
-    #: ordering column within a conversation.
+    #: ordering column within a conversation: non-null and unique per
+    #: (conv[, stream]).  Segments are named by their first turn, so the
+    #: scan stage refuses a null or a duplicate turn at run time.
     order_col: str = "turn_idx"
     #: event-time column (timeout gaps).
     ts_col: str = "ts"
@@ -78,19 +80,6 @@ class PipelineConfig:
     #: run's manifest over the same immutable input): skips the sync pre-pass
     #: entirely.  None = discover with the pre-pass; () = "none exist".
     known_fallback_convs: tuple | None = None
-    #: debug guard for the slim rewrite's uniqueness precondition (ADVICE
-    #: r3).  The shuffled path drops ride-along columns (role/tool/...)
-    #: before the scan stage and re-joins first-row fields onto the
-    #: coalesced records by (conv[, stream], first_turn_idx)
-    #: (``pipeline.slim_split``: shuffle #1 shrank 47% at 13.7M turns, see
-    #: BASELINE.md).  That rejoin is exact only when (conv[, stream], turn)
-    #: is unique in the input; a replayed duplicate row fans it out and
-    #: duplicates that segment's record.  When True, ``slim_split`` — and so
-    #: both ``detect_exceptions`` and the batch job — runs ONE extra exact
-    #: check job over the ride table's join key and raises on any duplicate.
-    #: Turn it on when the ingest path can replay rows (at-least-once
-    #: delivery) or while qualifying a new source, off in steady state.
-    slim_check_unique: bool = False
     #: the input's partitions already hold WHOLE conversations (a
     #: conv_id-bucketed table read with bucketed scan forced, or an Iceberg
     #: bucket(N, conv_id) table via storage-partitioned read): skip the

@@ -52,7 +52,9 @@ def fused_sink_counts(partials: DataFrame) -> DataFrame:
       (a dropped nil row isolates into a zero-partial segment, and the
       warm-up replay of a boundary-spanning start is excluded from partials),
       so the first partial carries the segment-start turn and later chunks'
-      partials carry strictly greater turns;
+      partials carry strictly greater turns.  This needs (conv[, stream],
+      turn) unique in the input: two rows sharing the start turn would both
+      match.  The scan stage refuses such input (``segmenter._sorted_groups``);
     * a record's lang/sink is its FIRST partial's ``lang_id`` (the same
       packed-min rule ``coalesce_partials`` uses).
 
@@ -73,7 +75,9 @@ def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     not push through it — without the explicit select, ride-along columns
     the counts never use would ride shuffle #1 and both Arrow transfers.
     Input lacking a column the scan needs is refused before that projection
-    (``validate_input``), as on every other entry point."""
+    (``validate_input``), as on every other entry point.  ``segment`` runs
+    ``chunk_plan`` per call; a ``cfg`` already settled by
+    ``resolve_chunk_plan`` skips the max-turn gate and the pre-pass."""
     from .segmenter import segment, validate_input
 
     validate_input(df.columns, cfg)

@@ -138,7 +138,14 @@ def _sorted_groups(tbl, keys: list[str], chunk: np.ndarray, turn: np.ndarray):
     dictionary codes; ``chunk``/``turn`` are the int64 columns from
     ``_int64_col``.  The sort is integer index arithmetic only: no column is
     reordered.  Returns ``(order, starts, ends)`` — the sorting permutation
-    and each group's ``[start, end)`` in sorted positions."""
+    and each group's ``[start, end)`` in sorted positions.
+
+    The turn must be unique within a group: segments are named by their
+    first turn, and the chunk stitch, the counts fast path and the slim
+    rejoin all key on it, so two rows sharing a turn would merge into one
+    segment and fan out its record.  Adjacent sorted rows of one group with
+    the same turn raise ``ValueError``.  Warm-up rows never trip this: a
+    chunk's warm-up turns all lie below its own turns."""
     n = tbl.num_rows
     group_keys = [chunk] + [encode(tbl.column(k).combine_chunks())[0] for k in reversed(keys)]
     order = np.lexsort((turn, *group_keys))
@@ -149,6 +156,16 @@ def _sorted_groups(tbl, keys: list[str], chunk: np.ndarray, turn: np.ndarray):
             k_s = k[order]
             same &= k_s[1:] == k_s[:-1]
         new_group[1:] = ~same
+        turn_s = turn[order]
+        dup = np.flatnonzero(same & (turn_s[1:] == turn_s[:-1]))
+        if len(dup):
+            row = int(order[dup[0]])
+            vals = tuple(tbl.column(k)[row].as_py() for k in keys)
+            raise ValueError(
+                f"duplicate order key: ({', '.join(keys)}) = {vals!r} has turn "
+                f"{int(turn[row])} more than once; the order column must be unique "
+                f"per (conv[, stream]), so dedupe the input on (conv[, stream], turn)"
+            )
     starts = np.flatnonzero(new_group)
     return order, starts, np.append(starts[1:], n)
 

@@ -33,8 +33,6 @@ START_TRACE = 1
 INSIDE_TRACE = 2
 END_TRACE = 3
 
-STATUS_NAMES = ("no_trace", "start_trace", "inside_trace", "end_trace")
-
 
 class Detector:
     """FSM over the compiled rule table; one mutable state cell."""

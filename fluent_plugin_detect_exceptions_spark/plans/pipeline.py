@@ -42,8 +42,8 @@ def slim_split(df: DataFrame, cfg: PipelineConfig, msg_field: str | None):
     the caller proceeds unchanged.
 
     The rejoin is exact only when (conv[, stream], turn) is unique in the
-    input; ``cfg.slim_check_unique`` runs one narrow groupBy job over the
-    ride table's key and raises on a duplicate (ADVICE r3)."""
+    input; the scan stage refuses a duplicate (``segmenter._sorted_groups``),
+    so a job over such input fails instead of duplicating records."""
     if cfg.input_clustered or msg_field is None:
         return df, None
     keep = cfg.scan_columns(df.columns, msg_field)
@@ -55,22 +55,6 @@ def slim_split(df: DataFrame, cfg: PipelineConfig, msg_field: str | None):
         F.col(cfg.order_col).alias("first_turn_idx"),
         *ride_cols,
     )
-    if cfg.slim_check_unique:
-        key = [*cfg.group_keys(), "first_turn_idx"]
-        dup = (
-            ride.groupBy(*key)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            d = dup[0]
-            raise ValueError(
-                f"slim rewrite uniqueness precondition violated: duplicate "
-                f"input rows for key {tuple(d[k] for k in key)} "
-                f"({d['__n']}x); dedupe the input on (conv[, stream], turn)"
-            )
     return df.select(*[c for c in df.columns if c in keep]), ride
 
 
@@ -84,8 +68,8 @@ def routed_records(partials: DataFrame, ride: DataFrame | None, cfg: PipelineCon
     The rejoin (``ride`` from ``slim_split``; None skips it) attaches
     first-row ride-along fields.  Exact by construction: ``first_turn_idx``
     is the segment's first row's turn, and (conv[, stream], turn) is unique
-    in the input, so the left join matches exactly the row ``min_by`` would
-    have picked.
+    in the input (the scan stage that made ``partials`` refuses a duplicate),
+    so the left join matches exactly the row ``min_by`` would have picked.
 
     The MERGE hint pins a sort-merge join (r6, guide §3.1): the ride table
     has the same cardinality as the input, but Catalyst's size estimate
@@ -128,5 +112,9 @@ def detect_with_counts(df: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, D
     collects only counts runs just the cheap path; a caller that collects
     both runs the scan+segment stage twice (Spark has no cross-action CSE) —
     if you materialize ``routed`` anyway, derive counts from it with
-    ``sink_counts(routed)`` (or from its written output) instead."""
+    ``sink_counts(routed)`` (or from its written output) instead.  The chunk
+    plan is settled once here, so the max-turn gate and the pre-pass run
+    once for both legs."""
+    msg_field = cfg.resolve_message_field(df.columns)
+    cfg = resolve_chunk_plan(cfg, chunk_plan(df, cfg, compile_rules(cfg.languages), msg_field))
     return detect_exceptions(df, cfg), detect_sink_counts(df, cfg)

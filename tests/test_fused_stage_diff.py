@@ -199,3 +199,40 @@ def test_arrow_stage_rejects_null_order_column():
     )
     with pytest.raises(ValueError, match="turn_idx"):
         _scan_partition_fused_arrow(tbl, cfg, RULES, "text")[0]
+
+
+def test_arrow_stage_rejects_duplicate_turn_whole_conversation():
+    """Two rows of one conversation with the same turn would merge into one
+    segment named by that turn; the stage refuses them and names the key."""
+    rows = conv_rows([[LINE_POOL[i] for i in range(6)]], False)
+    rows.append(dict(rows[2]))
+    with pytest.raises(ValueError, match=r"\(conv_id\) = \('c0',\) has turn 2 more than once"):
+        run_stage(rows, PipelineConfig())
+
+
+def test_arrow_stage_rejects_duplicate_turn_chunked():
+    """On the chunked layout a duplicated turn raises too, while the warm-up
+    copies of boundary rows (same turn, next chunk) do not: the same table
+    without the duplicate scans exactly."""
+    cfg = PipelineConfig(chunk_size=8, warmup=2)
+    plain = fx.lines(fx.ARBITRARY_TEXT)
+    texts = [plain[i % 4] for i in range(9)] + fx.lines(fx.JAVA_EXC)[:5] + plain * 4
+    rows = conv_rows([texts], False)
+    got, unsynced = run_stage(rows, cfg, cfg.chunk_size, cfg.warmup)
+    assert got == oracle_records(rows, cfg) and not unsynced
+    # turn 15 sits in chunk 1's boundary zone, so it is also a warm-up row
+    # of chunk 2
+    with pytest.raises(ValueError, match=r"\('c0',\) has turn 15 more than once"):
+        run_stage(rows + [dict(rows[15])], cfg, cfg.chunk_size, cfg.warmup)
+
+
+def test_arrow_stage_accepts_same_turn_in_two_streams():
+    """Under ``stream=`` the order key is (conv, stream, turn): the same turn
+    in two stream values is two rows of two groups, not a duplicate."""
+    rows = conv_rows([[LINE_POOL[i] for i in range(8)]], False)
+    rows += [dict(r, tool="t1") for r in rows]
+    cfg = PipelineConfig(stream="tool")
+    got, unsynced = run_stage(rows, cfg)
+    assert got == oracle_records(rows, cfg) and not unsynced
+    with pytest.raises(ValueError, match="more than once"):
+        run_stage(rows, PipelineConfig())

@@ -3,6 +3,7 @@ metrics tables."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -128,8 +129,12 @@ def test_prepass_persisted_and_replayed_on_resume(spark, tmp_path, monkeypatch):
     )
     assert routed.count() == direct.count()
 
-    # a new input file invalidates the prepass fingerprint -> re-discovers
-    synth_transcripts(spark, 2, repeats=1).write.mode("append").parquet(src)
+    # a new input file invalidates the prepass fingerprint -> re-discovers;
+    # its conversations are new ones, so (conv, turn) stays unique
+    new_convs = synth_transcripts(spark, 2, repeats=1).withColumn(
+        "conv_id", F.concat(F.lit("new."), "conv_id")
+    )
+    new_convs.write.mode("append").parquet(src)
     with open(f"{out}/_checkpoint/manifest.jsonl", "w"):
         pass  # clear buckets so the run proceeds (input changed)
     jobmod.main(argv)
@@ -199,17 +204,19 @@ def test_run_bucket_on_renamed_key_columns(spark, tmp_path):
     assert lineage.agg(F.max("approx_convs")).first()[0] > 0
 
 
-def test_run_bucket_checks_slim_uniqueness(spark, tmp_path):
-    """slim_check_unique guards the batch job as it guards
-    detect_exceptions: a duplicated input row raises before anything is
-    written."""
-    df = synth_transcripts(spark, 5, 1)
-    dup = df.unionByName(df.limit(1))
-    cfg = PipelineConfig(slim_check_unique=True)
+def test_run_bucket_refuses_duplicate_order_key(spark, tmp_path):
+    """The batch job refuses a duplicated input row with the default
+    config, naming the key, and leaves no routed or metrics parquet file
+    behind."""
+    from .test_pipeline_spark import DUPLICATE_KEY, with_duplicate_row
+
+    dup = with_duplicate_row(synth_transcripts(spark, 5, 1))
+    cfg = PipelineConfig()
     out = str(tmp_path / "out_dup")
-    with pytest.raises(ValueError, match="uniqueness precondition"):
+    with pytest.raises(Exception, match=DUPLICATE_KEY):
         jobmod.run_bucket(spark, dup, cfg, compile_rules(cfg.languages), out, 0)
-    assert not os.path.exists(f"{out}/routed")
+    for d in ("routed", "metrics"):
+        assert not glob.glob(f"{out}/{d}/**/*.parquet", recursive=True), d
 
 
 def test_negative_chunk_size_or_warmup_rejected():

@@ -619,17 +619,49 @@ def test_sparse_turn_idx(spark):
         assert fx.JAVA_EXC in texts
         assert len(got) == 1 + len(fx.lines(fx.ARBITRARY_TEXT))
 
-def test_slim_check_unique_guard(spark):
-    """ADVICE r3: opt-in exact duplicate-key guard for the slim rejoin —
-    a replayed duplicate (conv, turn) row raises instead of silently
-    fanning out the first-row join; clean input passes."""
-    df = synth_transcripts(spark, 5, 1)
-    cfg = PipelineConfig(slim_check_unique=True)
-    detect_exceptions(df, cfg)  # unique input: constructs fine
+def with_duplicate_row(df):
+    """``df`` plus a second copy of its (conv.000000, turn 0) row."""
+    first = (F.col("conv_id") == "conv.000000") & (F.col("turn_idx") == 0)
+    return df.unionByName(df.filter(first))
 
-    dup = df.unionByName(df.limit(1))
-    with pytest.raises(ValueError, match="uniqueness precondition"):
-        detect_exceptions(dup, cfg)
+
+#: what a duplicated (conv.000000, turn 0) input row raises with
+DUPLICATE_KEY = r"\('conv.000000',\) has turn 0 more than once"
+
+
+def test_duplicate_order_key_raises(spark):
+    """One replayed input row used to merge with its twin into one 2-line
+    segment whose record the slim rejoin then doubled (30 records, n_lines
+    summing to 163 for 161 rows, while the counts path counted 29).  With
+    the default config the scan stage refuses the duplicate in both the
+    routed and the counts plan and names the key; clean input passes."""
+    from fluent_plugin_detect_exceptions_spark.operators.route import detect_sink_counts
+
+    df = synth_transcripts(spark, 5, 1)
+    cfg = PipelineConfig()
+    assert sum(r["n_lines"] for r in detect_exceptions(df, cfg).collect()) == df.count()
+    dup = with_duplicate_row(df)
+    for out in (detect_exceptions(dup, cfg), detect_sink_counts(dup, cfg)):
+        with pytest.raises(Exception, match=DUPLICATE_KEY):
+            out.collect()
+
+
+def test_detect_with_counts_settles_chunk_plan_once(spark, monkeypatch):
+    """On chunked input both legs of ``detect_with_counts`` share one chunk
+    plan: the pre-pass runs once, not once per leg."""
+    from fluent_plugin_detect_exceptions_spark.operators import segmenter
+    from fluent_plugin_detect_exceptions_spark.operators.route import sink_counts
+
+    calls = []
+    real = segmenter.find_fallback_convs
+    monkeypatch.setattr(
+        segmenter, "find_fallback_convs", lambda *a: calls.append(1) or real(*a)
+    )
+    df = synth_transcripts(spark, 5, 2)
+    routed, counts = detect_with_counts(df, PipelineConfig(chunk_size=16, warmup=4))
+    assert len(calls) == 1
+    full = {r["sink"]: r["n"] for r in sink_counts(routed).collect()}
+    assert {r["sink"]: r["n"] for r in counts.collect()} == full
 
 
 def test_counts_fast_path_emits_no_text(spark):

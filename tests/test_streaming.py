@@ -376,6 +376,20 @@ def test_streaming_emit_scales_linearly():
     assert t40 < 10 * max(t10, 1e-4), (t10, t40)
 
 
+def test_state_func_rejects_duplicate_turn():
+    """A turn that appears twice in one group's micro-batch raises in the
+    state function, as in the batch stage."""
+    import pandas as pd
+
+    func = make_state_func(PipelineConfig(), SCHEMA)
+    pdf = pd.DataFrame(
+        {"conv_id": "c", "turn_idx": [0, 1, 1, 2], "role": "u", "text": "plain\n",
+         "tool": "t", "ts": pd.Timestamp(1_700_000_000, unit="s")}
+    )
+    with pytest.raises(ValueError, match=r"\('c',\) has turn 1 more than once"):
+        list(func(("c",), [pdf], _FakeState()))
+
+
 def _state_func_records(func, key, batches, state) -> list[tuple]:
     """Drive ``func`` over one group's micro-batches; the emitted partials,
     each a whole record, as (first_turn_idx, role, text, lang, n_lines)."""
