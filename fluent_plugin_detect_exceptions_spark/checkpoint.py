@@ -101,13 +101,13 @@ def _file_stats(df, files: list[str]) -> list[list]:
 
 
 def prepass_fingerprint(config_fp: str, input_path: str, df) -> str:
-    """Digest binding a persisted pre-pass result (max-turn gate + fallback
-    list) to the (config, input snapshot) it was computed over: the config
-    fingerprint plus the sorted input file list WITH per-file size and
-    modification time (ADVICE r3 — the name-only form silently replayed a
-    stale fallback list after an in-place overwrite of a same-named file;
+    """Digest binding a checkpointed phase result (``data_job``'s global
+    gate ids) to the (config, input snapshot) it was computed over: the
+    config fingerprint plus the sorted input file list WITH per-file size
+    and modification time (ADVICE r3 — a name-only form silently replays a
+    stale result after an in-place overwrite of a same-named file;
     size+mtime make same-name content changes invalidate the entry, so the
-    pre-pass re-runs instead of misreading)."""
+    phase re-runs instead of misreading)."""
     files = sorted(df.inputFiles())
     payload = {
         "config": config_fp,
@@ -126,29 +126,6 @@ class BucketManifest:
 
     def _file(self) -> str:
         return os.path.join(self.path, "manifest.jsonl")
-
-    def _prepass_file(self) -> str:
-        return os.path.join(self.path, "prepass.json")
-
-    def load_prepass(self, fingerprint: str) -> dict | None:
-        """Pre-pass result persisted by an earlier run over the same input
-        snapshot + config, or None (missing or different fingerprint — the
-        caller re-discovers and overwrites)."""
-        try:
-            with open(self._prepass_file()) as f:
-                e = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
-        return e.get("data") if e.get("fingerprint") == fingerprint else None
-
-    def save_prepass(self, fingerprint: str, data: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._prepass_file() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"fingerprint": fingerprint, "data": data}, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._prepass_file())
 
     def completed(self, fingerprint: str | None = None) -> dict[int, dict]:
         """Completed buckets.  When ``fingerprint`` is given, any entry

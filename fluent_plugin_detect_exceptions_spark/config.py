@@ -49,8 +49,10 @@ class PipelineConfig:
     #: chunking off.  Active with or without a `stream` column — the chunk
     #: group key is (conv[, stream], chunk), so a skewed stream inside a
     #: huge conversation still spreads across executors.  Must be >= 0.
-    #: ``segmenter.chunk_plan`` decides per input whether chunking runs and
-    #: ``segmenter.resolve_chunk_plan`` settles that into the config (0 when
+    #: ``segmenter.chunk_plan`` (lazy plans) or ``segmenter.run_verified``
+    #: (the batch job and the counts consumer) decides per input whether
+    #: chunking runs and ``segmenter.resolve_chunk_plan`` settles that into
+    #: the config (0 when
     #: it does not, or when the fallback list is longer than
     #: ``segmenter.MAX_FALLBACK_CONVS``).  At 0 every segment is one
     #: partial and ``coalesce_partials`` is a projection.
@@ -64,6 +66,9 @@ class PipelineConfig:
     #: production log pipeline) saves one driver round trip per run/bucket.
     #: With parquet aggregate pushdown the gate is footer-only anyway, but
     #: job-scheduling latency is the scaling-efficiency tax at small inputs.
+    #: It is the only plan-time job the batch job and ``detect_sink_counts``
+    #: run before their action; the fallback pre-pass runs only after a
+    #: chunk fails to sync.
     assume_long_convs: bool = False
     #: the operator asserts turn_idx is DENSE (0,1,2,... with no holes)
     #: within every FSM stream group (conv[, stream]).  Under that contract
@@ -73,12 +78,18 @@ class PipelineConfig:
     #: pre-pass at 13.7M turns / 32 cores.  Like assume_long_convs, a
     #: production contract knob: if the input violates it, chunk-spanning
     #: segments after a hole are split and flagged sync_ok=False rather than
-    #: silently wrong.  NB: with a `stream` column the contract is per
-    #: (conv, stream), which interleaved streams do NOT satisfy.
+    #: silently wrong, also by the batch job and ``detect_sink_counts``,
+    #: whose repair (``segmenter.run_verified``) runs the pre-pass without
+    #: that half, finds nothing to add and keeps the flagged result.  NB:
+    #: with a `stream` column the contract is per (conv, stream), which
+    #: interleaved streams do NOT satisfy.
     assume_dense_turns: bool = False
-    #: externally supplied fallback-conversation list (e.g. proven by a prior
-    #: run's manifest over the same immutable input): skips the sync pre-pass
-    #: entirely.  None = discover with the pre-pass; () = "none exist".
+    #: externally supplied fallback-conversation list (e.g. found by a prior
+    #: run over the same immutable input).  Lazy plans trust it and skip the
+    #: sync pre-pass; the batch job and ``detect_sink_counts`` start from it
+    #: and still verify their chunk scans, adding what the pre-pass finds
+    #: when one fails to sync.  None = discover with the pre-pass (lazy
+    #: plans) or start from () (eager consumers); () = "none known".
     known_fallback_convs: tuple | None = None
     #: the input's partitions already hold WHOLE conversations (a
     #: conv_id-bucketed table read with bucketed scan forced, or an Iceberg

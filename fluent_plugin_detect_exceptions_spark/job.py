@@ -33,15 +33,10 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark import inheritable_thread_target
 from pyspark.sql import Observation, SparkSession, functions as F
 
-from .checkpoint import (
-    BucketManifest,
-    bucket_of,
-    config_fingerprint,
-    prepass_fingerprint,
-)
+from .checkpoint import BucketManifest, bucket_of, config_fingerprint
 from .config import PipelineConfig
 from .metrics import input_lineage, write_run_metadata
-from .operators.segmenter import chunk_plan, resolve_chunk_plan, segment
+from .operators.segmenter import chunk_gate, resolve_chunk_plan, run_verified, segment
 from .plans.pipeline import routed_records, slim_split
 from .rules import FAMILIES, compile_rules
 from .sources.transcripts import read_transcripts
@@ -96,14 +91,13 @@ def build_config(args: argparse.Namespace) -> PipelineConfig:
 
 
 def run_prepass(src, cfg, rules) -> dict:
-    """Global pre-pass, once per run: ``segmenter.chunk_plan`` (the max-turn
-    gate and, if any conversation is long enough to chunk, the sync/occupancy
-    fallback discovery).  Returns a JSON-serializable payload the checkpoint
-    persists, so a RESUMED run over the same input snapshot replays the
-    result with zero pre-pass jobs (VERDICT r2): ``fallback_convs`` is the
-    discovered list, or None meaning "chunking off"."""
-    msg_field = cfg.resolve_message_field(src.columns)
-    return {"fallback_convs": chunk_plan(src, cfg, rules, msg_field)}
+    """Global plan-time work, once per run: the max-turn gate alone
+    (``segmenter.chunk_gate``).  ``fallback_convs`` is None meaning
+    "chunking off", else the known list (``known_fallback_convs``, or
+    empty).  The fallback pre-pass is not run here: each ``run_bucket``
+    verifies its chunk scans and runs it only after a chunk fails to sync.
+    ``rules`` is unused; it stays in the signature for existing callers."""
+    return {"fallback_convs": chunk_gate(src, cfg)}
 
 
 def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
@@ -112,25 +106,37 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
     in-plan, exactly-once even under task retries), instead of re-running the
     classify+FSM stage or re-reading the written parquet.  The only extra
     pass is input lineage, a 2-column footer-light scan (column pruning)
-    that runs beside the routed write.  An exception from either write
-    propagates."""
+    that runs once, beside the routed write.  An exception from either
+    write propagates.
+
+    The write runs under ``segmenter.run_verified``: its observed
+    ``parts_unsynced`` is the check, and only when a chunk failed to sync
+    does the fallback pre-pass run and the write repeat (overwriting
+    ``routed/bucket=N``) on the repaired plan.  The result and the bucket's
+    metrics row carry ``fallback_convs`` (the length of the list the
+    records were computed with) and ``reruns`` (0 or 1)."""
     t0 = time.perf_counter()
     msg_field = cfg.resolve_message_field(df.columns)
-    cfg = resolve_chunk_plan(cfg, chunk_plan(df, cfg, rules, msg_field))
-    stage_df, ride = slim_split(df, cfg, msg_field)
-    seg = segment(stage_df, cfg, rules)
-    seg_obs = Observation(f"seg_metrics_{bucket}")
-    seg = seg.observe(
-        seg_obs,
-        F.coalesce(F.sum("n_part"), F.lit(0)).alias("rows_emitted"),
-        F.count(F.lit(1)).alias("segments_started"),
-        F.count_if(~F.col("sync_ok")).alias("parts_unsynced"),
-    )
-    routed = routed_records(seg, ride, cfg, msg_field)
-    sink_obs = Observation(f"sink_counts_{bucket}")
-    routed = routed.observe(
-        sink_obs, *[F.count_if(F.col("sink") == s).alias(s) for s in SINKS]
-    )
+
+    def write(settled):
+        stage_df, ride = slim_split(df, settled, msg_field)
+        seg_obs = Observation(f"seg_metrics_{bucket}")
+        seg = segment(stage_df, settled, rules).observe(
+            seg_obs,
+            F.coalesce(F.sum("n_part"), F.lit(0)).alias("rows_emitted"),
+            F.count(F.lit(1)).alias("segments_started"),
+            F.count_if(~F.col("sync_ok")).alias("parts_unsynced"),
+        )
+        sink_obs = Observation(f"sink_counts_{bucket}")
+        routed = routed_records(seg, ride, settled, msg_field).observe(
+            sink_obs, *[F.count_if(F.col("sink") == s).alias(s) for s in SINKS]
+        )
+        routed.write.mode("overwrite").partitionBy("sink").parquet(
+            f"{out_dir}/routed/bucket={bucket}"
+        )
+        metrics = {k: int(v) for k, v in seg_obs.get.items()}
+        return (sink_obs.get, metrics), metrics["parts_unsynced"]
+
     # lineage: separate narrow pass (needs per-input-file grouping, which an
     # observation cannot express); column-pruned to the conv and order
     # columns.  It runs on a second driver thread beside the routed write;
@@ -142,17 +148,16 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
     with ThreadPoolExecutor(1) as pool:
         lineage_done = pool.submit(write_lineage)
         try:
-            routed.write.mode("overwrite").partitionBy("sink").parquet(
-                f"{out_dir}/routed/bucket={bucket}"
-            )
+            (sinks, metrics), fallback, reruns = run_verified(df, cfg, rules, msg_field, write)
         finally:
             lineage_done.result()
-    counts = {s: int(n) for s, n in sink_obs.get.items() if n}
-    metrics = {k: int(v) for k, v in seg_obs.get.items()}
+    counts = {s: int(n) for s, n in sinks.items() if n}
     n_routed = sum(counts.values())
+    n_fallback = len(fallback or ())
     # one row of literals: a JVM-only plan, where createDataFrame would
     # round-trip the row through a Python worker
-    row = dict(metrics, bucket=bucket, rows_out=n_routed)
+    row = dict(metrics, bucket=bucket, rows_out=n_routed, fallback_convs=n_fallback,
+               reruns=reruns)
     spark.range(1, numPartitions=1).select(
         *[F.lit(row[k]).cast("long").alias(k) for k in sorted(row)]
     ).write.mode("overwrite").parquet(f"{out_dir}/metrics/bucket={bucket}")
@@ -160,6 +165,8 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
         "rows_out": n_routed,
         "sink_counts": counts,
         "metrics": metrics,
+        "fallback_convs": n_fallback,
+        "reruns": reruns,
         "seconds": round(time.perf_counter() - t0, 3),
     }
 
@@ -185,27 +192,16 @@ def main(argv=None) -> None:
 
     src = read_transcripts(spark, args.input)
 
-    # plan-time work ONCE per run, not once per bucket: the max-turn gate and
-    # the sync pre-pass are global properties of the input; buckets reuse the
-    # discovered fallback list via known_fallback_convs (2 jobs total instead
-    # of 2 per bucket).  The result is persisted to the checkpoint keyed by
-    # (config, input file set), so a resumed run over the same immutable
-    # input replays it with ZERO pre-pass jobs (VERDICT r2).
-    cfg_run = cfg
-    n_fallback = 0
-    if cfg.chunk_size and cfg.known_fallback_convs is None:
-        pre_fp = prepass_fingerprint(fp, args.input, src)
-        pre = manifest.load_prepass(pre_fp)
-        if pre is None:
-            pre = run_prepass(src, cfg, rules)
-            manifest.save_prepass(pre_fp, pre)
-        fb = pre.get("fallback_convs")
-        n_fallback = len(fb or ())
-        cfg_run = resolve_chunk_plan(cfg, fb)
+    # plan-time work ONCE per run, not once per bucket: the max-turn gate is
+    # a global property of the input.  The fallback pre-pass is not run up
+    # front: each bucket's write verifies its chunk scans and repairs itself
+    # (run_bucket), so input that syncs never pays for it.
+    cfg_run = resolve_chunk_plan(cfg, run_prepass(src, cfg, rules)["fallback_convs"])
 
     src = src.withColumn("__bucket", bucket_of(cfg.conv_col, args.buckets))
 
     totals: dict[str, int] = {}
+    n_fallback = n_reruns = 0
     for b in range(args.buckets):
         if b in done:
             continue
@@ -216,11 +212,13 @@ def main(argv=None) -> None:
         manifest.mark_done(b, dict(info, run_id=run_id), fingerprint=fp)
         for k, v in info["sink_counts"].items():
             totals[k] = totals.get(k, 0) + v
+        n_fallback += info["fallback_convs"]
+        n_reruns += info["reruns"]
 
     write_run_metadata(
         manifest.path, run_id,
         {"buckets": args.buckets, "resumed_from": len(done), "sink_totals": totals,
-         "n_fallback_convs": n_fallback},
+         "n_fallback_convs": n_fallback, "reruns": n_reruns},
     )
     print({"run_id": run_id, "completed_buckets": args.buckets, "sink_totals": totals})
     spark.stop()

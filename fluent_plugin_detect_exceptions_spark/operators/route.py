@@ -15,10 +15,16 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..config import PipelineConfig
 from .coalesce import lang_name
+
+#: per-sink counts as ``detect_sink_counts`` returns them
+COUNTS_SCHEMA = StructType(
+    [StructField("sink", StringType(), False), StructField("n", LongType(), False)]
+)
 
 
 def with_out_tag(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -60,33 +66,61 @@ def fused_sink_counts(partials: DataFrame) -> DataFrame:
 
     Plan: scan-stage exchange → Filter → partial HashAggregate → one tiny
     exchange of ≤(#sinks) rows per partition.  The segment-stitching
-    exchange on (conv, seg_start_turn) never happens.  Asserted by
-    test_fused_sink_counts_plan_elides_stitch_exchange."""
+    exchange on (conv, seg_start_turn) never happens.  Asserted on the
+    executed counts query by test_fused_sink_counts_plan_elides_stitch_exchange."""
     first_partials = partials.filter(F.col("part_min_turn") == F.col("seg_start_turn"))
     return sink_counts(with_sink(first_partials.select(lang_name(F.col("lang_id")).alias("lang"))))
 
 
-def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Counts-only entry point: transcripts → per-sink record counts via the
-    segment-partials fast path.
+def counts_query(df: DataFrame, cfg: PipelineConfig, observation: Observation) -> DataFrame:
+    """The fused counts query ``detect_sink_counts`` collects, over ``cfg``
+    with its chunk plan settled (``segmenter.resolve_chunk_plan``):
+    ``fused_sink_counts`` over text-free partials, with the partials'
+    ``count_if(~sync_ok)`` observed as ``unsynced`` by ``observation``.
 
     Projects the input to exactly the columns the scan needs before the
     stage: a Python map stage is OPAQUE to Catalyst, so column pruning does
     not push through it — without the explicit select, ride-along columns
     the counts never use would ride shuffle #1 and both Arrow transfers.
-    Input lacking a column the scan needs is refused before that projection
-    (``validate_input``), as on every other entry point.  ``segment`` runs
-    ``chunk_plan`` per call; a ``cfg`` already settled by
-    ``resolve_chunk_plan`` skips the max-turn gate and the pre-pass."""
-    from .segmenter import segment, validate_input
+    ``emit_text=False``: counts never read the combined text, and not
+    PRODUCING it is the only way to keep it off the Arrow boundary (r6,
+    guide §4.1); it also skips the per-segment concat entirely."""
+    from .segmenter import segment
 
-    validate_input(df.columns, cfg)
-
-    # emit_text=False: counts never read the combined text, and the Python
-    # stage is opaque to Catalyst's column pruning — not PRODUCING the text
-    # is the only way to keep it off the Arrow boundary (r6, guide §4.1),
-    # and it also skips the per-segment concat work entirely
+    parts = segment(df.select(*cfg.scan_columns(df.columns)), cfg, emit_text=False)
     return fused_sink_counts(
-        segment(df.select(*cfg.scan_columns(df.columns)), cfg, emit_text=False)
+        parts.observe(observation, F.count_if(~F.col("sync_ok")).alias("unsynced"))
     )
 
+
+def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Counts-only entry point: transcripts → per-sink record counts via the
+    segment-partials fast path.  An action: it runs ``counts_query`` under
+    ``segmenter.run_verified`` (the max-turn gate, the counts query, and the
+    fallback pre-pass plus one re-run only if a chunk failed to sync) and
+    returns the rows as a local ``sink string, n bigint`` DataFrame, whose
+    ``collect()`` starts no job.
+
+    Input lacking a column the scan needs is refused before any job
+    (``validate_input``), as on every other entry point.  A ``cfg`` already
+    settled by ``resolve_chunk_plan`` skips the max-turn gate."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..rules import compile_rules
+    from .segmenter import run_verified, validate_input
+
+    validate_input(df.columns, cfg)
+    rules = compile_rules(cfg.languages)
+    msg_field = cfg.resolve_message_field(df.columns)
+
+    def count(settled):
+        obs = Observation("counts_unsynced")
+        rows = counts_query(df, settled, obs).collect()
+        return rows, obs.get["unsynced"]
+
+    rows, _, _ = run_verified(df, cfg, rules, msg_field, count)
+    # an Arrow table becomes a LocalTableScan; a Python list would
+    # round-trip through a Python worker
+    table = pa.Table.from_pylist([r.asDict() for r in rows], schema=to_arrow_schema(COUNTS_SCHEMA))
+    return df.sparkSession.createDataFrame(table, COUNTS_SCHEMA)

@@ -12,9 +12,12 @@ bounded-shuffle, skew-proof plan:
    state and unknown carried buffer because the warm-up contains a
    *synchronization point* — a row after which subset simulation proves the
    state is start_state and the buffer empty under every possible history
-   (``fsm.subset_sync``).  A cheap pre-pass over only the boundary zones
-   finds conversations with an unsynchronizable warm-up (wall-to-wall stack
-   traces); those are processed whole (chunk 0).
+   (``fsm.subset_sync``).  Each chunk group reports a failed proof as
+   ``sync_ok=False``; a cheap pre-pass over only the boundary zones finds
+   the conversations with an unsynchronizable warm-up (wall-to-wall stack
+   traces), which are processed whole (chunk 0).  Lazy plans run it up
+   front (``chunk_plan``); eager consumers run it only after a chunk fails
+   to sync (``run_verified``).
 3. **Partition-level scan**: ``repartition(conv[, chunk])`` + ``mapInArrow``.
    Each partition arrives as one Arrow table; its text is dictionary-encoded
    once and classified per DISTINCT line in Arrow C++ (log data repeats
@@ -483,19 +486,16 @@ def find_fallback_convs(
     return [r["conv"] for r in bad]
 
 
-def chunk_plan(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
-               msg_field: str | None) -> list | None:
-    """Whether and how ``segment()`` chunks ``df``: None means no chunking,
-    otherwise the conversations to process whole (the fallback list).
+def chunk_gate(df: DataFrame, cfg: PipelineConfig) -> list | None:
+    """The max-turn gate alone: None means no chunking, otherwise the
+    fallback list known so far (``known_fallback_convs``, or empty).
 
     Chunking is off when ``chunk_size`` is 0 or, unless
     ``assume_long_convs``, when no conversation reaches ``chunk_size`` — a
     near-free gate (one max(); parquet aggregate pushdown reads only footers
     when enabled) that skips the pre-pass, the warm-up duplication and the
-    salted keys.  The fallback list is ``known_fallback_convs`` when given,
-    else the pre-pass ``find_fallback_convs``.  ``resolve_chunk_plan``
-    settles the answer into the config.  Input lacking a column the scan
-    needs is refused first (``validate_input``)."""
+    salted keys.  Input lacking a column the scan needs is refused first
+    (``validate_input``)."""
     validate_input(df.columns, cfg)
     if cfg.chunk_size == 0:
         return None
@@ -503,8 +503,20 @@ def chunk_plan(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
         max_turn = df.agg(F.max(cfg.order_col)).first()[0]
         if max_turn is None or max_turn < cfg.chunk_size:
             return None
-    if cfg.known_fallback_convs is not None:
-        return list(cfg.known_fallback_convs)
+    return list(cfg.known_fallback_convs or ())
+
+
+def chunk_plan(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
+               msg_field: str | None) -> list | None:
+    """Whether and how a lazy plan (``segment()``) chunks ``df``, decided up
+    front: ``chunk_gate``, then, unless ``known_fallback_convs`` is given,
+    the pre-pass ``find_fallback_convs``.  ``resolve_chunk_plan`` settles
+    the answer into the config.  Eager consumers go through
+    ``run_verified`` instead, which runs the pre-pass only after a chunk
+    fails to sync."""
+    plan = chunk_gate(df, cfg)
+    if plan is None or cfg.known_fallback_convs is not None:
+        return plan
     return find_fallback_convs(df, cfg, rules, msg_field)
 
 
@@ -520,6 +532,44 @@ def resolve_chunk_plan(cfg: PipelineConfig, fallback: list | None) -> PipelineCo
     return dataclasses.replace(
         cfg, known_fallback_convs=tuple(fallback), assume_long_convs=True
     )
+
+
+def run_verified(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
+                 msg_field: str | None, run):
+    """Chunk, check, repair: the chunk plan of an eager consumer (one that
+    runs its action here, such as the batch job's routed write or the
+    counts query).
+
+    Chunking is settled by ``chunk_gate`` alone, so the fallback list is
+    ``known_fallback_convs`` or empty, and ``run(settled_cfg)`` performs the
+    action, returning ``(result, unsynced)`` with ``unsynced`` an in-plan
+    ``count_if(~sync_ok)`` over the partials.  The scan verifies itself:
+    every chunk group with rows of its own emits at least one partial (its
+    first scanned row is force-reset, hence emitted), and a group is
+    ``sync_ok=False`` exactly when the pre-pass would route its
+    conversation whole — no synchronization point in the warm-up, or an
+    occupied chunk whose warm-up zone is empty.  So ``unsynced == 0`` proves
+    every chunk's entry state and the result equals the whole-conversation
+    scan.  Otherwise the pre-pass ``find_fallback_convs`` runs, its list is
+    unioned with the known one, and ``run`` repeats once on that plan —
+    the one ``chunk_plan`` would have chosen.  A repair whose list adds no
+    conversation cannot change the result and is skipped; that, like a
+    second non-zero count, happens only when ``assume_dense_turns`` is
+    violated (or there is no message field), and the result stays flagged.
+
+    Returns ``(result, fallback, reruns)``: ``fallback`` is the list the
+    result was computed with (None: not chunked), ``reruns`` 0 or 1."""
+    plan = chunk_gate(df, cfg)
+    settled = resolve_chunk_plan(cfg, plan)
+    result, unsynced = run(settled)
+    if not unsynced:
+        return result, plan, 0
+    found = find_fallback_convs(df, settled, rules, msg_field)
+    repaired = list(dict.fromkeys([*plan, *found]))
+    if len(repaired) == len(plan):
+        return result, plan, 0
+    result, _ = run(resolve_chunk_plan(settled, repaired))
+    return result, repaired, 1
 
 
 def segment(

@@ -59,17 +59,18 @@ from ..rules import CompiledRules, compile_rules
 
 #: State-format version.  v2 switched ``last_ts`` from epoch seconds to
 #: microseconds; v3 kept the open segment as a record with the input's
-#: ride-along columns; v4 keeps it as the kernel's partial.  Each change
+#: ride-along columns; v4 keeps it as the kernel's partial; v5 adds the
+#: group's last turn, which a later micro-batch must stay above.  Each change
 #: alters the state schema, so Spark's checkpoint state-schema check rejects
 #: an older checkpoint on resume; the guard below discards (not misreads)
 #: state of a different version that is schema-compatible.
-STATE_VERSION = 4
+STATE_VERSION = 5
 
 
 def state_schema(schema: StructType, cfg: PipelineConfig, msg_field: str | None) -> StructType:
     """Per-group state: the version, the ``fsm.ScanCarry`` fields in order,
-    the last event time (µs) and the open segment's partial without the
-    group keys (null when the carry is closed)."""
+    the last event time (µs), the last turn seen and the open segment's
+    partial without the group keys (null when the carry is closed)."""
     keys = cfg.group_keys()
     seg = StructType(
         [StructField(f.name, f.dataType, True)
@@ -84,6 +85,7 @@ def state_schema(schema: StructType, cfg: PipelineConfig, msg_field: str | None)
             StructField("nbytes", LongType(), False),
             StructField("prev_status", IntegerType(), False),
             StructField("last_ts", LongType(), True),
+            StructField("last_turn", LongType(), True),
             StructField("seg", seg, True),
         ]
     )
@@ -121,18 +123,29 @@ def make_state_func(cfg: PipelineConfig, schema: StructType,
         if state.hasTimedOut:
             state.remove()
             if st is not None and st[2]:
-                yield pa.Table.from_pylist([carried(key, st[7])], schema=out_arrow).to_pandas()
+                yield pa.Table.from_pylist([carried(key, st[8])], schema=out_arrow).to_pandas()
             return
 
         carry = (fsm.ScanCarry(*st[1:6]), st[6]) if st is not None else (fsm.ScanCarry(), None)
         tbl = pa.Table.from_pandas(
             pd.concat(list(pdfs), ignore_index=True), schema=in_arrow, preserve_index=False
         )
+        lo, hi = (v.as_py() for v in pc.min_max(tbl.column(cfg.order_col)).values())
+        last_turn = st[7] if st is not None else None
+        if last_turn is not None and lo is not None and lo <= last_turn:
+            # the kernel refuses a turn repeated inside one batch; a replay
+            # across batches would merge into the carried segment silently
+            raise ValueError(
+                f"duplicate order key: ({', '.join(keys)}) = {tuple(key)!r} has turn "
+                f"{lo} at or below turn {last_turn} of an earlier micro-batch; "
+                f"the order column must rise across the micro-batches of a "
+                f"(conv[, stream]), so dedupe the source on (conv[, stream], turn)"
+            )
         parts, (out, last_ts) = _scan_partition_fused_arrow(
             tbl, cfg, rules, msg_field, carry=carry
         )
         if carry[0].open:
-            seg = carried(key, st[7])
+            seg = carried(key, st[8])
             if parts.num_rows and parts.column("seg_start_turn")[0].as_py() == -1:
                 # rows before the first segment start continue the carried one
                 cont = parts.slice(0, 1).to_pylist()[0]
@@ -148,7 +161,7 @@ def make_state_func(cfg: PipelineConfig, schema: StructType,
             parts = parts.slice(0, parts.num_rows - 1)
         state.update(
             (STATE_VERSION, out.state, out.open, out.count, out.bytes,
-             out.prev_status, last_ts, open_seg)
+             out.prev_status, last_ts, last_turn if hi is None else hi, open_seg)
         )
         if timeout_ms is not None:
             if event_time:

@@ -31,9 +31,15 @@ def main() -> None:
         lsh_candidate_buckets,
     )
     from fluent_plugin_detect_exceptions_spark.operators.pack import pack_sequences
+    from pyspark.sql import Observation
+
     from fluent_plugin_detect_exceptions_spark.operators.route import (
-        detect_sink_counts,
+        counts_query,
         sink_counts,
+    )
+    from fluent_plugin_detect_exceptions_spark.operators.segmenter import (
+        chunk_gate,
+        resolve_chunk_plan,
     )
     from fluent_plugin_detect_exceptions_spark.operators.similarity import cosine_topk
     from fluent_plugin_detect_exceptions_spark.plans.pipeline import detect_exceptions
@@ -84,7 +90,11 @@ def main() -> None:
         "exception_pipeline_bucketed": lambda: sink_counts(
             detect_exceptions(bucketed, cfg_b)
         ),
-        "sink_counts_fast": lambda: detect_sink_counts(transcripts, cfg),
+        # detect_sink_counts is an action; this is the query it collects
+        "sink_counts_fast": lambda: counts_query(
+            transcripts, resolve_chunk_plan(cfg, chunk_gate(transcripts, cfg)),
+            Observation("counts_unsynced"),
+        ),
         "dedup_exact": lambda: docs.groupBy(F.md5("text")).count(),
         "minhash_lsh": lambda: lsh_candidate_buckets(docs),
         "text_analysis": lambda: docs.select(

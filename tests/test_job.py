@@ -86,59 +86,52 @@ def test_job_end_to_end_and_resume(spark, tmp_path, monkeypatch):
         jobmod.main(argv + ["--max-lines", "7"])
 
 
-def test_prepass_persisted_and_replayed_on_resume(spark, tmp_path, monkeypatch):
-    """VERDICT r2: the max-turn gate + fallback discovery run ONCE; a resumed
-    run over the same input snapshot + config replays the persisted result
-    with zero pre-pass jobs.  A changed input file set invalidates it."""
+def test_resume_over_synced_input_runs_no_prepass(spark, tmp_path, monkeypatch):
+    """The job runs the max-turn gate up front and the fallback pre-pass only
+    after a chunk fails to sync, so it persists no pre-pass result: a run
+    plus a partial resume over chunked input whose chunk scans all
+    synchronize make no pre-pass call and write no ``prepass.json``, the
+    run metadata reports no fallback conversation and no re-run, and the
+    routed records match ``detect_exceptions``."""
+    from fluent_plugin_detect_exceptions_spark.operators import segmenter
+    from fluent_plugin_detect_exceptions_spark.sources.transcripts import skewed_tail
+
     src = str(tmp_path / "t.parquet")
     out = str(tmp_path / "out3")
-    synth_transcripts(spark, 10, repeats=2).write.mode("overwrite").parquet(src)
+    # six conversations, so both buckets hold some: run_bucket cannot read
+    # the observed metrics of an empty bucket
+    skewed_tail(spark, 6, 400).write.mode("overwrite").parquet(src)
     monkeypatch.setattr(
         "pyspark.sql.SparkSession.Builder.getOrCreate", lambda self: spark
     )
     monkeypatch.setattr(type(spark), "stop", lambda self: None)
-
     calls = []
-    orig_prepass = jobmod.run_prepass
-
-    def counting_prepass(*a, **k):
-        calls.append(1)
-        return orig_prepass(*a, **k)
-
-    monkeypatch.setattr(jobmod, "run_prepass", counting_prepass)
+    real = segmenter.find_fallback_convs
+    monkeypatch.setattr(
+        segmenter, "find_fallback_convs", lambda *a: calls.append(1) or real(*a)
+    )
 
     argv = ["--input", src, "--output", out, "--buckets", "2",
-            "--chunk-size", "32", "--warmup", "8"]
+            "--chunk-size", "64", "--warmup", "32"]
     jobmod.main(argv)
-    assert calls == [1]
-    pre = json.load(open(f"{out}/_checkpoint/prepass.json"))
-    assert pre["data"]["fallback_convs"] is not None  # gate fired + discovery ran
-
-    # partial resume: drop bucket 1's manifest entry — the bucket reruns but
-    # the pre-pass is REPLAYED from the checkpoint, not recomputed
+    # partial resume: drop bucket 1's manifest entry — only it reruns
     lines = open(f"{out}/_checkpoint/manifest.jsonl").read().strip().splitlines()
+    assert [json.loads(ln)["reruns"] for ln in lines] == [0, 0]
     with open(f"{out}/_checkpoint/manifest.jsonl", "w") as f:
         for ln in lines:
             if json.loads(ln)["bucket"] != 1:
                 f.write(ln + "\n")
     jobmod.main(argv)
-    assert calls == [1]
+    assert calls == []
+    assert not os.path.exists(f"{out}/_checkpoint/prepass.json")
+    runs = [json.load(open(p)) for p in glob.glob(f"{out}/_checkpoint/*.json")]
+    assert [(r["n_fallback_convs"], r["reruns"]) for r in runs] == [(0, 0)] * 2
     routed = spark.read.parquet(f"{out}/routed")
     direct = detect_exceptions(
-        spark.read.parquet(src), PipelineConfig(chunk_size=32, warmup=8)
+        spark.read.parquet(src), PipelineConfig(chunk_size=64, warmup=32)
     )
     assert routed.count() == direct.count()
-
-    # a new input file invalidates the prepass fingerprint -> re-discovers;
-    # its conversations are new ones, so (conv, turn) stays unique
-    new_convs = synth_transcripts(spark, 2, repeats=1).withColumn(
-        "conv_id", F.concat(F.lit("new."), "conv_id")
-    )
-    new_convs.write.mode("append").parquet(src)
-    with open(f"{out}/_checkpoint/manifest.jsonl", "w"):
-        pass  # clear buckets so the run proceeds (input changed)
-    jobmod.main(argv)
-    assert calls == [1, 1]
+    assert routed.filter(~F.col("sync_ok")).count() == 0
 
 
 def test_job_with_stream_and_limits(spark, tmp_path, monkeypatch):

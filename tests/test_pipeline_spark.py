@@ -256,6 +256,16 @@ def test_field_learning(spark):
     assert spark_routed(df, cfg) == oracle_routed(group_rows(rows, PipelineConfig()), PipelineConfig())
 
 
+def _pure_trace_rows():
+    """One conversation of wall-to-wall Java traces: no warm-up of it holds
+    a synchronization point."""
+    return [
+        {"conv_id": "pure", "turn_idx": i, "role": "u", "text": t, "tool": "t",
+         "ts": BASE_EPOCH + i}
+        for i, t in enumerate(fx.lines(fx.JAVA_EXC) * 30)
+    ]
+
+
 def test_pure_trace_conv_falls_back_and_stays_exact(spark):
     # wall-to-wall Java traces, no plain lines: no sync point exists, the
     # pre-pass must route the conversation to whole-conv processing and the
@@ -265,12 +275,7 @@ def test_pure_trace_conv_falls_back_and_stays_exact(spark):
     )
     from fluent_plugin_detect_exceptions_spark.rules import compile_rules
 
-    lines = fx.lines(fx.JAVA_EXC) * 30
-    rows = [
-        {"conv_id": "pure", "turn_idx": i, "role": "u", "text": t, "tool": "t",
-         "ts": BASE_EPOCH + i}
-        for i, t in enumerate(lines)
-    ]
+    rows = _pure_trace_rows()
     df = spark.createDataFrame(rows).withColumn("ts", F.timestamp_seconds("ts"))
     cfg = PipelineConfig(chunk_size=32, warmup=16)
     fb = find_fallback_convs(df, cfg, compile_rules(cfg.languages), "text")
@@ -444,25 +449,66 @@ def _simple_plan(plan_df) -> str:
     return buf.getvalue()
 
 
+def _executed_plans(spark, action):
+    """Run ``action``; returns its result and, per SQL execution it started,
+    the (name, description) of every node of the executed plan, read from
+    Spark's SQL status store as ``perfbench/probes.plan_nodes`` reads it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def recent():
+        n = int(store.executionsCount())
+        return [e.executionId() for e in as_java(store.executionsList(max(0, n - 50), 50))]
+
+    bus.waitUntilEmpty()
+    before = max(recent(), default=-1)
+    out = action()
+    bus.waitUntilEmpty()
+    plans = [
+        [(n.name(), n.desc()) for n in as_java(store.planGraph(e).allNodes())]
+        for e in recent() if e > before
+    ]
+    return out, plans
+
+
+def _counts_query_plan(plans) -> str:
+    """The one executed plan holding the scan stage: the counts query."""
+    scans = [p for p in plans if any(name == "MapInArrow" for name, _ in p)]
+    assert len(scans) == 1, plans
+    return "\n".join(desc for _, desc in scans[0])
+
+
+def _assert_local_counts(counts) -> None:
+    """``detect_sink_counts`` returns its rows as a local relation with the
+    non-null ``sink string, n bigint`` schema."""
+    from fluent_plugin_detect_exceptions_spark.operators.route import COUNTS_SCHEMA
+
+    assert _simple_plan(counts).split("\n")[1].startswith("LocalTableScan"), _simple_plan(counts)
+    assert counts.schema == COUNTS_SCHEMA
+    assert [f.nullable for f in counts.schema] == [False, False]
+
+
 def test_fused_sink_counts_plan_elides_stitch_exchange(spark):
-    """VERDICT r2 item 5 / ADVICE r3: the counts-only plan must NOT contain
-    the segment-stitching exchange — no hash partitioning on seg_start_turn
-    and no SortMergeJoin/rejoin machinery.  Asserting the specific ABSENT
-    exchange (not an exact total-exchange count) so AQE re-planning or
-    explain-rendering changes across Spark versions can't flake the test."""
+    """VERDICT r2 item 5 / ADVICE r3: the counts query ``detect_sink_counts``
+    runs must NOT contain the segment-stitching exchange — no hash
+    partitioning on seg_start_turn and no SortMergeJoin/rejoin machinery —
+    while it does hold the tiny per-sink exchange.  Asserting the specific
+    ABSENT exchange (not an exact total-exchange count) so AQE re-planning
+    or rendering changes across Spark versions can't flake the test.  The
+    plan is the executed one: the returned DataFrame is a local relation."""
     from fluent_plugin_detect_exceptions_spark.operators.route import (
         detect_sink_counts,
     )
 
     df = synth_transcripts(spark, 10, 1)
-    plan = _simple_plan(detect_sink_counts(df, PipelineConfig()))
-    stitch = [
-        ln
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "seg_start_turn" in ln
-    ]
-    assert not stitch, plan
+    counts, plans = _executed_plans(spark, lambda: detect_sink_counts(df, PipelineConfig()))
+    plan = _counts_query_plan(plans)
+    exchanges = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    assert any("sink" in ln for ln in exchanges), plan
+    assert not [ln for ln in exchanges if "seg_start_turn" in ln], plan
     assert "SortMergeJoin" not in plan, plan
+    _assert_local_counts(counts)
 
 
 def test_unchunked_segment_has_no_chunk_columns(spark):
@@ -484,15 +530,16 @@ def test_unchunked_segment_has_no_chunk_columns(spark):
 
 def test_detect_with_counts_counts_leg_is_fast_path(spark):
     """VERDICT r3 item 6: detect_with_counts' counts leg uses the fused
-    fast path even though the slim rewrite is on — no seg_start_turn exchange, no
-    ride-table rejoin — while the routed leg still carries the full plan,
-    and the two legs agree."""
+    fast path even though the slim rewrite is on — the counts query it runs
+    at call time has no seg_start_turn exchange and no ride-table rejoin —
+    while the routed leg still carries the full plan, and the two legs
+    agree."""
     from fluent_plugin_detect_exceptions_spark.operators.route import sink_counts
 
     df = synth_transcripts(spark, 12, 1)
     cfg = PipelineConfig()
-    routed, counts = detect_with_counts(df, cfg)
-    cplan = _simple_plan(counts)
+    (routed, counts), plans = _executed_plans(spark, lambda: detect_with_counts(df, cfg))
+    cplan = _counts_query_plan(plans)
     stitch = [
         ln
         for ln in cplan.splitlines()
@@ -500,6 +547,8 @@ def test_detect_with_counts_counts_leg_is_fast_path(spark):
     ]
     assert not stitch, cplan
     assert "first_turn_idx" not in cplan, cplan  # no slim rejoin on counts
+    assert "Exchange hashpartitioning" in cplan, cplan
+    _assert_local_counts(counts)
     fast = {r["sink"]: r["n"] for r in counts.collect()}
     full = {r["sink"]: r["n"] for r in sink_counts(routed).collect()}
     assert fast == full
@@ -567,19 +616,11 @@ def test_turn_hole_defensive_flag_without_prepass(spark):
     assert len(cont) == 131 and all(t == "line %d\n" % ft for ft, t in cont)
 
 
-def test_sparse_stream_empty_zone_routes_to_fallback(spark):
-    """ADVICE r2 exact scenario: with a stream column active, a sparse
-    stream whose warm-up zone at a chunk boundary is empty (a single trace
-    interrupted by a >warmup turn hole) while another stream is dense.  The
-    pre-pass must detect the expected-but-empty zone PER STREAM and fall
-    back, producing the same single stitched trace as the unchunked run."""
-    from fluent_plugin_detect_exceptions_spark.operators.segmenter import (
-        find_fallback_convs,
-    )
-    from fluent_plugin_detect_exceptions_spark.rules import compile_rules
-
+def _sparse_stream_rows():
+    """Stream 'a' of conversation 'c' holds one Java trace interrupted by a
+    turn hole across the chunk boundary at 64; stream 'b' is dense."""
     trace = fx.lines(fx.JAVA_EXC)
-    rows = [
+    return [
         {"conv_id": "c", "turn_idx": 30 + i, "role": "u", "tool": "a",
          "text": t, "ts": BASE_EPOCH + 30 + i}
         for i, t in enumerate(trace[:3])
@@ -592,7 +633,21 @@ def test_sparse_stream_empty_zone_routes_to_fallback(spark):
          "text": "line %d\n" % i, "ts": BASE_EPOCH + i}
         for i in range(131)
     ]
-    df = spark.createDataFrame(rows).withColumn("ts", F.timestamp_seconds("ts"))
+
+
+def test_sparse_stream_empty_zone_routes_to_fallback(spark):
+    """ADVICE r2 exact scenario: with a stream column active, a sparse
+    stream whose warm-up zone at a chunk boundary is empty (a single trace
+    interrupted by a >warmup turn hole) while another stream is dense.  The
+    pre-pass must detect the expected-but-empty zone PER STREAM and fall
+    back, producing the same single stitched trace as the unchunked run."""
+    from fluent_plugin_detect_exceptions_spark.operators.segmenter import (
+        find_fallback_convs,
+    )
+    from fluent_plugin_detect_exceptions_spark.rules import compile_rules
+
+    trace = fx.lines(fx.JAVA_EXC)
+    df = spark.createDataFrame(_sparse_stream_rows()).withColumn("ts", F.timestamp_seconds("ts"))
     cfg = PipelineConfig(stream="tool", chunk_size=64, warmup=8)
     fb = find_fallback_convs(df, cfg, compile_rules(cfg.languages), "text")
     assert fb == ["c"]
@@ -601,6 +656,139 @@ def test_sparse_stream_empty_zone_routes_to_fallback(spark):
     # the interrupted trace coalesces into ONE record spanning the hole
     trace_recs = [r for r in got if r[5] and r[5].startswith(trace[0][:20])]
     assert len(trace_recs) == 1 and trace_recs[0][7] == 6  # n_lines
+
+
+def _nil_tail_rows():
+    """Java trace lines at turns 0-31, then two nil messages at 32-33: with
+    chunk_size=32 the nil rows are the only rows chunk 1 holds of its own,
+    and its warm-up (turns 16-31) has no synchronization point."""
+    lines = (fx.lines(fx.JAVA_EXC) * 6)[:32] + [None, None]
+    return [
+        {"conv_id": "niltail", "turn_idx": i, "role": "u", "text": t, "tool": "t",
+         "ts": BASE_EPOCH + i}
+        for i, t in enumerate(lines)
+    ]
+
+
+#: inputs whose chunk scans cannot all prove their entry state, with the
+#: config that chunks them
+UNSYNCED_INPUTS = {
+    "pure_trace": (_pure_trace_rows, dict(chunk_size=32, warmup=16)),
+    "turn_hole": (_hole_and_cont_rows, dict(chunk_size=64, warmup=8)),
+    "sparse_stream": (_sparse_stream_rows, dict(stream="tool", chunk_size=64, warmup=8)),
+    "nil_tail": (_nil_tail_rows, dict(chunk_size=32, warmup=16)),
+}
+
+
+def _count_calls(monkeypatch, module, name) -> list:
+    """Wrap ``module.name``; the returned list collects each call's result."""
+    results = []
+    real = getattr(module, name)
+
+    def wrapped(*a):
+        results.append(real(*a))
+        return results[-1]
+
+    monkeypatch.setattr(module, name, wrapped)
+    return results
+
+
+def _record_rows(routed) -> list[tuple]:
+    cols = ["conv_id", "tool", "first_turn_idx", "text", "n_lines", "lang", "sink", "sync_ok"]
+    return sorted(tuple(r) for r in routed.select(*cols).collect())
+
+
+def _sink_map(counts) -> dict:
+    return {r["sink"]: r["n"] for r in counts.collect()}
+
+
+@pytest.mark.parametrize("name", sorted(UNSYNCED_INPUTS))
+def test_unsynced_chunks_are_repaired(spark, tmp_path, monkeypatch, name):
+    """The eager consumers chunk on the max-turn gate alone, so
+    ``run_prepass`` lists no fallback conversation and the settled plan
+    carries a stale, empty ``known_fallback_convs``.  Their chunk scans
+    verify themselves: ``run_bucket`` and ``detect_sink_counts`` each run
+    the pre-pass once, re-run once, and return exactly the
+    whole-conversation result, with no ``sync_ok=False`` record."""
+    from fluent_plugin_detect_exceptions_spark import job
+    from fluent_plugin_detect_exceptions_spark.operators import segmenter
+    from fluent_plugin_detect_exceptions_spark.operators.route import (
+        detect_sink_counts,
+        sink_counts,
+    )
+    from fluent_plugin_detect_exceptions_spark.rules import compile_rules
+
+    rows, kw = UNSYNCED_INPUTS[name]
+    df = spark.createDataFrame(rows()).withColumn("ts", F.timestamp_seconds("ts"))
+    cfg = PipelineConfig(**kw)
+    rules = compile_rules(cfg.languages)
+    assert job.run_prepass(df, cfg, rules) == {"fallback_convs": []}
+    stale = segmenter.resolve_chunk_plan(cfg, [])
+    assert stale == PipelineConfig(**kw, assume_long_convs=True, known_fallback_convs=())
+    whole = detect_exceptions(df, PipelineConfig(**dict(kw, chunk_size=0)))
+    want = _record_rows(whole)
+    assert all(r[-1] for r in want)
+
+    finds = _count_calls(monkeypatch, segmenter, "find_fallback_convs")
+    verified = _count_calls(monkeypatch, segmenter, "run_verified")
+    info = job.run_bucket(spark, df, stale, rules, str(tmp_path), 0)
+    assert (len(finds), info["reruns"], info["fallback_convs"]) == (1, 1, 1)
+    assert _record_rows(spark.read.parquet(f"{tmp_path}/routed/bucket=0")) == want
+
+    counts = detect_sink_counts(df, stale)
+    assert (len(finds), [v[2] for v in verified]) == (2, [1])
+    assert _sink_map(counts) == _sink_map(sink_counts(whole))
+
+
+def test_synced_chunks_skip_the_prepass(spark, tmp_path, monkeypatch):
+    """Input whose chunk scans all synchronize stays chunked, and neither
+    eager consumer runs the pre-pass or re-runs."""
+    from fluent_plugin_detect_exceptions_spark import job
+    from fluent_plugin_detect_exceptions_spark.operators import segmenter
+    from fluent_plugin_detect_exceptions_spark.operators.route import (
+        detect_sink_counts,
+        sink_counts,
+    )
+    from fluent_plugin_detect_exceptions_spark.rules import compile_rules
+    from fluent_plugin_detect_exceptions_spark.sources.transcripts import skewed_tail
+
+    df = skewed_tail(spark, 2, 400)
+    cfg = PipelineConfig(chunk_size=64, warmup=32)
+    rules = compile_rules(cfg.languages)
+    finds = _count_calls(monkeypatch, segmenter, "find_fallback_convs")
+    verified = _count_calls(monkeypatch, segmenter, "run_verified")
+    fb = job.run_prepass(df, cfg, rules)["fallback_convs"]
+    info = job.run_bucket(spark, df, segmenter.resolve_chunk_plan(cfg, fb), rules,
+                          str(tmp_path), 0)
+    counts = detect_sink_counts(df, cfg)
+    assert (len(finds), info["reruns"], [v[1:] for v in verified]) == (0, 0, [([], 0)])
+    whole = detect_exceptions(df, PipelineConfig(chunk_size=0))
+    assert _record_rows(spark.read.parquet(f"{tmp_path}/routed/bucket=0")) == _record_rows(whole)
+    assert _sink_map(counts) == _sink_map(sink_counts(whole))
+
+
+def test_repair_that_adds_nothing_keeps_the_flagged_result(spark, monkeypatch):
+    """Under a violated ``assume_dense_turns`` the pre-pass skips its
+    occupancy half, so the repair of the turn-hole input finds no
+    conversation to add: the counts consumer keeps its flagged result,
+    equal to the lazy path's, without re-running."""
+    from fluent_plugin_detect_exceptions_spark.operators import segmenter
+    from fluent_plugin_detect_exceptions_spark.operators.route import (
+        detect_sink_counts,
+        sink_counts,
+    )
+
+    df = spark.createDataFrame(_hole_and_cont_rows()).withColumn(
+        "ts", F.timestamp_seconds("ts")
+    )
+    cfg = PipelineConfig(chunk_size=64, warmup=8, assume_dense_turns=True)
+    flagged = detect_exceptions(df, cfg)
+    assert flagged.filter(~F.col("sync_ok")).count() > 0
+    finds = _count_calls(monkeypatch, segmenter, "find_fallback_convs")
+    verified = _count_calls(monkeypatch, segmenter, "run_verified")
+    counts = detect_sink_counts(df, cfg)
+    assert (finds, [v[1:] for v in verified]) == ([[]], [([], 0)])
+    assert _sink_map(counts) == _sink_map(sink_counts(flagged))
 
 
 def test_sparse_turn_idx(spark):
@@ -641,9 +829,10 @@ def test_duplicate_order_key_raises(spark):
     cfg = PipelineConfig()
     assert sum(r["n_lines"] for r in detect_exceptions(df, cfg).collect()) == df.count()
     dup = with_duplicate_row(df)
-    for out in (detect_exceptions(dup, cfg), detect_sink_counts(dup, cfg)):
+    # detect_sink_counts is an action: it raises at call time
+    for run in (detect_exceptions, detect_sink_counts):
         with pytest.raises(Exception, match=DUPLICATE_KEY):
-            out.collect()
+            run(dup, cfg).collect()
 
 
 def test_detect_with_counts_settles_chunk_plan_once(spark, monkeypatch):

@@ -390,6 +390,47 @@ def test_state_func_rejects_duplicate_turn():
         list(func(("c",), [pdf], _FakeState()))
 
 
+def _java_trace_batches(*turn_lists):
+    """One Java trace's lines, one micro-batch per list of turns."""
+    import pandas as pd
+
+    from fluent_plugin_detect_exceptions_spark import fixtures as fx
+
+    lines = fx.lines(fx.JAVA_EXC)
+    return [
+        pd.DataFrame(
+            {"conv_id": "c", "turn_idx": turns, "role": "u",
+             "text": [lines[t] for t in turns], "tool": "t",
+             "ts": pd.Timestamp(1_700_000_000, unit="s")}
+        )
+        for turns in turn_lists
+    ]
+
+
+def test_state_func_rejects_turn_replayed_across_batches():
+    """A turn replayed in a later micro-batch of the same group (an
+    at-least-once source re-delivering a row) raises, naming the key and the
+    turn, instead of merging into the carried segment; the same trace
+    delivered without the replay still emits its one 6-line record."""
+    func = make_state_func(PipelineConfig(), SCHEMA)
+    first, replay = _java_trace_batches([0, 1, 2], [2, 3, 4, 5])
+    state = _FakeState()
+    assert _state_func_records(func, ("c",), [first], state) == []
+    with pytest.raises(ValueError, match=r"\('c',\) has turn 2 at or below turn 2"):
+        _state_func_records(func, ("c",), [replay], state)
+
+    state = _FakeState()
+    got = _state_func_records(func, ("c",), _java_trace_batches([0, 1, 2], [3, 4, 5]), state)
+    assert got == []  # the trace is still open
+    state.hasTimedOut = True
+    import pandas as pd
+
+    from fluent_plugin_detect_exceptions_spark import fixtures as fx
+
+    flushed = _state_func_records(func, ("c",), [pd.DataFrame()], state)
+    assert [(r[0], r[2], r[4]) for r in flushed] == [(0, fx.JAVA_EXC, 6)]
+
+
 def _state_func_records(func, key, batches, state) -> list[tuple]:
     """Drive ``func`` over one group's micro-batches; the emitted partials,
     each a whole record, as (first_turn_idx, role, text, lang, n_lines)."""
