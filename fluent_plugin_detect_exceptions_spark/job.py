@@ -35,7 +35,7 @@ from pyspark.sql import Observation, SparkSession, functions as F
 
 from .checkpoint import BucketManifest, bucket_of, config_fingerprint
 from .config import PipelineConfig
-from .metrics import input_lineage, write_run_metadata
+from .metrics import input_lineage, observed, write_run_metadata
 from .operators.segmenter import chunk_gate, resolve_chunk_plan, run_verified, segment
 from .plans.pipeline import routed_records, slim_split
 from .rules import FAMILIES, compile_rules
@@ -100,7 +100,8 @@ def run_prepass(src, cfg, rules) -> dict:
     return {"fallback_convs": chunk_gate(src, cfg)}
 
 
-def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
+def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int,
+               prepass_src=None) -> dict:
     """One source scan per bucket: segmentation metrics and per-sink counts
     ride the routed write as observed metrics (CollectMetricsExec — computed
     in-plan, exactly-once even under task retries), instead of re-running the
@@ -111,10 +112,13 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
 
     The write runs under ``segmenter.run_verified``: its observed
     ``parts_unsynced`` is the check, and only when a chunk failed to sync
-    does the fallback pre-pass run and the write repeat (overwriting
-    ``routed/bucket=N``) on the repaired plan.  The result and the bucket's
-    metrics row carry ``fallback_convs`` (the length of the list the
-    records were computed with) and ``reruns`` (0 or 1)."""
+    does the fallback pre-pass run, over ``prepass_src`` (default ``df``),
+    and the write repeat (overwriting ``routed/bucket=N``) on the repaired
+    plan.  The result and the bucket's metrics row carry ``fallback_convs``
+    (the length of the list the records were computed with) and ``reruns``
+    (0 or 1); the result also carries ``cfg``, the config with that list
+    settled, which ``main`` passes on to the remaining buckets.  A bucket
+    with no rows writes no record and reads every metric as 0."""
     t0 = time.perf_counter()
     msg_field = cfg.resolve_message_field(df.columns)
 
@@ -134,8 +138,8 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
         routed.write.mode("overwrite").partitionBy("sink").parquet(
             f"{out_dir}/routed/bucket={bucket}"
         )
-        metrics = {k: int(v) for k, v in seg_obs.get.items()}
-        return (sink_obs.get, metrics), metrics["parts_unsynced"]
+        metrics = observed(seg_obs, ("rows_emitted", "segments_started", "parts_unsynced"))
+        return (observed(sink_obs, SINKS), metrics), metrics["parts_unsynced"]
 
     # lineage: separate narrow pass (needs per-input-file grouping, which an
     # observation cannot express); column-pruned to the conv and order
@@ -148,7 +152,9 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
     with ThreadPoolExecutor(1) as pool:
         lineage_done = pool.submit(write_lineage)
         try:
-            (sinks, metrics), fallback, reruns = run_verified(df, cfg, rules, msg_field, write)
+            (sinks, metrics), fallback, reruns = run_verified(
+                df, cfg, rules, msg_field, write, prepass_src
+            )
         finally:
             lineage_done.result()
     counts = {s: int(n) for s, n in sinks.items() if n}
@@ -167,6 +173,7 @@ def run_bucket(spark, df, cfg, rules, out_dir: str, bucket: int) -> dict:
         "metrics": metrics,
         "fallback_convs": n_fallback,
         "reruns": reruns,
+        "cfg": resolve_chunk_plan(cfg, fallback),
         "seconds": round(time.perf_counter() - t0, 3),
     }
 
@@ -194,31 +201,37 @@ def main(argv=None) -> None:
 
     # plan-time work ONCE per run, not once per bucket: the max-turn gate is
     # a global property of the input.  The fallback pre-pass is not run up
-    # front: each bucket's write verifies its chunk scans and repairs itself
-    # (run_bucket), so input that syncs never pays for it.
+    # front: each bucket's write verifies its chunk scans, so input that
+    # syncs never pays for it.  The first bucket that fails to sync repairs
+    # itself with a pre-pass over the whole input, and the remaining buckets
+    # chunk with that list, so one run pays at most one failed bucket write
+    # and one pre-pass; a resumed run pays them again, once.
     cfg_run = resolve_chunk_plan(cfg, run_prepass(src, cfg, rules)["fallback_convs"])
 
-    src = src.withColumn("__bucket", bucket_of(cfg.conv_col, args.buckets))
+    whole, src = src, src.withColumn("__bucket", bucket_of(cfg.conv_col, args.buckets))
 
     totals: dict[str, int] = {}
-    n_fallback = n_reruns = 0
     for b in range(args.buckets):
         if b in done:
             continue
         info = run_bucket(
             spark, src.filter(F.col("__bucket") == b).drop("__bucket"),
-            cfg_run, rules, args.output, b,
+            cfg_run, rules, args.output, b, prepass_src=whole,
         )
+        cfg_run = info.pop("cfg")
         manifest.mark_done(b, dict(info, run_id=run_id), fingerprint=fp)
         for k, v in info["sink_counts"].items():
             totals[k] = totals.get(k, 0) + v
-        n_fallback += info["fallback_convs"]
-        n_reruns += info["reruns"]
 
+    # over every completed bucket, also those of an earlier invocation: a
+    # repair's list covers the whole input, so the longest list any bucket
+    # was computed with is the input's fallback count
+    entries = manifest.completed(fingerprint=fp).values()
     write_run_metadata(
         manifest.path, run_id,
         {"buckets": args.buckets, "resumed_from": len(done), "sink_totals": totals,
-         "n_fallback_convs": n_fallback, "reruns": n_reruns},
+         "n_fallback_convs": max((e.get("fallback_convs", 0) for e in entries), default=0),
+         "reruns": sum(e.get("reruns", 0) for e in entries)},
     )
     print({"run_id": run_id, "completed_buckets": args.buckets, "sink_totals": totals})
     spark.stop()

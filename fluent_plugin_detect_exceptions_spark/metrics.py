@@ -23,7 +23,7 @@ from __future__ import annotations
 import json
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def input_lineage(df: DataFrame, conv_col: str, order_col: str) -> DataFrame:
@@ -39,6 +39,20 @@ def input_lineage(df: DataFrame, conv_col: str, order_col: str) -> DataFrame:
             F.approx_count_distinct(conv_col).alias("approx_convs"),
         )
     )
+
+
+def observed(obs: Observation, names) -> dict[str, int]:
+    """The metrics ``names`` that ``obs`` collected, each as an int (a sum
+    over no rows reads 0), after the observed action has run.  When the
+    optimizer prunes the observed plan as empty (a filter folded over local
+    rows), Spark reports an empty row, which ``Observation.get`` cannot
+    convert; every metric then reads 0, as it would over an empty scan."""
+    # PySpark exposes no emptiness check: read the JVM row that
+    # Observation.get converts (the action has run, so this does not block)
+    if obs._jo is not None and obs._jo.getRow().length() == 0:
+        return dict.fromkeys(names, 0)
+    got = obs.get
+    return {k: int(got[k] or 0) for k in names}
 
 
 def write_run_metadata(path: str, run_id: str, payload: dict) -> None:

@@ -99,7 +99,7 @@ def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     ``segmenter.run_verified`` (the max-turn gate, the counts query, and the
     fallback pre-pass plus one re-run only if a chunk failed to sync) and
     returns the rows as a local ``sink string, n bigint`` DataFrame, whose
-    ``collect()`` starts no job.
+    ``collect()`` starts no job.  Input with no rows returns no row.
 
     Input lacking a column the scan needs is refused before any job
     (``validate_input``), as on every other entry point.  A ``cfg`` already
@@ -107,6 +107,7 @@ def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    from ..metrics import observed
     from ..rules import compile_rules
     from .segmenter import run_verified, validate_input
 
@@ -117,7 +118,7 @@ def detect_sink_counts(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     def count(settled):
         obs = Observation("counts_unsynced")
         rows = counts_query(df, settled, obs).collect()
-        return rows, obs.get["unsynced"]
+        return rows, observed(obs, ("unsynced",))["unsynced"]
 
     rows, _, _ = run_verified(df, cfg, rules, msg_field, count)
     # an Arrow table becomes a LocalTableScan; a Python list would

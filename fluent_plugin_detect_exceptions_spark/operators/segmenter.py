@@ -535,7 +535,7 @@ def resolve_chunk_plan(cfg: PipelineConfig, fallback: list | None) -> PipelineCo
 
 
 def run_verified(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
-                 msg_field: str | None, run):
+                 msg_field: str | None, run, prepass_df: DataFrame | None = None):
     """Chunk, check, repair: the chunk plan of an eager consumer (one that
     runs its action here, such as the batch job's routed write or the
     counts query).
@@ -550,9 +550,11 @@ def run_verified(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
     conversation whole — no synchronization point in the warm-up, or an
     occupied chunk whose warm-up zone is empty.  So ``unsynced == 0`` proves
     every chunk's entry state and the result equals the whole-conversation
-    scan.  Otherwise the pre-pass ``find_fallback_convs`` runs, its list is
-    unioned with the known one, and ``run`` repeats once on that plan —
-    the one ``chunk_plan`` would have chosen.  A repair whose list adds no
+    scan.  Otherwise the pre-pass ``find_fallback_convs`` runs over
+    ``prepass_df`` (default ``df``), its list is unioned with the known one,
+    and ``run`` repeats once on that plan — the one ``chunk_plan`` would have
+    chosen.  The batch job passes its whole input as ``prepass_df``, so one
+    repair finds the fallback conversations of every bucket.  A repair whose list adds no
     conversation cannot change the result and is skipped; that, like a
     second non-zero count, happens only when ``assume_dense_turns`` is
     violated (or there is no message field), and the result stays flagged.
@@ -564,7 +566,9 @@ def run_verified(df: DataFrame, cfg: PipelineConfig, rules: CompiledRules,
     result, unsynced = run(settled)
     if not unsynced:
         return result, plan, 0
-    found = find_fallback_convs(df, settled, rules, msg_field)
+    found = find_fallback_convs(
+        df if prepass_df is None else prepass_df, settled, rules, msg_field
+    )
     repaired = list(dict.fromkeys([*plan, *found]))
     if len(repaired) == len(plan):
         return result, plan, 0

@@ -98,8 +98,7 @@ def test_resume_over_synced_input_runs_no_prepass(spark, tmp_path, monkeypatch):
 
     src = str(tmp_path / "t.parquet")
     out = str(tmp_path / "out3")
-    # six conversations, so both buckets hold some: run_bucket cannot read
-    # the observed metrics of an empty bucket
+    # six conversations, so both buckets hold some
     skewed_tail(spark, 6, 400).write.mode("overwrite").parquet(src)
     monkeypatch.setattr(
         "pyspark.sql.SparkSession.Builder.getOrCreate", lambda self: spark
@@ -132,6 +131,79 @@ def test_resume_over_synced_input_runs_no_prepass(spark, tmp_path, monkeypatch):
     )
     assert routed.count() == direct.count()
     assert routed.filter(~F.col("sync_ok")).count() == 0
+
+
+def test_one_repair_covers_every_bucket(spark, tmp_path, monkeypatch):
+    """Wall-to-wall-trace conversations in every bucket fail to sync.  The
+    first bucket to fail repairs itself with a pre-pass over the whole
+    input and later buckets chunk with its list, so a run makes one
+    pre-pass call and one re-run.  A resume starts without the list and
+    repairs once more.  The run metadata counts over every completed bucket,
+    earlier invocations included, and the routed records equal the
+    whole-conversation scan."""
+    from fluent_plugin_detect_exceptions_spark.operators import segmenter
+
+    from .test_pipeline_spark import _count_calls, _pure_trace_rows, _record_rows
+
+    # crc32 buckets of 3: pure.0/pure.1 -> 0, pure.3 -> 1, the rest -> 2
+    rows = [dict(r, conv_id=f"pure.{c}") for c in range(6) for r in _pure_trace_rows()]
+    src = str(tmp_path / "pure.parquet")
+    out = str(tmp_path / "out_pure")
+    (spark.createDataFrame(rows).withColumn("ts", F.timestamp_seconds("ts"))
+     .write.mode("overwrite").parquet(src))
+    monkeypatch.setattr(
+        "pyspark.sql.SparkSession.Builder.getOrCreate", lambda self: spark
+    )
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    finds = _count_calls(monkeypatch, segmenter, "find_fallback_convs")
+
+    argv = ["--input", src, "--output", out, "--buckets", "3",
+            "--chunk-size", "32", "--warmup", "16"]
+    jobmod.main(argv)
+    entries = {e["bucket"]: e for e in BucketManifest(f"{out}/_checkpoint").completed().values()}
+    assert [(entries[b]["reruns"], entries[b]["fallback_convs"]) for b in range(3)] == [
+        (1, 6), (0, 6), (0, 6)
+    ]
+    assert [len(f) for f in finds] == [6]
+    # resume without bucket 2: it fails to sync again and repairs itself
+    lines = open(f"{out}/_checkpoint/manifest.jsonl").read().strip().splitlines()
+    with open(f"{out}/_checkpoint/manifest.jsonl", "w") as f:
+        f.writelines(ln + "\n" for ln in lines if json.loads(ln)["bucket"] != 2)
+    jobmod.main(argv)
+    assert [len(f) for f in finds] == [6, 6]
+    runs = sorted(
+        (json.load(open(p)) for p in glob.glob(f"{out}/_checkpoint/*.json")),
+        key=lambda r: r["resumed_from"],
+    )
+    assert [(r["n_fallback_convs"], r["reruns"]) for r in runs] == [(6, 1), (6, 2)]
+    whole = detect_exceptions(spark.read.parquet(src), PipelineConfig(chunk_size=0))
+    got = _record_rows(spark.read.parquet(f"{out}/routed"))
+    assert got == _record_rows(whole) and all(r[-1] for r in got)
+
+
+def test_job_with_an_empty_bucket(spark, tmp_path, monkeypatch):
+    """A bucket no conversation hashes to (all four skew conversations land
+    in bucket 1 of 2) is written as empty, with zero metrics, and the run
+    completes."""
+    from fluent_plugin_detect_exceptions_spark.sources.transcripts import skewed_tail
+
+    src = str(tmp_path / "skew4.parquet")
+    out = str(tmp_path / "out_empty")
+    skewed_tail(spark, 4, 400).write.mode("overwrite").parquet(src)
+    monkeypatch.setattr(
+        "pyspark.sql.SparkSession.Builder.getOrCreate", lambda self: spark
+    )
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    jobmod.main(["--input", src, "--output", out, "--buckets", "2",
+                 "--chunk-size", "64", "--warmup", "32"])
+    done = BucketManifest(f"{out}/_checkpoint").completed()
+    assert sorted(done) == [0, 1]
+    assert (done[0]["rows_out"], done[0]["sink_counts"]) == (0, {})
+    assert set(done[0]["metrics"].values()) == {0}
+    direct = detect_exceptions(
+        spark.read.parquet(src), PipelineConfig(chunk_size=64, warmup=32)
+    )
+    assert spark.read.parquet(f"{out}/routed").count() == direct.count() > 0
 
 
 def test_job_with_stream_and_limits(spark, tmp_path, monkeypatch):

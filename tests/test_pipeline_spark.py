@@ -767,6 +767,27 @@ def test_synced_chunks_skip_the_prepass(spark, tmp_path, monkeypatch):
     assert _sink_map(counts) == _sink_map(sink_counts(whole))
 
 
+@pytest.mark.parametrize("assume_long", [False, True])
+def test_eager_consumers_on_input_without_rows(spark, tmp_path, assume_long):
+    """Input with no rows, whose observed plan the optimizer prunes as
+    empty: the counts consumers return no row and ``run_bucket`` writes no
+    record and reads every metric as 0, whether the gate turns chunking
+    off or ``assume_long_convs`` keeps it on."""
+    from fluent_plugin_detect_exceptions_spark import job
+    from fluent_plugin_detect_exceptions_spark.operators.route import detect_sink_counts
+    from fluent_plugin_detect_exceptions_spark.rules import compile_rules
+    from fluent_plugin_detect_exceptions_spark.sources.transcripts import skewed_tail
+
+    df = skewed_tail(spark, 2, 400).filter(F.lit(False))
+    cfg = PipelineConfig(chunk_size=64, warmup=32, assume_long_convs=assume_long)
+    counts = detect_sink_counts(df, cfg)
+    _assert_local_counts(counts)
+    assert counts.collect() == []
+    assert [x.collect() for x in detect_with_counts(df, cfg)] == [[], []]
+    info = job.run_bucket(spark, df, cfg, compile_rules(cfg.languages), str(tmp_path), 0)
+    assert (info["rows_out"], info["reruns"], set(info["metrics"].values())) == (0, 0, {0})
+
+
 def test_repair_that_adds_nothing_keeps_the_flagged_result(spark, monkeypatch):
     """Under a violated ``assume_dense_turns`` the pre-pass skips its
     occupancy half, so the repair of the turn-hole input finds no
